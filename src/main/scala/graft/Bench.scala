@@ -1,6 +1,36 @@
 package graft
 
 object Bench {
+  /** One query's sweep record: as-run rep times (NOT just the median —
+    * the spread is what separates "this query got slower" from "the
+    * host hiccupped during one rep") plus the sweep-relative start
+    * offset, so a contended WINDOW shows up as inflation clustered in
+    * time across alphabetically-adjacent queries rather than as an
+    * unfalsifiable per-query verdict. A crashed rep reads -1, the
+    * median of a query with any crashed rep reads -1, and `error`
+    * names the first crash's exception class.
+    */
+  private[graft] final case class QRec(name: String, median: Double,
+                                       reps: Seq[Double], tOffset: Double,
+                                       error: Option[String] = None)
+
+  /** Headline sums over the per-query medians, and the failed queries
+    * (name → exception class). */
+  private[graft] final case class Totals(serving: Double, all: Double,
+                                         diag: Double,
+                                         failed: Seq[(String, String)])
+
+  /** A failed query (median -1) is left out of every sum and listed in
+    * `failed` instead: summing its -1 sentinel would let a crash LOWER
+    * the headline. */
+  private[graft] def totals(recs: Seq[QRec], isDiag: String => Boolean): Totals = {
+    val (failed, ok) = recs.partition(_.median < 0)
+    val (diag, serving) = ok.partition(r => isDiag(r.name))
+    Totals(serving.map(_.median).sum, ok.map(_.median).sum,
+      diag.map(_.median).sum,
+      failed.map(r => r.name -> r.error.getOrElse("unknown")))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Session.harnessBuilder: tune (AQE + coalesce + skew-join + UTC +
@@ -41,8 +71,8 @@ object Bench {
     // 119 queries the block manager fills up and late-alphabet heavy
     // queries pay spill/GC pressure that is HARNESS debt, not query
     // cost (graph_triangles measured 21.2 s inside the full sweep vs
-    // 7.5 s solo before this). Session.scrubBlocks (shared with the
-    // graft.tools mains) drops leftovers + forces a driver GC after
+    // 7.5 s solo before this). Session.scrubBlocks (shared with
+    // tools.Probe) drops leftovers + forces a driver GC after
     // every invocation, outside the timed window — see its doc for the
     // shuffle-file half of the story.
     def clearLeftoverBlocks(): Unit = Session.scrubBlocks(spark)
@@ -87,22 +117,16 @@ object Bench {
       }.getOrElse(-1.0)
     val sweepStart = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - sweepStart) / 1e9
-    // Per-query record: as-run rep times (NOT just the median — the
-    // spread is what separates "this query got slower" from "the host
-    // hiccupped during one rep") plus the sweep-relative start offset,
-    // so a contended WINDOW shows up as inflation clustered in time
-    // across alphabetically-adjacent queries rather than as an
-    // unfalsifiable per-query verdict.
-    case class QRec(name: String, median: Double, reps: Seq[Double],
-                    tOffset: Double)
     def timeQuery(name: String,
                   fn: (org.apache.spark.sql.SparkSession, String)
                     => org.apache.spark.sql.DataFrame): QRec = {
       val t = elapsed()
+      var error = Option.empty[String]
       val reps = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+                 catch { case e: Throwable =>
+                   error = error.orElse(Some(e.getClass.getName)); false }
         // a crash must read as a failure (-1), never as a fast timing
         val dt = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
         clearLeftoverBlocks() // outside the timed window
@@ -111,7 +135,7 @@ object Bench {
       val med =
         if (reps.exists(_.isNaN)) -1.0 else reps.sorted.apply(1)
       QRec(name, med,
-        reps.map(r => if (r.isNaN) -1.0 else r), t)
+        reps.map(r => if (r.isNaN) -1.0 else r), t, error)
     }
     // 1-minute load average at each calib station: calib measures what
     // contention COSTS this workload, loadavg shows WHO was there — a
@@ -171,7 +195,7 @@ object Bench {
       rerunByName.get(r.name) match {
         case Some(rr) if rr.median >= 0 &&
             (r.median < 0 || rr.median < r.median) =>
-          r.copy(median = rr.median)
+          r.copy(median = rr.median, error = None)
         case _ => r
       }
     }
@@ -190,9 +214,11 @@ object Bench {
     def toJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-    val (diagResults, servingResults) = results.partition(r => diag(r._1))
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val servingTotal = servingResults.map(_._2).sum
+    val servingResults = results.filterNot(r => diag(r._1))
+    val sums = totals(recs, diag)
+    val failedJson = sums.failed
+      .map { case (n, e) => "\"" + n + "\":\"" + e + "\"" }
+      .mkString("{", ",", "}")
     val calibsJson = calibs.map(fmt).mkString("[", ",", "]")
     val loadsJson = loads.map(fmt).mkString("[", ",", "]")
     // self-diagnosis detail (file artifact only — too wide for the log
@@ -211,7 +237,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val hotJson = hotStations.mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":${fmt(servingTotal)},"unit":"sec","calib":${fmt(calib)},"calibs":$calibsJson,"calib_rerun":${fmt(calibRerun)},"hot_stations":$hotJson,"loads":$loadsJson,"queries":${toJson(results)},"sf":"$sfDir","readjudicated":$readjJson,"detail":$detailJson}"""
+      s"""{"metric":"total","value":${fmt(sums.serving)},"unit":"sec","calib":${fmt(calib)},"calibs":$calibsJson,"calib_rerun":${fmt(calibRerun)},"hot_stations":$hotJson,"loads":$loadsJson,"queries":${toJson(results)},"sf":"$sfDir","failed_n":${sums.failed.size},"failed":$failedJson,"readjudicated":$readjJson,"detail":$detailJson}"""
     // lossless artifact: the driver scrapes the log tail, which has
     // truncated the (multi-KB, 80-query) JSON line before — persist the
     // full record to a file too, so the bench result never depends on
@@ -228,10 +254,12 @@ object Bench {
     // same schema (metric/value/unit/queries/sf), but `queries` carries
     // only the slowest entries that fit a ~1.5 kB budget; the full
     // per-query map lives in the file above and in the longer line.
+    // Failed queries are named in `failed` (which spends budget first),
+    // not ranked among the slowest.
     val budget = 1500
-    val slowest = servingResults.sortBy(-_._2)
+    val slowest = servingResults.filter(_._2 >= 0).sortBy(-_._2)
     var acc = Vector.empty[(String, Double)]
-    var len = 0
+    var len = failedJson.length
     for (r <- slowest if len < budget - 200) {
       acc :+= r; len += r._1.length + 12
     }
@@ -241,7 +269,7 @@ object Bench {
     val readjNames = toRerun.map(r => "\"" + r.name + "\"")
       .mkString("[", ",", "]")
     val summary =
-      s"""{"metric":"total","value":${fmt(servingTotal)},"unit":"sec","calib":${fmt(calib)},"calibs":$calibsJson,"calib_rerun":${fmt(calibRerun)},"hot_stations":$hotJson,"readjudicated_n":${toRerun.size},"readjudicated_names":$readjNames,"loads":$loadsJson,"queries":${toJson(acc.sortBy(_._1))},"sf":"$sfDir","n":${results.size},"serving_n":${servingResults.size},"all_s":${fmt(total)},"diag_s":${fmt(diagResults.map(_._2).sum)},"queries_truncated_to_slowest":${acc.size},"full":"${outPath}"}"""
+      s"""{"metric":"total","value":${fmt(sums.serving)},"unit":"sec","calib":${fmt(calib)},"calibs":$calibsJson,"calib_rerun":${fmt(calibRerun)},"hot_stations":$hotJson,"readjudicated_n":${toRerun.size},"readjudicated_names":$readjNames,"loads":$loadsJson,"queries":${toJson(acc.sortBy(_._1))},"sf":"$sfDir","n":${results.size},"serving_n":${servingResults.size},"all_s":${fmt(sums.all)},"diag_s":${fmt(sums.diag)},"failed_n":${sums.failed.size},"failed":$failedJson,"queries_truncated_to_slowest":${acc.size},"full":"${outPath}"}"""
     println(summary)
     System.out.flush()
   }

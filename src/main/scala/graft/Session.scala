@@ -70,11 +70,11 @@ object Session {
     tune(master.fold(b)(b.master), parallelism)
   }
 
-  /** Measurement-harness builder shared by Bench and the graft.tools
-    * mains: [[tune]]d `local[SPARK_GRAFT_CPUS]` session, UI off, plus
-    * `SPARK_GRAFT_CONF` ("k=v;k=v") overrides. Every tool building its
-    * session here measures the SAME configuration surface as Bench —
-    * an LshProbe/TriProbe anchor taken under a conf override (e.g.
+  /** Measurement-harness builder shared by Bench and `tools.Probe`:
+    * [[tune]]d `local[SPARK_GRAFT_CPUS]` session, UI off, plus
+    * `SPARK_GRAFT_CONF` ("k=v;k=v") overrides. A Probe measurement
+    * builds its session here, so it sees the SAME configuration surface
+    * as Bench — an anchor taken under a conf override (e.g.
     * io.compression.codec=zstd at big SF) stays reproducible and
     * comparable to the bench it corroborates.
     */
@@ -90,10 +90,10 @@ object Session {
     b
   }
 
-  /** Inter-measurement scratch hygiene, shared by Bench/TimeQuery/
-    * LshProbe/TriProbe (one copy — the pre-round-11 Bench/TimeQuery
-    * divergence showed hand-ported copies drift): drop leftover
-    * persisted RDDs (localCheckpoint blocks nothing unpersists), then
+  /** Inter-measurement scratch hygiene, shared by Bench and
+    * `tools.Probe` (one copy — before round 11 Bench and a probe each
+    * kept their own, and the copies drifted): drop leftover persisted
+    * RDDs (localCheckpoint blocks nothing unpersists), then
     * force a driver GC so the ContextCleaner notices dead
     * ShuffleDependencies and reaps their shuffle files — with a large
     * driver heap that can otherwise be NEVER within one sweep, and the

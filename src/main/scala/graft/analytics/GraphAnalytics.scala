@@ -232,9 +232,9 @@ object GraphAnalytics {
     // inherited it: the explode, the exchange WRITE of the
     // array-carrying probe rows (Σ out² elements, the plan's widest
     // stream), and the per-edge intersects in the local-read join
-    // stage all ran near-serial (TriBreakdown: probe ≈ 3.6 s of the
-    // 7.6 s query; 8-core/32-core ratio 0.56 — the suite's worst
-    // anti-scaler). One narrow n-row round-robin exchange to the
+    // stage all ran near-serial (8-core/32-core ratio 0.56 — the
+    // suite's worst anti-scaler; OPTIMIZATION_r18.md "graph_triangles",
+    // step 2). One narrow n-row round-robin exchange to the
     // session's parallelism before the explode makes all of it P-way.
     // repartition(N) is AQE-stable (user-specified counts are not
     // coalesced) and scale-adaptive (defaultParallelism = cluster

@@ -114,11 +114,8 @@ object Bpe {
 
   /** One training round over `(word, freq, seq)`: returns the merge
     * row, the re-encoded vocabulary, and the freq-weighted symbol mass
-    * of that vocabulary (computed in the checkpoint pass — round 17).
-    * `private[graft]` so `tools.BpeProbe` can drive the R≫4
-    * merge-round law measurement with its own instrumented loop
-    * (correctness stays pinned by the R=4 oracle). */
-  private[graft] def round(spark: SparkSession, seqs: DataFrame,
+    * of that vocabulary (computed in the checkpoint pass — round 17). */
+  private def round(spark: SparkSession, seqs: DataFrame,
                            r: Int): (DataFrame, DataFrame, Long) = {
     import spark.implicits._
     val pairs = seqs
@@ -164,17 +161,17 @@ object Bpe {
       .orderBy($"round")
   }
 
-  /** Runs the unrolled rounds; returns (merge rows, final re-encoded
-    * vocabulary `(word, freq, seq)`). */
   /** Unpersist a localCheckpoint'd frame's backing RDD (the frame is
     * dead after this — lineage was truncated). */
-  private[graft] def unpersistCk(df: DataFrame): Unit =
+  private def unpersistCk(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
 
-  /** The merge loop. Measured round-cost law (tools.BpeProbe, sf1,
-    * R=16 and R=64 — BASELINE "BPE merge-round law"): sec/round is
+  /** The merge loop: runs the unrolled rounds; returns (merge rows,
+    * final re-encoded vocabulary `(word, freq, seq)`). Measured
+    * round-cost law (sf1, R=16 and R=64 — BASELINE.md "BPE merge-round
+    * law (round 13)"): sec/round is
     * FLAT in R (0.2–0.4 s; late rounds cheapest as merges shrink the
     * seq arrays) and the loop holds O(1) vocab blocks at any R. At
     * this vocabulary grain the per-round cost is fixed job overhead
@@ -197,8 +194,9 @@ object Bpe {
       // null-guarded sum) and the checkpoint is eager, so the previous
       // round's vocabulary block can be released here: the loop holds
       // O(1) vocab blocks instead of O(R) — at the R=4 serving grain a
-      // nicety, at the R=64 law-measurement grain (tools.BpeProbe) the
-      // difference between a bounded loop and an unbounded block leak.
+      // nicety, at the R=64 law-measurement grain (BASELINE.md "BPE
+      // merge-round law") the difference between a bounded loop and an
+      // unbounded block leak.
       val (best, applied, nAfter) = round(spark, seqs, r)
       unpersistCk(seqs)
       seqs = applied

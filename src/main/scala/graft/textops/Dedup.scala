@@ -1172,8 +1172,9 @@ object Dedup {
     // of the pid self-join below are this same subtree, and while
     // ReuseExchange dedups the pid exchange, the sort + window + prune
     // filter above it ran TWICE — once per join side — over the full
-    // posting table (NgramBreakdown: candidates ≈ 1.5 s, the
-    // pipeline's largest stage). The fresh-stats checkpoint preserves
+    // posting table (candidate window + self-join ≈ 1.4 s, the
+    // pipeline's largest stage: OPTIMIZATION_r17.md's stage split under
+    // "dedup_ngram_jaccard_capped"). The fresh-stats checkpoint preserves
     // the pid partitioning and sort order, so the self-join reads the
     // materialized blocks on both sides with no re-sort; output is the
     // same posting rows, so the candidate set is unchanged.

@@ -579,26 +579,9 @@ object Pipelines {
     * computed once per PROBE (np rows/query), so the candidate scan
     * is still codes-only.
     */
-  /** `jitterRankKey` is a MEASUREMENT-ONLY knob (the round-12
-    * tie-comparator experiment): it perturbs the rank sort's first key
-    * by a deterministic ≤1e-7-scale hash jitter so the key is
-    * (near-)unique per row and every sort comparison resolves at the
-    * first key instead of falling through tied ADC doubles to the
-    * tiebreaker. Never a serving option — within-tie order changes and
-    * real score gaps below the jitter scale can reorder. */
-  /** The serve's scored-candidate frame — everything before the rank
-    * window: probe selection, the (pc, cell) candidate join against
-    * the stored codes, and the ADC `approx_cosine`. Shared by
-    * [[annSearchPqFrom]] and the stage-decomposition timings in
-    * `tools.PqServeExplain` (a `count()` on this frame prunes the
-    * unused score column and times the pure candidate join; a
-    * `max(approx_cosine)` adds the ADC scan; the full serve adds the
-    * window — the per-stage subtraction that located the K=16/K=64
-    * serve-time inversion).
-    */
-  private[graft] def pqScoredCandidates(spark: SparkSession, outDir: String,
-                                        queries: DataFrame, nProbe: Int = -1,
-                                        excludeSelfId: Boolean = false): DataFrame = {
+  def annSearchPqFrom(spark: SparkSession, outDir: String, queries: DataFrame,
+                      k: Int = 5, nProbe: Int = -1,
+                      excludeSelfId: Boolean = false): DataFrame = {
     import spark.implicits._
     val cent = spark.read.parquet(s"$outDir/ann_centroids")
     val np = if (nProbe > 0) nProbe
@@ -638,22 +621,9 @@ object Pipelines {
     val kept = if (excludeSelfId) cand.where($"query_id" =!= $"vec_id") else cand
     kept.withColumn("approx_cosine",
       expr(s"(qdotc + cast(($adc) as double) / 1000000000D) / (qn * nrm)"))
-  }
-
-  def annSearchPqFrom(spark: SparkSession, outDir: String, queries: DataFrame,
-                      k: Int = 5, nProbe: Int = -1,
-                      excludeSelfId: Boolean = false,
-                      jitterRankKey: Boolean = false): DataFrame = {
-    import spark.implicits._
-    pqScoredCandidates(spark, outDir, queries, nProbe, excludeSelfId)
       .withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy($"query_id")
-          .orderBy(
-            (if (jitterRankKey)
-               $"approx_cosine" +
-                 pmod(hash($"vec_id"), lit(1048576)).cast("double") * lit(1e-13)
-             else $"approx_cosine").desc,
-            $"vec_id".asc)))
+          .orderBy($"approx_cosine".desc, $"vec_id".asc)))
       .where($"rnk" <= k)
       .select($"query_id", $"vec_id".as("neighbor_id"), $"approx_cosine",
         $"rnk".cast("int").as("rnk"))

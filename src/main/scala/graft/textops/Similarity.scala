@@ -1063,11 +1063,11 @@ object Similarity {
     * are GLOBALLY aligned, i.e. when the top few eigenvalues of this
     * matrix carry most of the trace. Deployment rule: run this once
     * per corpus; if share(top-4 eigenvalues) ≫ 4/64 (the isotropic
-    * floor — per-tier measurements in BASELINE's spectrum table,
-    * `tools.SpectrumProbe`), build the trained/residual IVFADC index
+    * floor — per-tier measurements in BASELINE.md "Corpus spectrum"),
+    * build the trained/residual IVFADC index
     * ([[graft.textops.Pipelines]] `materializePq` residual=true);
     * else spend the same budget on a wider re-rank pool. Eigenvalues come from the driver-side 64×64
-    * Jacobi pass ([[spectrumShares]] / `tools.SpectrumProbe`) — the
+    * Jacobi pass ([[spectrumShares]] / [[spectrumTopShares]]) — the
     * QUERY stays a single bounded partial aggregate so the gate is a
     * hash match: per dimension pair (i ≤ j), exact integer micro-unit
     * moments (Σxᵢxⱼ, Σxᵢ, Σxⱼ in 10⁻⁶ units — products ≤ 10¹² per row,
@@ -1147,7 +1147,7 @@ object Similarity {
     * clustered 0.209 / per-cluster-aniso 0.185 / uniform 0.071 — the
     * three non-separating geometries cluster below ~0.21 and the one
     * where residual PQ pays sits at 0.54, hence the 0.35 decision
-    * boundary in `tools.SpectrumProbe`.
+    * boundary (BASELINE.md "Corpus spectrum").
     * Residual micro-units are differences of floors — integer-exact
     * in both engines, |r| ≤ 2·10⁶ so pair products stay ≪ 2⁶³.
     */
@@ -1298,8 +1298,8 @@ object Similarity {
   }
 
   /** [[embeddingSpectrum]] collected into the dense symmetric matrix +
-    * [[spectrumShares]] — what `tools.SpectrumProbe` and the
-    * separation spec run. The collect is 2 080 rows, not the corpus.
+    * [[spectrumShares]] — what the separation spec runs. The collect
+    * is 2 080 rows, not the corpus.
     */
   def spectrumTopShares(spark: SparkSession, sfDir: String,
                         ks: Seq[Int] = Seq(1, 2, 4, 8),

@@ -91,6 +91,22 @@ class AnalyticsSpec extends AnyFunSuite {
     }
   }
 
+  test("Bench totals: a failed query never lowers the headline and is named in failed") {
+    import Bench.QRec
+    val ok = Seq(QRec("a", 2.0, Seq(2.0, 2.0, 2.0), 0.0),
+      QRec("d", 1.0, Seq(1.0, 1.0, 1.0), 6.0))
+    val crashed = QRec("b", -1.0, Seq(3.0, -1.0, 3.0), 3.0,
+      Some("java.lang.IllegalStateException"))
+    val isDiag = Set("d")
+    val before = Bench.totals(ok, isDiag)
+    val after = Bench.totals(ok :+ crashed, isDiag)
+    assert(before.serving == 2.0 && before.diag == 1.0 && before.all == 3.0)
+    assert(after.serving == before.serving && after.all == before.all &&
+      after.diag == before.diag, s"crash changed the sums: $after")
+    assert(after.failed == Seq("b" -> "java.lang.IllegalStateException"))
+    assert(before.failed.isEmpty)
+  }
+
   test("every queries key has either an oracle or a documented reason") {
     val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(unoracled == Set("uv_approx"), s"unexpected un-oracled: $unoracled")
@@ -98,13 +114,17 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("hot_items_topn: ranks are 1..5 per window, counts decreasing") {
     val df = UserBehaviorAnalytics.hotItemsTopN(spark, sf).cache()
-    assert(df.count() > 0)
-    assert(df.where($"rnk" < 1 || $"rnk" > 5).isEmpty)
-    // within a window, cnt is non-increasing in rnk
-    val bad = df.withColumn("prev", lag($"cnt", 1).over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"window_end").orderBy($"rnk")))
-      .where($"prev".isNotNull && $"cnt" > $"prev")
-    assert(bad.isEmpty)
+    // unpersist after: the session is shared, and a cached result would
+    // stand in for this query's plan in every later suite (PlanSpec)
+    try {
+      assert(df.count() > 0)
+      assert(df.where($"rnk" < 1 || $"rnk" > 5).isEmpty)
+      // within a window, cnt is non-increasing in rnk
+      val bad = df.withColumn("prev", lag($"cnt", 1).over(
+          org.apache.spark.sql.expressions.Window.partitionBy($"window_end").orderBy($"rnk")))
+        .where($"prev".isNotNull && $"cnt" > $"prev")
+      assert(bad.isEmpty)
+    } finally df.unpersist()
   }
 
   test("page_views: windowed counts sum to total view count") {

@@ -70,6 +70,26 @@ class PlanSpec extends AnyFunSuite {
       "per-window top-n rank not pushed below the full window sort")
   }
 
+  test("Probe full-output pass: hot_items_topn reports every row and keeps the global Sort that count() elides") {
+    val q = SparkEntry.queries("hot_items_topn")
+    val (rep, df) = graft.tools.Probe.rep(spark, sf, q, "spec")
+    // read the plan BEFORE collect(), which would itself finalize it:
+    // the full-output pass must have executed the frame's own plan
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("isFinalPlan=true"),
+      "the full-output pass did not execute the frame's own plan")
+    // SortExec prints `Sort [keys], <global>, ...`; global = true is the
+    // presentation ORDER BY
+    val globalSort = "Sort \\[[^\n]*\\], true".r
+    assert(globalSort.findFirstIn(plan.split("== Initial Plan ==").head).nonEmpty,
+      "the full-output plan lost the final global Sort")
+    assert(rep.rows > 0 && rep.rows == df.collect().length)
+    val counted = df.groupBy().count()
+    counted.collect()
+    assert(globalSort.findFirstIn(counted.queryExecution.executedPlan.toString).isEmpty,
+      "count() kept the global Sort — the full-output pass measures nothing extra")
+  }
+
   test("dedup_embedding_capped: both cell caps push down as WindowGroupLimit") {
     // the caps must PRUNE the cell exchange (map-side per-partition
     // top-k), not follow it — otherwise the capped tier still shuffles

@@ -1,19 +1,7 @@
 #!/bin/bash
-# Standalone Bench runner (no sbt lock): uses the compiled classes +
-# the Spark jars directly. Usage:
+# Standalone Bench runner (no sbt lock) on the compiled classes, through
+# tools/run.sh. Usage:
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 tools/bench.sh
 cd "$(dirname "$0")/.." || exit 1
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke \
-         java.base/java.lang.reflect java.base/java.io java.base/java.net \
-         java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs \
-         java.base/sun.security.action java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
-exec java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  "${BENCH_MAIN:-graft.Bench}" "$@"
+export GRAFT_JAVA_OPTS="${GRAFT_JAVA_OPTS:-} -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC"
+exec tools/run.sh -mem "${SPARK_DRIVER_MEM:-8g}" graft.Bench "$@"

@@ -1,6 +1,7 @@
 #!/bin/bash
-# Direct-JVM runner for graft.tools mains — bypasses the sbt lock so
-# long measurements can run concurrently with a build loop.
+# Direct-JVM runner for any graft main (graft.Bench, graft.Verify,
+# graft.tools.Probe, ...) on the compiled classes — bypasses the sbt
+# lock so long measurements can run concurrently with a build loop.
 # Usage: tools/run.sh [-mem 64g] <mainClass> [args...]
 set -euo pipefail
 cd "$(dirname "$0")/.."
