@@ -3,9 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** One micro-batch's progress, as the monitoring table row. */
+/** One micro-batch's progress, as the monitoring table row. Phase
+  * times come from `durationMs` (0 when the phase did not run in the
+  * batch); `state_rows` / `state_commit_ms` sum `numRowsTotal` /
+  * `commitTimeMs` over the query's stateful operators (0 if it has none).
+  */
 case class BatchProgress(query: String, batch_id: Long, input_rows: Long,
-                         watermark: String, rows_per_sec: Double)
+                         watermark: String, rows_per_sec: Double,
+                         wal_commit_ms: Long, commit_offsets_ms: Long,
+                         trigger_ms: Long, state_rows: Long,
+                         state_commit_ms: Long)
 
 /** Streaming observability — the ops surface a long-running ingest
   * deployment watches (the reference course project eyeballs
@@ -31,10 +38,14 @@ final class Monitoring private (spark: SparkSession, maxRows: Int)
   override def onQueryProgress(
       e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
+    def phaseMs(k: String): Long = Option(p.durationMs.get(k)).fold(0L)(_.longValue)
     buf.add(BatchProgress(
       Option(p.name).getOrElse(p.id.toString), p.batchId, p.numInputRows,
       Option(p.eventTime.get("watermark")).getOrElse(""),
-      p.processedRowsPerSecond))
+      p.processedRowsPerSecond,
+      phaseMs("walCommit"), phaseMs("commitOffsets"), phaseMs("triggerExecution"),
+      p.stateOperators.map(_.numRowsTotal).sum,
+      p.stateOperators.map(_.commitTimeMs).sum))
     while (buf.size > maxRows) buf.poll()
   }
 

@@ -24,7 +24,9 @@ object SparkTestBase {
     // order-timeout / blacklist streams now ride. Tests that pin the
     // HDFS-backed provider set it explicitly (StreamingRecoverySpec's
     // provider-matrix case).
-    val s = Session.RocksDbStateStore
+    // Session.tune's `file:` filesystem too, so every checkpoint and
+    // parquet write in the suite runs on the production path.
+    val s = (Session.RocksDbStateStore ++ Session.LocalFileSystemImpl)
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1104,20 +1104,36 @@ class StreamingParitySpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val mon = graft.streaming.Monitoring.attach(spark)
     val ms = MemoryStream[(Long, String)]
-    val q = ms.toDF().toDF("doc_id", "text")
+    val docs = ms.toDF().toDF("doc_id", "text")
+    val q = docs
       .writeStream.format("memory").queryName("monitored_stream")
       .outputMode("append").start()
+    val qs = docs.groupBy($"text").count()
+      .writeStream.format("memory").queryName("monitored_state")
+      .outputMode("update").start()
     try {
       ms.addData(Seq((1L, "a b c"), (2L, "d e")))
-      q.processAllAvailable()
+      q.processAllAvailable(); qs.processAllAvailable()
       ms.addData(Seq((3L, "f")))
-      q.processAllAvailable()
-      assert(mon.awaitBatches("monitored_stream", 2) >= 2,
-        "listener bus delivered fewer than 2 progress events")
+      q.processAllAvailable(); qs.processAllAvailable()
+      assert(mon.awaitBatches("monitored_stream", 2) >= 2 &&
+        mon.awaitBatches("monitored_state", 2) >= 2,
+        "listener bus delivered fewer than 2 progress events per query")
       val snap = mon.snapshot.where($"query" === "monitored_stream")
       // all 3 fed rows accounted for across batches, batch ids distinct
       assert(snap.agg(sum($"input_rows")).as[Long].head() == 3L)
       assert(snap.select($"batch_id").distinct().count() == snap.count())
-    } finally { q.stop(); mon.detach() }
+      // phase times and state size are columns, never negative; only
+      // the stateful query holds state rows
+      val all = mon.snapshot.where($"query".isin("monitored_stream", "monitored_state"))
+      val cols = Seq("wal_commit_ms", "commit_offsets_ms", "trigger_ms",
+        "state_rows", "state_commit_ms")
+      assert(all.where(cols.map(c => col(c) < 0).reduce(_ || _)).isEmpty)
+      assert(all.where($"trigger_ms" > 0).count() > 0)
+      def stateRows(query: String) = all.where($"query" === query)
+        .agg(max($"state_rows")).as[Long].head()
+      assert(stateRows("monitored_stream") == 0L)
+      assert(stateRows("monitored_state") == 3L, "3 distinct texts in the store")
+    } finally { q.stop(); qs.stop(); mon.detach() }
   }
 }
