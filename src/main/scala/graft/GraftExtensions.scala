@@ -24,11 +24,22 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * The function list is NOT duplicated here: this injection iterates
   * `GraftExpressions.registrations` — name, usage text, and builder
   * all come from that one Seq, so the surfaces cannot drift.
+  *
+  * Besides the functions it injects the as-of join strategy and one AQE
+  * query-stage preparation rule, [[graft.plans.SmallGlobalSort]]: a
+  * global `ORDER BY` whose input is materialized query stages holding
+  * at most one advisory partition (`advisoryPartitionSizeInBytes`, with
+  * partition coalescing on) is sorted in one task behind a
+  * `CoalesceExec(1)` instead of a sampled range shuffle. Larger sorts,
+  * and sorts straight off a scan or a cached/checkpointed relation,
+  * keep the parallel range sort; pre-execution plans and streaming
+  * micro-batches (no AQE) are unchanged.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoin.AsOfJoinStrategy)
+    e.injectQueryStagePrepRule(_ => graft.plans.SmallGlobalSort)
     GraftExpressions.registrations.foreach { r =>
       // the full 11-arg constructor (the 5-arg form is deprecated):
       // arguments/examples/note/group/since/deprecated/source all

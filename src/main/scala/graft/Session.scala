@@ -20,7 +20,10 @@ object Session {
     *    partition coalescing — the engine's answer to the reference's
     *    hand-salting (SURVEY.md §2.3 P6).
     *  - UTC session timezone (oracle parity and sanity).
-    *  - GraftExtensions: native functions + the as-of join strategy.
+    *  - GraftExtensions: native functions, the as-of join strategy and
+    *    the AQE rule that sorts a small final ORDER BY in one task
+    *    ([[graft.plans.SmallGlobalSort]]; relies on coalescing and the
+    *    advisory size below).
     *  - [[LocalFileSystemImpl]]: `file:` paths without a subprocess
     *    per created file or renamed checkpoint file.
     */

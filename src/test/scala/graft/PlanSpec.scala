@@ -19,6 +19,10 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** The `== Final Plan ==` part of an executed AQE plan string. */
+  private def finalPlan(plan: String): String =
+    plan.split("== Initial Plan ==").head
+
   test("annSearchPqFrom: stored ADC serve scans codes only — no full-vector table in the plan") {
     import graft.textops.Pipelines
     val dir = java.nio.file.Files.createTempDirectory("graftpqplan").toString
@@ -68,6 +72,15 @@ class PlanSpec extends AnyFunSuite {
       UserBehaviorAnalytics.hotItemsTopN(spark, sf))
     assert(plan.contains("WindowGroupLimit"),
       "per-window top-n rank not pushed below the full window sort")
+  }
+
+  test("hot_items_topn: KB-scale presentation sort runs in one task — no range exchange") {
+    val plan = finalPlan(planString(UserBehaviorAnalytics.hotItemsTopN(spark, sf)))
+    assert("Sort \\[[^\n]*\\], true, \\d+\n\\s*\\+- Coalesce 1\n".r
+      .findFirstIn(plan).nonEmpty,
+      s"the global Sort does not read a single-partition coalesce:\n$plan")
+    assert(!plan.contains("rangepartitioning"),
+      s"the ORDER BY still samples and range-shuffles its input:\n$plan")
   }
 
   test("Probe full-output pass: hot_items_topn reports every row and keeps the global Sort that count() elides") {
@@ -287,6 +300,10 @@ class PlanSpec extends AnyFunSuite {
     // (sequence/explode/slice) must not add a hash exchange
     assert(!plan.contains("hashpartitioning"),
       "chunking added a hash shuffle — should be scan-speed narrow")
+    // the sort reads a scan, not a materialized stage, so SmallGlobalSort
+    // has no input size to judge: the range exchange stays
+    assert(finalPlan(plan).contains("rangepartitioning"),
+      s"a sort straight off a scan lost its range exchange:\n$plan")
   }
 
   test("embedding_centroids: partial aggregation before the (label,dim) exchange") {

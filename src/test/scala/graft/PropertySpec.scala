@@ -911,4 +911,47 @@ class PropertySpec extends AnyFunSuite {
       assert(got == r, s"rank mismatch on n=$nNodes edges=$edges")
     }
   }
+
+  test("small global sort in one task == Scala sort (mixed ASC/DESC, NULLS FIRST/LAST, ties); large input keeps the range sort") {
+    // rows over 8 input partitions, grouped so the ORDER BY reads a
+    // shuffle stage; a has few values (ties) and both a and b carry nulls
+    val rowGen = Gen.zip(Gen.chooseNum(0, 30),
+      Gen.option(Gen.chooseNum(-3, 3)),
+      Gen.option(Gen.oneOf("", "a", "ab", "b", "ba")),
+      Gen.chooseNum(-5L, 5L))
+    // Option's Ordering puts None first
+    def nullsLast[T](o: Ordering[T]): Ordering[Option[T]] =
+      Ordering.by[Option[T], (Boolean, Option[T])](x => (x.isEmpty, x))(
+        Ordering.Tuple2(Ordering.Boolean, Ordering.Option(o)))
+    val keyOrd = Ordering.Tuple4(Ordering.Option(Ordering.Int.reverse),
+      nullsLast(Ordering.String), Ordering.Long.reverse, Ordering.Int)
+    forAll(Gen.chooseNum(50, 400).flatMap(Gen.listOfN(_, rowGen)), n = 4) { rows =>
+      val want = rows.groupBy(r => (r._1, r._2, r._3)).toSeq
+        .map { case ((k, a, b), rs) => (k, a, b, rs.size.toLong, rs.map(_._4).sum) }
+        .sortBy(r => (r._2, r._3, r._4, r._1))(keyOrd)
+      // a fresh frame per run: a collected frame keeps its final AQE plan
+      def run(): (Seq[(Int, Option[Int], Option[String], Long, Long)], String) = {
+        val ds = spark.sparkContext.parallelize(rows, 8).toDF("k", "a", "b", "v")
+          .groupBy($"k", $"a", $"b").agg(count(lit(1)).as("n"), sum($"v").as("s"))
+          .orderBy($"a".desc_nulls_first, $"b".asc_nulls_last, $"n".desc, $"k".asc)
+          .as[(Int, Option[Int], Option[String], Long, Long)]
+        val got = ds.collect().toSeq
+        (got, ds.queryExecution.executedPlan.toString.split("== Initial Plan ==").head)
+      }
+      val (small, smallPlan) = run()
+      assert(small == want, s"one-task sort order diverged:\n$smallPlan")
+      assert("Sort \\[[^\n]*\\], true".r.findFirstIn(smallPlan).nonEmpty &&
+        !smallPlan.contains("rangepartitioning"),
+        s"KB-scale ORDER BY still range-partitions:\n$smallPlan")
+      val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "1b")
+      try {
+        val (large, largePlan) = run()
+        assert(large == want, s"range sort order diverged:\n$largePlan")
+        assert(largePlan.contains("rangepartitioning"),
+          s"input above the advisory size lost its range exchange:\n$largePlan")
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
 }
