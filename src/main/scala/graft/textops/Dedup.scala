@@ -34,6 +34,14 @@ object Dedup {
     * equi-join on doc id. */
   private[graft] val BroadcastVerifyMaxDocs = 20000L
 
+  /** The same broadcast↔shuffle flip for the ANN tiers that rank on ids
+    * and re-attach full vectors only for surviving pairs (SRP-LSH,
+    * SQ8): below this many vectors both re-attach joins broadcast the
+    * `(vec_id, v, nrm)` table (a 64-double vector ≈ 0.5 KB, so 100k
+    * vectors ≈ 50 MB); past it they become shuffled equi-joins on the
+    * id. */
+  private[graft] val BroadcastReattachMaxVecs = 100000L
+
   /** Document corpus size — parquet metadata count, one cheap job. */
   private def nDocs(spark: SparkSession, sfDir: String): Long =
     Tables.documents(spark, sfDir).count()
@@ -75,17 +83,16 @@ object Dedup {
 
   private val SH = ShingleMult // shingle-combine multiplier
 
-  /** doc_id + K minhash signature columns s0..s{K-1}: one native byte
-    * scan (shingle_hashes = tokenize → poly31 → 3-gram combine, empty
-    * for <3-token docs) feeding the native one-pass K-minima
-    * (minhash_sig) — zero interpreted HOF stages.
-    */
-  private def minhashSig(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.documents(spark, sfDir)
-      .selectExpr("doc_id", "shingle_hashes(text) as sh")
-      .where("size(sh) >= 1")
-      .selectExpr("doc_id", "minhash_sig(sh) as sig")
-      .selectExpr(("doc_id" +: (0 until K).map(j => s"element_at(sig, ${j + 1}) as s$j")): _*)
+  /** Signature agreement of band rows `x` and `y`: the fraction of
+    * the K minhash components that match — the unbiased Jaccard
+    * estimate. Cast BEFORE dividing: int / 8.0 is DECIMAL division in
+    * Spark (literal 8.0 is DECIMAL(2,1) → DECIMAL(17,6) result) while
+    * the DuckDB oracle emits DOUBLE — the driver's hash gate sees
+    * types. */
+  private val sigAgreeSpark: String = {
+    val matches = (0 until K)
+      .map(j => s"(case when x.s$j = y.s$j then 1 else 0 end)").mkString(" + ")
+    s"cast(($matches) as double) / $K"
   }
 
   /** Near-dup pairs via banded MinHash LSH (bands of 2, K/2 bands),
@@ -108,34 +115,23 @@ object Dedup {
                                        sfDir: String): DataFrame =
     minhashPairsOf(minhashBandRows(spark, sfDir))
 
-  /** LSH bucket rows `(s0..s{K-1}, doc_id, band_idx, band_hash)` — the
-    * relation both the exact and bucket-capped pair tiers expand. */
-  private def minhashBandRows(spark: SparkSession, sfDir: String): DataFrame = {
-    val sig = minhashSig(spark, sfDir)
-    val bandArray = (0 until K / 2)
-      .map(b => s"(s${2 * b} * $SH + s${2 * b + 1}) % $P")
-      .mkString("array(", ", ", ")")
-    sig.selectExpr(
-      ((0 until K).map(j => s"s$j") :+ "doc_id" :+
-        s"posexplode($bandArray) as (band_idx, band_hash)"): _*)
-  }
+  /** LSH bucket rows `(s0..s{K-1}, doc_id, band_idx, band_hash)` of the
+    * corpus — the relation both the exact and bucket-capped pair tiers
+    * expand. */
+  private def minhashBandRows(spark: SparkSession, sfDir: String): DataFrame =
+    minhashBucketsFrom(Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
 
   /** Pairwise bucket expansion + signature-agreement estimate ≥ 0.5
     * over band rows — the tail both pair tiers share. */
   private def minhashPairsOf(bands: DataFrame): DataFrame = {
     import bands.sparkSession.implicits._
-    val simExpr = (0 until K)
-      .map(j => s"(case when x.s$j = y.s$j then 1 else 0 end)").mkString(" + ")
     bands.as("x")
       .join(bands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.band_hash") === col("y.band_hash") &&
           col("x.doc_id") < col("y.doc_id"))
       .selectExpr("x.doc_id as doc1", "y.doc_id as doc2",
-        // cast BEFORE dividing: int / 8.0 is DECIMAL division in Spark
-        // (literal 8.0 is DECIMAL(2,1) → DECIMAL(17,6) result) while the
-        // DuckDB oracle emits DOUBLE — the driver's hash gate sees types
-        s"cast(($simExpr) as double) / $K as sim")
+        s"$sigAgreeSpark as sim")
       .distinct()
       .where($"sim" >= 0.5)
   }
@@ -176,18 +172,11 @@ object Dedup {
     minhashPairsOf(kept)
   }
 
-  /** Shared DuckDB CTE chain ending in `simpairs(doc1, doc2, sim)` —
-    * the minhash near-dup pairs at sim ≥ 0.5. Used by both the pair
-    * query's oracle and the connected-components clusters oracle.
-    */
   /** DuckDB CTE chain ending in `sig(doc_id, s0..s{K-1})` — the shared
     * MinHash signature build ([[minhashPairsCtes]] and the incremental
     * oracle both extend it).
     */
-  private lazy val minhashSigCtes: String = {
-    val sigCols = (0 until K).map(j =>
-      s"list_min(list_transform(sh, v$j -> (v$j * ${MinhashA(j)} + ${MinhashB(j)}) % $P)) AS s$j")
-      .mkString(",\n         ")
+  private lazy val minhashSigCtes: String =
     s"""toks AS (
        |  SELECT doc_id, $tokensDuck AS tokens FROM documents
        |), th AS (
@@ -198,28 +187,56 @@ object Dedup {
        |    ((tharr[sj + 1] * $SH + tharr[sj + 2]) % $P
        |     * $SH + tharr[sj + 3]) % $P) AS sh FROM th
        |), sig AS (
-       |  SELECT doc_id, $sigCols FROM sh
+       |  SELECT doc_id, $sigColsDuck FROM sh
        |)""".stripMargin
+
+  /** DuckDB twin of `minhash_sig`: the K signature columns over a
+    * shingle-hash list `sh`. */
+  private lazy val sigColsDuck: String = (0 until K).map(j =>
+    s"list_min(list_transform(sh, v$j -> (v$j * ${MinhashA(j)} + ${MinhashB(j)}) % $P)) AS s$j")
+    .mkString(",\n         ")
+
+  /** DuckDB twin of [[minhashBucketsFrom]]'s band explode: the K/2
+    * band rows `(doc_id, band_idx, band_hash)` of the signature
+    * relation `sig`, as UNION ALL arms. */
+  private def bandSelectsDuck(sig: String): String = (0 until K / 2).map(b =>
+    s"SELECT doc_id, $b AS band_idx, (s${2 * b} * $SH + s${2 * b + 1}) % $P AS band_hash FROM $sig")
+    .mkString("\n  UNION ALL ")
+
+  /** DuckDB twin of [[sigAgreeSpark]] over signature rows `a`, `b`. */
+  private lazy val sigAgreeDuck: String = {
+    val matches = (0 until K)
+      .map(j => s"(CASE WHEN a.s$j = b.s$j THEN 1 ELSE 0 END)").mkString(" + ")
+    s"CAST(($matches) AS DOUBLE) / $K"
   }
 
-  private lazy val minhashPairsCtes: String = {
-    val bandSelects = (0 until K / 2).map(b =>
-      s"SELECT doc_id, $b AS band_idx, (s${2 * b} * $SH + s${2 * b + 1}) % $P AS band_hash FROM sig")
-      .mkString("\n  UNION ALL ")
-    val simExpr = (0 until K)
-      .map(j => s"(CASE WHEN a.s$j = b.s$j THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""$minhashSigCtes, bands AS (
-       |  $bandSelects
-       |), lshpairs AS (
+  /** `name(doc1, doc2)`: the distinct band-bucket collisions of the
+    * band relation `bands`. */
+  private def bandPairsCte(name: String, bands: String): String =
+    s"""$name AS (
        |  SELECT DISTINCT x.doc_id AS doc1, y.doc_id AS doc2
-       |  FROM bands x JOIN bands y ON x.band_idx = y.band_idx
+       |  FROM $bands x JOIN $bands y ON x.band_idx = y.band_idx
        |    AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id
-       |), simpairs AS (
-       |  SELECT p.doc1, p.doc2, CAST(($simExpr) AS DOUBLE) / $K AS sim
-       |  FROM lshpairs p JOIN sig a ON p.doc1 = a.doc_id JOIN sig b ON p.doc2 = b.doc_id
-       |  WHERE CAST(($simExpr) AS DOUBLE) / $K >= 0.5
        |)""".stripMargin
-  }
+
+  /** `name(doc1, doc2, sim)`: the candidate pairs `cand` verified at
+    * signature agreement ≥ 0.5. */
+  private def simPairsCte(name: String, cand: String): String =
+    s"""$name AS (
+       |  SELECT p.doc1, p.doc2, $sigAgreeDuck AS sim
+       |  FROM $cand p JOIN sig a ON p.doc1 = a.doc_id JOIN sig b ON p.doc2 = b.doc_id
+       |  WHERE $sigAgreeDuck >= 0.5
+       |)""".stripMargin
+
+  /** Shared DuckDB CTE chain ending in `simpairs(doc1, doc2, sim)` —
+    * the minhash near-dup pairs at sim ≥ 0.5. Used by both the pair
+    * query's oracle and the connected-components clusters oracle.
+    */
+  private lazy val minhashPairsCtes: String =
+    s"""$minhashSigCtes, bands AS (
+       |  ${bandSelectsDuck("sig")}
+       |), ${bandPairsCte("lshpairs", "bands")}, """.stripMargin +
+      simPairsCte("simpairs", "lshpairs")
 
   val minhashLshOracle: String =
     s"""WITH $minhashPairsCtes
@@ -285,27 +302,6 @@ object Dedup {
 
   // ------------------------------------------------- incremental dedup
 
-  /** Incremental near-dup dedup — the rolling-corpus operator: judge a
-    * NEW batch against the already-ingested base without recomputing
-    * any base×base pair. A deterministic ~1-in-10 doc slice (salted
-    * poly_hash37 gate, independent of the split/rebalance hashes)
-    * plays the "today's crawl" batch; every new doc is kept unless its
-    * MinHash band buckets collide with a base doc or an EARLIER new
-    * doc (smaller doc_id) at signature similarity ≥ 0.5 — the
-    * keep-first-occurrence rule, so a dup group arriving inside one
-    * batch keeps exactly its first member, matching what a day-by-day
-    * replay would have kept.
-    *
-    * Scale shape: candidates come from the band equi-join of the NEW
-    * side's bucket rows against the full bucket table — cost
-    * O(|batch| × bucket occupancy), never O(corpus²). At 100 TB the
-    * base side's (band_idx, band_hash) buckets are exactly what
-    * [[Pipelines.materialize]] snapshots: stored partitioned by band
-    * hash, a daily batch probes only the partitions its own bands
-    * touch. Docs too short to shingle (< 3 tokens) have no signature
-    * and are kept by construction (left join), not dropped by
-    * accident.
-    */
   /** The "today's crawl" gate — which docs play the incoming batch in
     * the incremental-dedup replay (salted hash family, independent of
     * the split/rebalance gates). */
@@ -319,25 +315,30 @@ object Dedup {
     * side only) for the served probe path. */
   private[graft] def minhashBuckets(spark: SparkSession,
                                       sfDir: String): DataFrame =
-    minhashBucketsFrom(
-      Tables.documents(spark, sfDir).withColumn("is_new", expr(IncrNewGate)))
+    minhashBucketsFrom(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("text"), expr(IncrNewGate).as("is_new")))
 
-  /** [[minhashBuckets]] over an arbitrary `(doc_id, text, is_new)`
-    * frame — batch or streaming micro-batch (every stage is a narrow
-    * map, so it runs wherever the docs frame does). */
+  /** MinHash band rows `(s0..s{K-1}, <carried>, band_idx, band_hash)`
+    * of any `(doc_id, text, …)` frame — batch or streaming micro-batch
+    * (every stage is a narrow map, so it runs wherever the docs frame
+    * does). Every column but `text` is carried, the way [[docSpans]]
+    * carries them. One native byte scan (shingle_hashes = tokenize →
+    * poly31 → 3-gram combine, empty for <3-token docs, which drop
+    * out) feeds the native one-pass K-minima (minhash_sig) — zero
+    * interpreted HOF stages. */
   private[graft] def minhashBucketsFrom(docs: DataFrame): DataFrame = {
+    val carry = docs.columns.filter(_ != "text").toIndexedSeq
     val sig = docs
-      .selectExpr("doc_id", "is_new", "shingle_hashes(text) as sh")
+      .selectExpr(carry :+ "shingle_hashes(text) as sh": _*)
       .where("size(sh) >= 1")
-      .selectExpr("doc_id", "is_new", "minhash_sig(sh) as sig")
-      .selectExpr(("doc_id" +: "is_new" +:
-        (0 until K).map(j => s"element_at(sig, ${j + 1}) as s$j")): _*)
+      .selectExpr(carry :+ "minhash_sig(sh) as sig": _*)
+      .selectExpr(carry ++
+        (0 until K).map(j => s"element_at(sig, ${j + 1}) as s$j"): _*)
     val bandArray = (0 until K / 2)
       .map(b => s"(s${2 * b} * $SH + s${2 * b + 1}) % $P")
       .mkString("array(", ", ", ")")
-    sig.selectExpr(
-      ((0 until K).map(j => s"s$j") :+ "doc_id" :+ "is_new" :+
-        s"posexplode($bandArray) as (band_idx, band_hash)"): _*)
+    sig.selectExpr((0 until K).map(j => s"s$j") ++ carry :+
+      s"posexplode($bandArray) as (band_idx, band_hash)": _*)
   }
 
   /** The probe + verdict core shared by the live query and the
@@ -360,8 +361,6 @@ object Dedup {
       judged: DataFrame, xBands: DataFrame, yBands: DataFrame,
       keys: Seq[String] = Seq("band_idx", "band_hash")): DataFrame = {
     import judged.sparkSession.implicits._
-    val simExpr = (0 until K)
-      .map(j => s"(case when x.s$j = y.s$j then 1 else 0 end)").mkString(" + ")
     val matches = xBands.as("x")
       .join(yBands.as("y"),
         keys.map(c => col(s"x.$c") === col(s"y.$c")).reduce(_ && _) &&
@@ -370,43 +369,73 @@ object Dedup {
           // corpus: base doc, or new doc that arrived earlier
           (!col("y.is_new") || col("y.doc_id") < col("x.doc_id")))
       .selectExpr("x.doc_id as doc_id", "y.doc_id as oid",
-        s"cast(($simExpr) as double) / $K as sim")
+        s"$sigAgreeSpark as sim")
       .distinct()
       .where($"sim" >= 0.5)
-    val w = Window.partitionBy($"doc_id")
-    val best = matches
-      .withColumn("rnk", row_number().over(
-        w.orderBy($"sim".desc, $"oid".asc)))
-      .withColumn("n_dups", count(lit(1)).over(w))
-      .where($"rnk" === 1)
-      .select($"doc_id", $"oid".as("dup_of"), $"sim".as("best_sim"), $"n_dups")
-    judged.select($"doc_id")
-      .join(best, Seq("doc_id"), "left_outer")
-      .selectExpr("doc_id", "dup_of is null as keep",
-        "cast(coalesce(n_dups, 0) as bigint) as n_dups",
-        "dup_of", "best_sim")
-      .orderBy($"doc_id")
+    keepFirstVerdicts(judged, "doc_id", matches, "doc_id", "sim")
   }
 
+  /** The keep-first verdict tail of both incremental dedup tiers (this
+    * MinHash one and [[Similarity.dedupEmbeddingIncremental]]): one row
+    * per `id` of `judged` — `keep` iff it has no match, plus the best
+    * match (`score` DESC, `oid` ASC) as `dup_of` / `best_<score>` and
+    * the match count `n_dups`. `matches` holds the verified
+    * `(<matchId>, oid, <score>)` rows, `matchId` naming the judged
+    * side's id there. */
+  private[textops] def keepFirstVerdicts(judged: DataFrame, id: String,
+                                         matches: DataFrame, matchId: String,
+                                         score: String): DataFrame = {
+    val w = Window.partitionBy(col(matchId))
+    val best = matches
+      .withColumn("rnk", row_number().over(
+        w.orderBy(col(score).desc, col("oid").asc)))
+      .withColumn("n_dups", count(lit(1)).over(w))
+      .where(col("rnk") === 1)
+      .select(col(matchId).as(id), col("oid").as("dup_of"),
+        col(score).as(s"best_$score"), col("n_dups"))
+    judged.select(col(id))
+      .join(best, Seq(id), "left_outer")
+      .selectExpr(id, "dup_of is null as keep",
+        "cast(coalesce(n_dups, 0) as bigint) as n_dups",
+        "dup_of", s"best_$score")
+      .orderBy(col(id))
+  }
+
+  /** Incremental near-dup dedup — the rolling-corpus operator: judge a
+    * NEW batch against the already-ingested base without recomputing
+    * any base×base pair. A deterministic ~1-in-10 doc slice (salted
+    * poly_hash37 gate, independent of the split/rebalance hashes)
+    * plays the "today's crawl" batch; every new doc is kept unless its
+    * MinHash band buckets collide with a base doc or an EARLIER new
+    * doc (smaller doc_id) at signature similarity ≥ 0.5 — the
+    * keep-first-occurrence rule, so a dup group arriving inside one
+    * batch keeps exactly its first member, matching what a day-by-day
+    * replay would have kept.
+    *
+    * Scale shape: candidates come from the band equi-join of the NEW
+    * side's bucket rows against the full bucket table — cost
+    * O(|batch| × bucket occupancy), never O(corpus²). At 100 TB the
+    * base side's (band_idx, band_hash) buckets are exactly what
+    * [[Pipelines.materialize]] snapshots: stored partitioned by band
+    * hash, a daily batch probes only the partitions its own bands
+    * touch. Docs too short to shingle (< 3 tokens) have no signature
+    * and are kept by construction (left join), not dropped by
+    * accident.
+    */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val bands = minhashBuckets(spark, sfDir).localCheckpoint()
     incrementalVerdicts(spark, sfDir, bands.where($"is_new"), bands)
   }
 
-  lazy val dedupIncrementalOracle: String = {
-    val simExpr = (0 until K)
-      .map(j => s"(CASE WHEN a.s$j = b.s$j THEN 1 ELSE 0 END)").mkString(" + ")
-    val bandSelects = (0 until K / 2).map(b =>
-      s"SELECT doc_id, $b AS band_idx, (s${2 * b} * $SH + s${2 * b + 1}) % $P AS band_hash FROM sig")
-      .mkString("\n  UNION ALL ")
+  lazy val dedupIncrementalOracle: String =
     s"""WITH $minhashSigCtes, tagged AS (
        |  SELECT doc_id,
        |         ${phDuck("CAST(doc_id AS VARCHAR) || '-incr'", "inc", 37)} % 10 = 0
        |           AS is_new
        |  FROM documents
        |), bands AS (
-       |  $bandSelects
+       |  ${bandSelectsDuck("sig")}
        |), cand AS (
        |  SELECT DISTINCT x.doc_id AS doc_id, y.doc_id AS oid
        |  FROM bands x
@@ -416,10 +445,10 @@ object Dedup {
        |  JOIN tagged ty ON y.doc_id = ty.doc_id
        |    AND (NOT ty.is_new OR y.doc_id < x.doc_id)
        |), m AS (
-       |  SELECT c.doc_id, c.oid, CAST(($simExpr) AS DOUBLE) / $K AS sim
+       |  SELECT c.doc_id, c.oid, $sigAgreeDuck AS sim
        |  FROM cand c JOIN sig a ON c.doc_id = a.doc_id
        |              JOIN sig b ON c.oid = b.doc_id
-       |  WHERE CAST(($simExpr) AS DOUBLE) / $K >= 0.5
+       |  WHERE $sigAgreeDuck >= 0.5
        |), best AS (
        |  SELECT doc_id, oid AS dup_of, sim AS best_sim, n_dups FROM (
        |    SELECT doc_id, oid, sim,
@@ -434,30 +463,9 @@ object Dedup {
        |       b.dup_of, b.best_sim
        |FROM tagged t LEFT JOIN best b ON t.doc_id = b.doc_id
        |WHERE t.is_new ORDER BY t.doc_id""".stripMargin
-  }
 
   // ------------------------------------------------- span-level dedup
 
-  /** Corpus-wide SPAN dedup with document reassembly — the C4/CCNet
-    * sub-document stage doc-level dedup can't express: C4 discards any
-    * three-sentence span seen before anywhere in the corpus and keeps
-    * the REST of the document (Raffel et al. '20 §2.2; CCNet does the
-    * same at paragraph grain). Here the unit is a fixed `span`-token
-    * window (the synthetic corpus has no sentence boundaries), split
-    * non-overlapping per doc; the FIRST occurrence corpus-wide (min
-    * (doc_id, span_idx)) survives, later copies are dropped, and each
-    * doc re-joins its kept spans in order. Output per doc: the cleaned
-    * text, total spans, spans dropped.
-    *
-    * Scale shape: explode to spans is narrow (tokens/span rows); the
-    * keep-first verdict is ONE rank window hash-partitioned by span
-    * text — the same shuffle an exact-dedup groupBy pays, never a
-    * pairwise join; reassembly is one per-doc aggregate. A corpus-wide
-    * boilerplate span is exactly ONE hot group in the rank window —
-    * agg-only, no expansion, so the operator is skew-immune by shape
-    * (the window state per group is O(1); contrast the pair tiers,
-    * which need the df caps above).
-    */
   /** Explode `(doc_id, text, …)` docs to one row per non-overlapping
     * `span`-token window: (carry cols…, doc_id, span_idx, span_text). */
   private[graft] def docSpans(docs: DataFrame, span: Int): DataFrame =
@@ -487,6 +495,26 @@ object Dedup {
       .orderBy($"doc_id")
   }
 
+  /** Corpus-wide SPAN dedup with document reassembly — the C4/CCNet
+    * sub-document stage doc-level dedup can't express: C4 discards any
+    * three-sentence span seen before anywhere in the corpus and keeps
+    * the REST of the document (Raffel et al. '20 §2.2; CCNet does the
+    * same at paragraph grain). Here the unit is a fixed `span`-token
+    * window (the synthetic corpus has no sentence boundaries), split
+    * non-overlapping per doc; the FIRST occurrence corpus-wide (min
+    * (doc_id, span_idx)) survives, later copies are dropped, and each
+    * doc re-joins its kept spans in order. Output per doc: the cleaned
+    * text, total spans, spans dropped.
+    *
+    * Scale shape: explode to spans is narrow (tokens/span rows); the
+    * keep-first verdict is ONE rank window hash-partitioned by span
+    * text — the same shuffle an exact-dedup groupBy pays, never a
+    * pairwise join; reassembly is one per-doc aggregate. A corpus-wide
+    * boilerplate span is exactly ONE hot group in the rank window —
+    * agg-only, no expansion, so the operator is skew-immune by shape
+    * (the window state per group is O(1); contrast the pair tiers,
+    * which need the df caps above).
+    */
   def spanDedup(spark: SparkSession, sfDir: String, span: Int = 20): DataFrame = {
     import spark.implicits._
     val spans = docSpans(
@@ -749,6 +777,21 @@ object Dedup {
       .union(isolated.select($"id", $"id".as("component")))
   }
 
+  /** Shared cluster projection of every clustering tier (documents and
+    * embeddings): [[connectedComponents]] of `nodes`' `id` column over
+    * `pairs`, one row per node — `(id, cluster_id, cluster_size,
+    * is_keeper)`, ordered by id. */
+  private[textops] def clusterize(nodes: DataFrame, id: String,
+                                  pairs: DataFrame): DataFrame = {
+    val cc = connectedComponents(nodes.select(col(id)), pairs)
+      .select(col("id").as(id), col("component").as("cluster_id"))
+    val sizes = cc.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
+    cc.join(sizes, "cluster_id")
+      .select(col(id), col("cluster_id"), col("cluster_size"),
+        (col(id) === col("cluster_id")).as("is_keeper"))
+      .orderBy(col(id))
+  }
+
   /** Near-dup CLUSTERS: [[connectedComponents]] over the MinHash-LSH
     * pair graph, plus canonical-document selection — the final stage
     * of a real training-data dedup pipeline (pairs alone don't dedupe
@@ -758,25 +801,10 @@ object Dedup {
     * near-dup edge, incl. <3-token docs with no minhash signature) are
     * their own cluster.
     */
-  /** Shared cluster → (doc_id, cluster_id, cluster_size, is_keeper)
-    * projection for the two evidence variants. */
-  private[textops] def clusterize(spark: SparkSession, sfDir: String,
-                                  pairs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir).select($"doc_id")
-    val cc = connectedComponents(docs, pairs)
-      .select($"id".as("doc_id"), $"component".as("cluster_id"))
-    val sizes = cc.groupBy($"cluster_id").agg(count(lit(1)).as("cluster_size"))
-    cc.join(sizes, "cluster_id")
-      .select($"doc_id", $"cluster_id", $"cluster_size",
-        ($"doc_id" === $"cluster_id").as("is_keeper"))
-      .orderBy($"doc_id")
-  }
-
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // unordered pair core: the closure re-shuffles the edges anyway
-    clusterize(spark, sfDir,
+    clusterize(Tables.documents(spark, sfDir), "doc_id",
       minhashLshPairs(spark, sfDir).select($"doc1", $"doc2"))
   }
 
@@ -784,29 +812,54 @@ object Dedup {
     * `cc(doc, cluster_id)` — the connected component (min reachable
     * doc id) of every document. Reused by corpus_prep.
     */
-  lazy val clusterCtes: String =
-    s"""$minhashPairsCtes, edges AS (
-       |  SELECT doc1 AS src, doc2 AS dst FROM simpairs
-       |  UNION ALL SELECT doc2, doc1 FROM simpairs
+  lazy val clusterCtes: String = s"$minhashPairsCtes, " +
+    closureCtes(Seq(("simpairs", "doc1", "doc2")), "documents", "doc_id", "doc")
+
+  /** DuckDB twin of [[connectedComponents]] (needs WITH RECURSIVE):
+    * `edges` (both directions of every `(relation, a, b)` pair
+    * relation) → `reach` → `cc(v, cluster_id)`, the min reachable
+    * `id` of every row of `table`, carried as `v`. */
+  private def closureCtes(pairs: Seq[(String, String, String)], table: String,
+                          id: String, v: String): String = {
+    val edges = pairs
+      .flatMap { case (rel, a, b) => Seq((rel, a, b), (rel, b, a)) }
+      .zipWithIndex
+      .map {
+        case ((rel, a, b), 0) => s"SELECT $a AS src, $b AS dst FROM $rel"
+        case ((rel, a, b), _) => s"UNION ALL SELECT $a, $b FROM $rel"
+      }
+      .mkString("\n  ")
+    s"""edges AS (
+       |  $edges
        |), reach AS (
-       |  SELECT doc_id AS doc, doc_id AS lab FROM documents
+       |  SELECT $id AS $v, $id AS lab FROM $table
        |  UNION
-       |  SELECT e.src, r.lab FROM reach r JOIN edges e ON e.dst = r.doc
+       |  SELECT e.src, r.lab FROM reach r JOIN edges e ON e.dst = r.$v
        |), cc AS (
-       |  SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
+       |  SELECT $v, min(lab) AS cluster_id FROM reach GROUP BY $v
        |)""".stripMargin
+  }
+
+  /** DuckDB twin of [[clusterize]]: the pair CTE chain `pairCtes`, the
+    * recursive closure over its pair relations ([[closureCtes]]), and
+    * one `(id, cluster_id, cluster_size, is_keeper)` row per node. */
+  private[textops] def clustersOracle(pairCtes: String,
+                                      pairs: Seq[(String, String, String)],
+                                      table: String, id: String,
+                                      v: String): String =
+    s"""WITH RECURSIVE $pairCtes, ${closureCtes(pairs, table, id, v)}, sizes AS (
+       |  SELECT cluster_id, count(*) AS cluster_size FROM cc GROUP BY 1
+       |)
+       |SELECT c.$v AS $id, c.cluster_id, s.cluster_size,
+       |       (c.$v = c.cluster_id) AS is_keeper
+       |FROM cc c JOIN sizes s ON c.cluster_id = s.cluster_id
+       |ORDER BY $id""".stripMargin
 
   /** Oracle: transitive closure by recursive CTE (min reachable id =
     * component id) over the same simpairs edge set.
     */
-  val dedupClustersOracle: String =
-    s"""WITH RECURSIVE $clusterCtes, sizes AS (
-       |  SELECT cluster_id, count(*) AS cluster_size FROM cc GROUP BY 1
-       |)
-       |SELECT c.doc AS doc_id, c.cluster_id, s.cluster_size,
-       |       (c.doc = c.cluster_id) AS is_keeper
-       |FROM cc c JOIN sizes s ON c.cluster_id = s.cluster_id
-       |ORDER BY doc_id""".stripMargin
+  val dedupClustersOracle: String = clustersOracle(minhashPairsCtes,
+    Seq(("simpairs", "doc1", "doc2")), "documents", "doc_id", "doc")
 
   /** Multi-evidence clustering: a production dedup pass unions EVERY
     * near-dup signal before clustering — here the MinHash-Jaccard
@@ -818,31 +871,16 @@ object Dedup {
     */
   def dedupClustersMulti(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    clusterize(spark, sfDir,
+    clusterize(Tables.documents(spark, sfDir), "doc_id",
       minhashLshPairs(spark, sfDir).select($"doc1", $"doc2")
         .union(simhashPairsCorpus(spark, sfDir).select($"doc1", $"doc2"))
         .distinct())
   }
 
   lazy val dedupClustersMultiOracle: String =
-    s"""WITH RECURSIVE $minhashPairsCtes, $simhashPairsCtes, edges AS (
-       |  SELECT doc1 AS src, doc2 AS dst FROM simpairs
-       |  UNION ALL SELECT doc2, doc1 FROM simpairs
-       |  UNION ALL SELECT doc1, doc2 FROM hampairs
-       |  UNION ALL SELECT doc2, doc1 FROM hampairs
-       |), reach AS (
-       |  SELECT doc_id AS doc, doc_id AS lab FROM documents
-       |  UNION
-       |  SELECT e.src, r.lab FROM reach r JOIN edges e ON e.dst = r.doc
-       |), cc AS (
-       |  SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
-       |), sizes AS (
-       |  SELECT cluster_id, count(*) AS cluster_size FROM cc GROUP BY 1
-       |)
-       |SELECT c.doc AS doc_id, c.cluster_id, s.cluster_size,
-       |       (c.doc = c.cluster_id) AS is_keeper
-       |FROM cc c JOIN sizes s ON c.cluster_id = s.cluster_id
-       |ORDER BY doc_id""".stripMargin
+    clustersOracle(s"$minhashPairsCtes, $simhashPairsCtes",
+      Seq(("simpairs", "doc1", "doc2"), ("hampairs", "doc1", "doc2")),
+      "documents", "doc_id", "doc")
 
   /** Skew-robust multi-evidence clustering: [[dedupClustersMulti]] with
     * the MinHash evidence drawn from [[minhashLshCapped]] — the
@@ -866,7 +904,7 @@ object Dedup {
   def dedupClustersMultiCapped(spark: SparkSession, sfDir: String,
                                maxDf: Int = -1): DataFrame = {
     import spark.implicits._
-    clusterize(spark, sfDir,
+    clusterize(Tables.documents(spark, sfDir), "doc_id",
       minhashLshCappedPairs(spark, sfDir, maxDf).select($"doc1", $"doc2")
         .union(simhashPairsCorpus(spark, sfDir).select($"doc1", $"doc2"))
         .distinct())
@@ -876,53 +914,25 @@ object Dedup {
     * chain ends in `csimpairs(doc1, doc2, sim)`; cap derived from the
     * corpus via [[autoMaxDfDuck]] (≡ the Scala side's [[autoMaxDf]] at
     * every SF). */
-  private lazy val minhashCappedPairsCtes: String = {
-    val bandSelects = (0 until K / 2).map(b =>
-      s"SELECT doc_id, $b AS band_idx, (s${2 * b} * $SH + s${2 * b + 1}) % $P AS band_hash FROM sig")
-      .mkString("\n  UNION ALL ")
-    val simExpr = (0 until K)
-      .map(j => s"(CASE WHEN a.s$j = b.s$j THEN 1 ELSE 0 END)").mkString(" + ")
+  private lazy val minhashCappedPairsCtes: String =
     s"""$minhashSigCtes, bands AS (
-       |  $bandSelects
+       |  ${bandSelectsDuck("sig")}
        |), keptbands AS (
        |  SELECT b.* FROM bands b JOIN (
        |    SELECT band_idx, band_hash FROM bands GROUP BY 1, 2
        |    HAVING count(*) <= $autoMaxDfDuck
        |  ) kb USING (band_idx, band_hash)
-       |), clshpairs AS (
-       |  SELECT DISTINCT x.doc_id AS doc1, y.doc_id AS doc2
-       |  FROM keptbands x JOIN keptbands y ON x.band_idx = y.band_idx
-       |    AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id
-       |), csimpairs AS (
-       |  SELECT p.doc1, p.doc2, CAST(($simExpr) AS DOUBLE) / $K AS sim
-       |  FROM clshpairs p JOIN sig a ON p.doc1 = a.doc_id JOIN sig b ON p.doc2 = b.doc_id
-       |  WHERE CAST(($simExpr) AS DOUBLE) / $K >= 0.5
-       |)""".stripMargin
-  }
+       |), ${bandPairsCte("clshpairs", "keptbands")}, """.stripMargin +
+      simPairsCte("csimpairs", "clshpairs")
 
   val minhashLshCappedOracle: String =
     s"""WITH $minhashCappedPairsCtes
        |SELECT doc1, doc2, sim FROM csimpairs ORDER BY doc1, doc2""".stripMargin
 
   lazy val dedupClustersMultiCappedOracle: String =
-    s"""WITH RECURSIVE $minhashCappedPairsCtes, $simhashPairsCtes, edges AS (
-       |  SELECT doc1 AS src, doc2 AS dst FROM csimpairs
-       |  UNION ALL SELECT doc2, doc1 FROM csimpairs
-       |  UNION ALL SELECT doc1, doc2 FROM hampairs
-       |  UNION ALL SELECT doc2, doc1 FROM hampairs
-       |), reach AS (
-       |  SELECT doc_id AS doc, doc_id AS lab FROM documents
-       |  UNION
-       |  SELECT e.src, r.lab FROM reach r JOIN edges e ON e.dst = r.doc
-       |), cc AS (
-       |  SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
-       |), sizes AS (
-       |  SELECT cluster_id, count(*) AS cluster_size FROM cc GROUP BY 1
-       |)
-       |SELECT c.doc AS doc_id, c.cluster_id, s.cluster_size,
-       |       (c.doc = c.cluster_id) AS is_keeper
-       |FROM cc c JOIN sizes s ON c.cluster_id = s.cluster_id
-       |ORDER BY doc_id""".stripMargin
+    clustersOracle(s"$minhashCappedPairsCtes, $simhashPairsCtes",
+      Seq(("csimpairs", "doc1", "doc2"), ("hampairs", "doc1", "doc2")),
+      "documents", "doc_id", "doc")
 
   // ---------------------------------------------------------------- simhash
 
@@ -1021,27 +1031,6 @@ object Dedup {
 
   // ------------------------------------------------------------- 3-gram jaccard
 
-  /** Exact n-gram Jaccard near-dup with PPJoin-style prefix filtering.
-    *
-    * The naive inverted-index self-join on ALL shingles costs
-    * Σ_shingle c² — on a dense shared-vocabulary corpus the hottest
-    * shingle buckets dominate (39 s of the sf0.1 bench). The prefix
-    * filter is an EXACT optimization: order shingles globally by
-    * rarity; two sets with Jaccard ≥ t must share a shingle among each
-    * set's first ⌊(1−t)·n⌋+1 rarest shingles, so candidates come from
-    * joining only those prefixes (the dense head buckets drop out of
-    * the join entirely), then each candidate pair is verified with a
-    * true intersection — output set provably identical to all-pairs,
-    * which is why the DuckDB oracle can stay the naive formulation.
-    *
-    * Scale notes: the rarity dictionary (distinct shingles) is ranked
-    * via range-partition + sortWithinPartitions + zipWithIndex —
-    * contiguous global ids with every partition ranking in parallel,
-    * no single-task window even at 100 TB vocabulary. The verify step
-    * broadcasts the doc→shingle-id arrays (5 k docs ≈ 6 MB; at larger
-    * corpora this becomes a shuffled join on doc_id — flip the
-    * broadcast() hint).
-    */
   /** Shared n-gram front end: documents → rarity-sorted shingle-id
     * arrays, localCheckpoint-materialized (feeds multiple join sides in
     * every consumer — [[ngramJaccard]]'s two self-join sides + two
@@ -1231,6 +1220,27 @@ object Dedup {
       .select($"doc1", $"doc2", $"inter_cnt", $"jaccard")
   }
 
+  /** Exact n-gram Jaccard near-dup with PPJoin-style prefix filtering.
+    *
+    * The naive inverted-index self-join on ALL shingles costs
+    * Σ_shingle c² — on a dense shared-vocabulary corpus the hottest
+    * shingle buckets dominate (39 s of the sf0.1 bench). The prefix
+    * filter is an EXACT optimization: order shingles globally by
+    * rarity; two sets with Jaccard ≥ t must share a shingle among each
+    * set's first ⌊(1−t)·n⌋+1 rarest shingles, so candidates come from
+    * joining only those prefixes (the dense head buckets drop out of
+    * the join entirely), then each candidate pair is verified with a
+    * true intersection — output set provably identical to all-pairs,
+    * which is why the DuckDB oracle can stay the naive formulation.
+    *
+    * Scale notes: the rarity dictionary (distinct shingles) is ranked
+    * via range-partition + sortWithinPartitions + zipWithIndex —
+    * contiguous global ids with every partition ranking in parallel,
+    * no single-task window even at 100 TB vocabulary. The verify step
+    * broadcasts the doc→shingle-id arrays (5 k docs ≈ 6 MB; at larger
+    * corpora this becomes a shuffled join on doc_id — flip the
+    * broadcast() hint).
+    */
   def ngramJaccard(spark: SparkSession, sfDir: String, threshold: Double = 0.2): DataFrame = {
     import spark.implicits._
     val enc = shingleEncoded(spark, sfDir)
@@ -1330,6 +1340,35 @@ object Dedup {
        |WHERE CAST(i.inter_cnt AS DOUBLE) / (s1.n + s2.n - i.inter_cnt) >= $threshold
        |ORDER BY doc1, doc2""".stripMargin
 
+  /** Winnowing-selected fingerprint postings (doc_id, fp) — the
+    * shared front end of [[dedupSubstringFrom]] and the df-cap
+    * telemetry ([[substringDfCurve]], [[dedupCandidateStats]]).
+    * localCheckpoint: feeds the df cap and both join sides.
+    */
+  private def winnowSelected(docs: DataFrame, k: Int, radius: Int): DataFrame =
+    docs
+      .selectExpr("doc_id", s"explode(winnow_hashes(text, $k, $radius)) as fp")
+      .localCheckpoint()
+
+  /** Core over any (doc_id, text) frame — the query below binds it to
+    * the documents table; the planted-run property test drives it over
+    * synthetic corpora.
+    */
+  def dedupSubstringFrom(docs: DataFrame, k: Int, radius: Int,
+                         minShared: Int, maxDf: Int): DataFrame = {
+    import docs.sparkSession.implicits._
+    val sel = winnowSelected(docs, k, radius)
+    val keep = sel.groupBy($"fp").agg(count(lit(1)).as("df"))
+      .where($"df" <= maxDf).select($"fp")
+    val kept = sel.join(keep, "fp")
+    kept.select($"fp", $"doc_id".as("doc1"))
+      .join(kept.select($"fp", $"doc_id".as("doc2")), "fp")
+      .where($"doc1" < $"doc2")
+      .groupBy($"doc1", $"doc2").agg(count(lit(1)).as("shared_fp"))
+      .where($"shared_fp" >= minShared)
+      .orderBy($"doc1", $"doc2")
+  }
+
   /** Substring-level duplicate candidates (winnowing / MOSS family):
     * two documents sharing VERBATIM character runs — quotation,
     * boilerplate injection, copy-paste — that token-set tiers miss
@@ -1348,35 +1387,6 @@ object Dedup {
     * guard the LSH tiers use); >= minShared distinct shared
     * fingerprints cuts single-window noise.
     */
-  /** Core over any (doc_id, text) frame — the query below binds it to
-    * the documents table; the planted-run property test drives it over
-    * synthetic corpora.
-    */
-  /** Winnowing-selected fingerprint postings (doc_id, fp) — the
-    * shared front end of [[dedupSubstringFrom]] and the df-cap
-    * telemetry ([[substringDfCurve]], [[dedupCandidateStats]]).
-    * localCheckpoint: feeds the df cap and both join sides.
-    */
-  private def winnowSelected(docs: DataFrame, k: Int, radius: Int): DataFrame =
-    docs
-      .selectExpr("doc_id", s"explode(winnow_hashes(text, $k, $radius)) as fp")
-      .localCheckpoint()
-
-  def dedupSubstringFrom(docs: DataFrame, k: Int, radius: Int,
-                         minShared: Int, maxDf: Int): DataFrame = {
-    import docs.sparkSession.implicits._
-    val sel = winnowSelected(docs, k, radius)
-    val keep = sel.groupBy($"fp").agg(count(lit(1)).as("df"))
-      .where($"df" <= maxDf).select($"fp")
-    val kept = sel.join(keep, "fp")
-    kept.select($"fp", $"doc_id".as("doc1"))
-      .join(kept.select($"fp", $"doc_id".as("doc2")), "fp")
-      .where($"doc1" < $"doc2")
-      .groupBy($"doc1", $"doc2").agg(count(lit(1)).as("shared_fp"))
-      .where($"shared_fp" >= minShared)
-      .orderBy($"doc1", $"doc2")
-  }
-
   def dedupSubstring(spark: SparkSession, sfDir: String, k: Int = 24,
                      radius: Int = 7, minShared: Int = 2,
                      maxDf: Int = -1): DataFrame =
@@ -1422,23 +1432,6 @@ object Dedup {
        |GROUP BY 1, 2 HAVING count(*) >= $minShared
        |ORDER BY doc1, doc2""".stripMargin
 
-  /** Asymmetric containment near-dups: C(A→B) = |A∩B| / |A| ≥ t —
-    * the dup mode Jaccard structurally misses: a short document pasted
-    * verbatim inside a much longer one has tiny Jaccard (the union is
-    * dominated by B) and is pruned by the PPJoin length filter before
-    * scoring, but its containment is ~1. This is quotation/boilerplate/
-    * subset-republication detection, run as its own evidence tier.
-    *
-    * Exact candidate rule (prefix pigeonhole on the CONTAINED side
-    * only): if C ≥ t then A∩B must touch the first
-    * ⌊(1−t)·|A|⌋+1 rarest ids of A — missing all of them caps the
-    * intersection below t·|A|. So the query side explodes only that
-    * prefix while the index side posts every shingle (linear in the
-    * corpus; the rarity sort biases joins toward low-df ids, and a
-    * dedup_substring-style df cap is the knob for boilerplate-heavy
-    * corpora). Verify is the exact sorted-merge intersection; same
-    * broadcast→shuffle verify flip as [[ngramJaccard]].
-    */
   /** Contained-side rarest-prefix posting rows (doc_id, n, ppos, pid) —
     * shared by [[dedupContainment]]'s candidate stage and the
     * candidate telemetry (row count is what telemetry reads; the ppos
@@ -1509,6 +1502,23 @@ object Dedup {
       .select($"doc1", $"doc2", $"inter_cnt", $"containment")
   }
 
+  /** Asymmetric containment near-dups: C(A→B) = |A∩B| / |A| ≥ t —
+    * the dup mode Jaccard structurally misses: a short document pasted
+    * verbatim inside a much longer one has tiny Jaccard (the union is
+    * dominated by B) and is pruned by the PPJoin length filter before
+    * scoring, but its containment is ~1. This is quotation/boilerplate/
+    * subset-republication detection, run as its own evidence tier.
+    *
+    * Exact candidate rule (prefix pigeonhole on the CONTAINED side
+    * only): if C ≥ t then A∩B must touch the first
+    * ⌊(1−t)·|A|⌋+1 rarest ids of A — missing all of them caps the
+    * intersection below t·|A|. So the query side explodes only that
+    * prefix while the index side posts every shingle (linear in the
+    * corpus; the rarity sort biases joins toward low-df ids, and a
+    * dedup_substring-style df cap is the knob for boilerplate-heavy
+    * corpora). Verify is the exact sorted-merge intersection; same
+    * broadcast→shuffle verify flip as [[ngramJaccard]].
+    */
   def dedupContainment(spark: SparkSession, sfDir: String,
                        threshold: Double = 0.8): DataFrame = {
     import spark.implicits._
@@ -1682,8 +1692,6 @@ object Dedup {
     // so max(occ ≤ cap) per distinct pair IS the capped tier's
     // candidate set, and the signature-agreement estimate is computed
     // once per distinct pair.
-    val simExprM = (0 until K)
-      .map(j => s"(case when x.s$j = y.s$j then 1 else 0 end)").mkString(" + ")
     val mBands = minhashBandRows(spark, sfDir)
       .withColumn("occ", count(lit(1)).over(
         Window.partitionBy($"band_idx", $"band_hash")))
@@ -1695,7 +1703,7 @@ object Dedup {
           col("x.band_hash") === col("y.band_hash") &&
           col("x.doc_id") < col("y.doc_id"))
       .selectExpr("x.doc_id as doc1", "y.doc_id as doc2",
-        s"cast(($simExprM) as double) / $K as sim",
+        s"$sigAgreeSpark as sim",
         s"x.occ <= $dfCapN as kept")
       .groupBy($"doc1", $"doc2")
       .agg(max($"sim").as("sim"), max($"kept").as("capped_kept"))
@@ -1732,17 +1740,9 @@ object Dedup {
                                 k: Int = 24, radius: Int = 7,
                                 minShared: Int = 2, maxDf: Int = 10): String = {
     // m-prefixed minhash chain built from the shared `toks` CTE (the
-    // sig formulas mirror minhashSigCtes; names differ to avoid CTE
+    // sig formulas are minhashSigCtes'; names differ to avoid CTE
     // collisions with the ngram chain's toks/inv); the bucket cap is
     // corpus-derived (autoMaxDfDuck) like the live query's autoMaxDf
-    val sigColsM = (0 until K).map(j =>
-      s"list_min(list_transform(sh, v$j -> (v$j * ${MinhashA(j)} + ${MinhashB(j)}) % $P)) AS s$j")
-      .mkString(",\n         ")
-    val mBandSelects = (0 until K / 2).map(b =>
-      s"SELECT doc_id, $b AS band_idx, (s${2 * b} * $SH + s${2 * b + 1}) % $P AS band_hash FROM msig")
-      .mkString("\n  UNION ALL ")
-    val simExprM = (0 until K)
-      .map(j => s"(CASE WHEN a.s$j = b.s$j THEN 1 ELSE 0 END)").mkString(" + ")
     s"""WITH toks AS (
        |  SELECT doc_id, $tokensDuck AS tokens FROM documents
        |), shingled AS (
@@ -1832,9 +1832,9 @@ object Dedup {
        |    ((tharr[sj + 1] * $SH + tharr[sj + 2]) % $P
        |     * $SH + tharr[sj + 3]) % $P) AS sh FROM mth
        |), msig AS (
-       |  SELECT doc_id, $sigColsM FROM mshc
+       |  SELECT doc_id, $sigColsDuck FROM mshc
        |), mbands AS (
-       |  $mBandSelects
+       |  ${bandSelectsDuck("msig")}
        |), mocc AS (
        |  SELECT band_idx, band_hash, count(*) AS occ FROM mbands GROUP BY 1, 2
        |), mb AS (
@@ -1849,7 +1849,7 @@ object Dedup {
        |  GROUP BY 1, 2
        |), msim AS (
        |  SELECT p.doc1, p.doc2, p.capped_kept,
-       |         CAST(($simExprM) AS DOUBLE) / $K AS sim
+       |         $sigAgreeDuck AS sim
        |  FROM mpairs p JOIN msig a ON p.doc1 = a.doc_id
        |                JOIN msig b ON p.doc2 = b.doc_id
        |)

@@ -80,12 +80,13 @@ object Pipelines {
       .select($"doc1", $"doc2", lit("containment").as("tier"))
     ParquetSink.writePartitioned(mh.union(mhc).union(sh).union(ct),
       s"$outDir/dedup_pairs", Seq("tier"))
-    Dedup.clusterize(spark, sfDir, pairs(spark, outDir, Seq("minhash")))
+    val docs = Tables.documents(spark, sfDir)
+    Dedup.clusterize(docs, "doc_id", pairs(spark, outDir, Seq("minhash")))
       .write.mode("overwrite").parquet(s"$outDir/clusters")
-    Dedup.clusterize(spark, sfDir,
+    Dedup.clusterize(docs, "doc_id",
         pairs(spark, outDir, Seq("minhash", "simhash")).distinct())
       .write.mode("overwrite").parquet(s"$outDir/clusters_multi")
-    Dedup.clusterize(spark, sfDir,
+    Dedup.clusterize(docs, "doc_id",
         pairs(spark, outDir, Seq("minhash_capped", "simhash")).distinct())
       .write.mode("overwrite").parquet(s"$outDir/clusters_multi_capped")
     // band buckets of the INGESTED base (signatures ride in-bucket),
@@ -193,7 +194,8 @@ object Pipelines {
     // its blocks on exit or a long-running stream leaks one per batch
     graft.streaming.BlockHygiene.releasingNewPersists(spark) {
     val bands = graft.streaming.BlockHygiene.checkpointTracked(
-      Dedup.minhashBucketsFrom(batch.withColumn("is_new", lit(true)))
+      Dedup.minhashBucketsFrom(
+          batch.select(col("doc_id"), col("text"), lit(true).as("is_new")))
         .withColumn("pb", pmod(col("band_hash"), lit(BucketPartitions))))
     val base = spark.read.parquet(s"$outDir/minhash_buckets")
       .where(col("batch_id") < id)
@@ -544,25 +546,16 @@ object Pipelines {
                     excludeSelfId: Boolean = false): DataFrame = {
     import spark.implicits._
     val cent = spark.read.parquet(s"$outDir/ann_centroids")
-    val np = if (nProbe > 0) nProbe
-             else Similarity.autoNProbe(cent.count().toInt)
-    val q = queries.selectExpr("vec_id", "cast(v as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+    val np = Similarity.probesFor(nProbe, cent.count().toInt)
+    val q = Similarity.withNorm(queries, "v", "vec_id")
     val probes = Similarity.ivfRankedFrom(q, cent, np)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"), $"cell")
       .withColumn("pc", pmod($"cell", lit(AnnPartitions)))
     val assign = spark.read.parquet(s"$outDir/ann_assign")
     val cand = probes.join(assign, Seq("pc", "cell"))
     val kept = if (excludeSelfId) cand.where($"query_id" =!= $"vec_id") else cand
-    kept
-      .withColumn("cosine", expr("vec_dot(qv, v) / (qn * nrm)"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"query_id")
-          .orderBy($"cosine".desc, $"vec_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
+    Similarity.rankTopK(
+      kept.withColumn("cosine", expr("vec_dot(qv, v) / (qn * nrm)")), k, "vec_id")
   }
 
   /** ANN serving from the PQ snapshot — ADC-score stored CODES against
@@ -584,10 +577,8 @@ object Pipelines {
                       excludeSelfId: Boolean = false): DataFrame = {
     import spark.implicits._
     val cent = spark.read.parquet(s"$outDir/ann_centroids")
-    val np = if (nProbe > 0) nProbe
-             else Similarity.autoNProbe(cent.count().toInt)
-    val q = queries.selectExpr("vec_id", "cast(v as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+    val np = Similarity.probesFor(nProbe, cent.count().toInt)
+    val q = Similarity.withNorm(queries, "v", "vec_id")
     val cb = spark.read.parquet(s"$outDir/pq_codebook")
     // the ADC stride is a property of the SNAPSHOT (its codebook's
     // entries-per-subspace), not of the live tier's PqK constant;
@@ -729,16 +720,12 @@ object Pipelines {
                           basePred: String =
                             s"NOT (${Similarity.EmbIncrNewGate})"): Unit = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, sfDir)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+    val e = Similarity.vectors(spark, sfDir)
     // geometry frozen from the FULL snapshot corpus (base + the gated
     // pending batch) — the live incremental query derives C and the
     // caps from base+batch together, so the stored path must too for
     // row-identity (PipelinesSpec pins it)
-    val c = Similarity.autoCentroids(e.count())
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
+    val cent = Similarity.seededCentroids(e, Similarity.autoCentroids(e.count()))
     cent.write.mode("overwrite").parquet(s"$outDir/emb_centroids")
     val assign = Similarity.ivfRankedFrom(e.where(expr(basePred)), cent, 1)
       .select($"vec_id", $"v", $"nrm", $"cell", $"csim")
@@ -838,9 +825,8 @@ object Pipelines {
                               outDir: String,
                               judgedPred: String = Similarity.EmbIncrNewGate,
                               threshold: Double = 0.4): DataFrame = {
-    val q = Tables.embeddings(spark, sfDir).where(expr(judgedPred))
-      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+    val q = Similarity.withNorm(
+      Tables.embeddings(spark, sfDir).where(expr(judgedPred)), "embedding", "vec_id")
     embDedupJudge(q, Long.MaxValue, outDir, threshold)._1
   }
 
@@ -872,9 +858,7 @@ object Pipelines {
     // the ranked-cells checkpoint lives exactly one batch: release its
     // blocks on exit or a long-running stream leaks one per batch
     graft.streaming.BlockHygiene.releasingNewPersists(spark) {
-      val q = batch
-        .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-        .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+      val q = Similarity.withNorm(batch, "embedding", "vec_id")
       val (verdicts, batchAssign) = embDedupJudge(q, id, outDir, threshold)
       verdicts.withColumn("batch_id", lit(id))
         .write.mode("overwrite")
@@ -932,8 +916,7 @@ object Pipelines {
                        batch: DataFrame): DataFrame = {
     import spark.implicits._
     val protos = broadcast(spark.read.parquet(s"$outDir/protos"))
-    batch.selectExpr("vec_id", "label", "cast(v as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+    Similarity.withNorm(batch, "v", "vec_id", "label")
       .join(protos, "label")
       .withColumn("proto_cos", expr("vec_dot(v, centv) / (nrm * centn)"))
       .selectExpr("vec_id", "label", "proto_cos",

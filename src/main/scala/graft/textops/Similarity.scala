@@ -78,15 +78,88 @@ object Similarity {
       s"list_transform(list_zip($a, $b), zp$sfx -> zp$sfx[1] * zp$sfx[2])), " +
       s"(za$sfx, zb$sfx) -> za$sfx + zb$sfx)"
 
-  private def vectors(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.embeddings(spark, sfDir)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-      .selectExpr("vec_id", "v", s"sqrt(${dotSpark("v", "v", "n")}) as nrm")
+  /** The vector load every tier and stored-index serve starts from:
+    * the `keep` columns, `src` cast to `v: array<double>`, and its norm
+    * `nrm`. */
+  private[textops] def withNorm(df: DataFrame, src: String,
+                                keep: String*): DataFrame =
+    df.selectExpr(keep :+ s"cast($src as array<double>) as v": _*)
+      .selectExpr(keep :+ "v" :+ s"sqrt(${dotSpark("v", "v", "n")}) as nrm": _*)
+
+  private[textops] def vectors(spark: SparkSession, sfDir: String): DataFrame =
+    withNorm(Tables.embeddings(spark, sfDir), "embedding", "vec_id")
+
+  /** DuckDB twin of [[vectors]]: the `e` (cast) and `n` (norm) CTEs. */
+  private val vecCtes: String =
+    s"""e AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+       |), n AS (
+       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
+       |)""".stripMargin
 
   /** Embedding corpus size — parquet row-group metadata count, one
     * cheap job per query invocation. */
   private def nVecs(spark: SparkSession, sfDir: String): Long =
     Tables.embeddings(spark, sfDir).count()
+
+  /** The QA query panel's modulus: `sampleMod` if positive, else
+    * [[autoSampleMod]] of the corpus size. */
+  private def panelMod(spark: SparkSession, sfDir: String,
+                       sampleMod: Int): Int =
+    if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
+
+  /** IVF cell count: `nCentroids` if positive, else [[autoCentroids]]
+    * of the corpus size `n` (evaluated only then). */
+  private def cellsFor(nCentroids: Int, n: => Long): Int =
+    if (nCentroids > 0) nCentroids else autoCentroids(n)
+
+  /** IVF probe width: `nProbe` if positive, else [[autoNProbe]] of the
+    * cell count `c` (evaluated only then). */
+  private[textops] def probesFor(nProbe: Int, c: => Int): Int =
+    if (nProbe > 0) nProbe else autoNProbe(c)
+
+  /** The seeded IVF centroid table: the first `c` vectors of `e`
+    * (vec_id < c — deterministic, broadcastable). */
+  private[textops] def seededCentroids(e: DataFrame, c: Int): DataFrame =
+    e.where(col("vec_id") < c)
+      .select(col("vec_id").as("cent_id"), col("v").as("centv"),
+        col("nrm").as("centn"))
+
+  /** DuckDB twin of [[seededCentroids]] over the `n` CTE. */
+  private def seededCentCte(name: String, c: String = gC): String =
+    s"""$name AS (
+       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $c
+       |)""".stripMargin
+
+  /** The CTE head of every seeded-IVF oracle: `geom`, the vectors
+    * `e`/`n` and the seeded centroid table `cent`. */
+  private lazy val seededIvfCtes: String =
+    s"""$geomCte, $vecCtes, ${seededCentCte("cent")}"""
+
+  /** The CTE head of every trained-IVF oracle: `geom`, `e`/`n`, the
+    * seed table `c0` and two unrolled Lloyd rounds ending in the
+    * trained centroid table `c2n` ([[trainedCentroids]] at 2 rounds). */
+  private lazy val trainedIvfCtes: String =
+    s"""$geomCte, $vecCtes, ${seededCentCte("c0")}, """ +
+      s"""${lloydRoundCte(1, "c0")}, ${lloydRoundCte(2, "c1n")}"""
+
+  /** DuckDB twin of the IVF cell rank ([[ivfRankedFrom]]): `cols` of
+    * every (vector, centroid) pair of `n` × `cent`, plus `csim` if
+    * asked, and `crk` by affinity DESC, cent_id ASC. */
+  private def rankedCellsCte(cols: String = "vec_id, v, nrm, cent_id",
+                             csim: Boolean = false,
+                             cent: String = "cent"): String = {
+    val csimLine =
+      if (csim) s"\n         ${dotDuck("n.v", "c.centv", "s")} / (n.nrm * c.centn) AS csim,"
+      else ""
+    s"""rankedcells AS (
+       |  SELECT $cols,$csimLine
+       |         row_number() OVER (PARTITION BY vec_id ORDER BY
+       |           ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) DESC,
+       |           cent_id ASC) AS crk
+       |  FROM n CROSS JOIN $cent c
+       |)""".stripMargin
+  }
 
   /** Scale-adaptive index parameters. Fixed constants are the classic
     * flip-at-scale trap: C=16 cells over n vectors makes the IVF cell
@@ -198,41 +271,63 @@ object Similarity {
     * really wants it.
     */
   def similarityTopK(spark: SparkSession, sfDir: String, k: Int = 10,
-                     sampleMod: Int = -1): DataFrame = {
+                     sampleMod: Int = -1): DataFrame =
+    rankTopK(exactCandidates(spark, sfDir, panelMod(spark, sfDir, sampleMod)), k)
+
+  /** Every (panel query, other vector) pair with its exact cosine —
+    * the query side is the deterministic 1-in-`mod` panel. Feeds the
+    * brute-force top-k and every recall gate's ground truth. */
+  private def exactCandidates(spark: SparkSession, sfDir: String,
+                              mod: Int): DataFrame = {
     import spark.implicits._
-    val mod = if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
     val e = vectors(spark, sfDir)
     val q = e.where($"vec_id" % mod === 0)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
     val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
     q.join(c, $"query_id" =!= $"neighbor_id")
       .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"neighbor_id", $"cosine", $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
   }
+
+  /** The rank tail every exact-cosine top-k shares: per `query_id`,
+    * the `k` best candidates by cosine DESC, then candidate id ASC,
+    * numbered `rnk` 1..k (fewer when a query has fewer candidates).
+    * `cand` holds `(query_id, <nbr>, cosine)`; the candidate id column
+    * `nbr` comes out as `neighbor_id`. Unordered; see [[rankTopK]]. */
+  private[graft] def topKPerQuery(cand: DataFrame, k: Int,
+                                  nbr: String = "neighbor_id"): DataFrame =
+    cand
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("cosine").desc, col(nbr).asc)))
+      .where(col("rnk") <= k)
+      .select(col("query_id"), col(nbr).as("neighbor_id"), col("cosine"),
+        col("rnk").cast("int").as("rnk"))
+
+  /** [[topKPerQuery]] in presentation order (query_id, rnk). */
+  private[graft] def rankTopK(cand: DataFrame, k: Int,
+                              nbr: String = "neighbor_id"): DataFrame =
+    topKPerQuery(cand, k, nbr).orderBy(col("query_id"), col("rnk"))
+
+  /** DuckDB twin of [[rankTopK]] over a `from(query_id, neighbor_id,
+    * cosine)` CTE: the `r` CTE and the final select. */
+  private def rankTailSql(from: String, k: String): String =
+    s"""r AS (
+       |  SELECT query_id, neighbor_id, cosine,
+       |         row_number() OVER (PARTITION BY query_id
+       |                            ORDER BY cosine DESC, neighbor_id ASC) AS rnk
+       |  FROM $from
+       |)
+       |SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rnk
+       |FROM r WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
 
   def similarityTopKOracle(k: Int = 10, sampleMod: Int = -1): String = {
     val mod = if (sampleMod > 0) sampleMod.toString else gMod
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), p AS (
+    s"""WITH $geomCte, $vecCtes, p AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
        |         ${dotDuck("a.v", "b.v", "d")} / (a.nrm * b.nrm) AS cosine
        |  FROM n a JOIN n b ON a.vec_id <> b.vec_id
        |  WHERE a.vec_id % $mod = 0
-       |), r AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-       |  FROM p
-       |)
-       |SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rnk
-       |FROM r WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+       |), ${rankTailSql("p", k.toString)}""".stripMargin
   }
 
   /** Shared IVF stage: every vector scored against the C fixed
@@ -252,14 +347,9 @@ object Similarity {
     */
   private def ivfRanked(spark: SparkSession, sfDir: String,
                         nCentroids: Int, nProbe: Int): DataFrame = {
-    import spark.implicits._
-    val c = if (nCentroids > 0) nCentroids
-            else autoCentroids(nVecs(spark, sfDir))
-    val np = if (nProbe > 0) nProbe else autoNProbe(c)
+    val c = cellsFor(nCentroids, nVecs(spark, sfDir))
     val e = vectors(spark, sfDir)
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
-    ivfRankedFrom(e, cent, np)
+    ivfRankedFrom(e, seededCentroids(e, c), probesFor(nProbe, c))
   }
 
   /** [[ivfRanked]] WITHOUT the vector payload — `(vec_id, cell, csim,
@@ -272,17 +362,13 @@ object Similarity {
     */
   private def ivfRankedNarrow(spark: SparkSession, sfDir: String,
                               nCentroids: Int, nProbe: Int): DataFrame = {
-    import spark.implicits._
-    val c = if (nCentroids > 0) nCentroids
-            else autoCentroids(nVecs(spark, sfDir))
-    val np = if (nProbe > 0) nProbe else autoNProbe(c)
+    val c = cellsFor(nCentroids, nVecs(spark, sfDir))
+    val np = probesFor(nProbe, c)
     val e = vectors(spark, sfDir)
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
     // tracked checkpoint: plain localCheckpoint outside a bracket;
     // inside a foreachBatch bracket the block is swept per micro-batch
     graft.streaming.BlockHygiene.checkpointTracked(
-      e.crossJoin(flatCentRow(cent))
+      e.crossJoin(flatCentRow(seededCentroids(e, c)))
         .selectExpr("vec_id",
           s"posexplode(ivf_top_cells(v, nrm, cflat, cnorms, cids, $np)) " +
             "as (p0, tc)")
@@ -342,11 +428,8 @@ object Similarity {
                                        nCentroids: Int = -1)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val c = if (nCentroids > 0) nCentroids
-            else autoCentroids(nVecs(spark, sfDir))
     val e = vectors(spark, sfDir)
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
+    val cent = seededCentroids(e, cellsFor(nCentroids, nVecs(spark, sfDir)))
     val assign = ivfRankedFrom(e, cent, 1)
       .select($"vec_id", $"v", $"nrm", $"cell")
     (cent, assign)
@@ -370,9 +453,7 @@ object Similarity {
                                       c: Int, rounds: Int): DataFrame = {
     import spark.implicits._
     val e = vectors(spark, sfDir)
-    var cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
-      .localCheckpoint()
+    var cent = seededCentroids(e, c).localCheckpoint()
     for (_ <- 1 to rounds) {
       // fused argmax assignment (np = 1): no n·C rows, no rank window —
       // the same bit-exact order as the windowed form (ivfRankedFrom)
@@ -412,12 +493,18 @@ object Similarity {
   def similarityIvfTrained(spark: SparkSession, sfDir: String, k: Int = 5,
                            nCentroids: Int = -1, nProbe: Int = -1,
                            rounds: Int = 2): DataFrame = {
-    import spark.implicits._
-    val c = if (nCentroids > 0) nCentroids
-            else autoCentroids(nVecs(spark, sfDir))
-    val np = if (nProbe > 0) nProbe else autoNProbe(c)
+    val c = cellsFor(nCentroids, nVecs(spark, sfDir))
     val ranked = ivfRankedFrom(vectors(spark, sfDir),
-      trainedCentroids(spark, sfDir, c, rounds), np)
+      trainedCentroids(spark, sfDir, c, rounds), probesFor(nProbe, c))
+    rankTopK(ivfCandidates(ranked), k, "vec_id")
+  }
+
+  /** IVF probe candidates from a ranked-cells table: every probe row
+    * `(query_id, cell)` joined with the vectors assigned (crk = 1) to
+    * that cell, scored by exact cosine — `(query_id, vec_id, cosine)`
+    * for [[rankTopK]]. */
+  private def ivfCandidates(ranked: DataFrame): DataFrame = {
+    import ranked.sparkSession.implicits._
     val assign = ranked.where($"crk" === 1)
       .select($"vec_id", $"v", $"nrm", $"cell")
     val probes = ranked
@@ -426,12 +513,6 @@ object Similarity {
     probes.join(assign, "cell")
       .where($"query_id" =!= $"vec_id")
       .withColumn("cosine", expr(s"${dotSpark("qv", "v", "d")} / (qn * nrm)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
   }
 
   /** Embedding-cosine near-duplicate pairs: (v1 < v2) with
@@ -466,19 +547,7 @@ object Similarity {
   }
 
   val dedupEmbeddingOracle: String =
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), cent AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), rankedcells AS (
-       |  SELECT vec_id, v, nrm, cent_id,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY
-       |           ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) DESC,
-       |           cent_id ASC) AS crk
-       |  FROM n CROSS JOIN cent c
-       |), assign AS (
+    s"""WITH $seededIvfCtes, ${rankedCellsCte()}, assign AS (
        |  SELECT vec_id, v, nrm, cent_id AS cell FROM rankedcells WHERE crk = 1
        |), probes AS (
        |  SELECT vec_id AS qid, v AS qv, nrm AS qn, cent_id AS cell
@@ -537,7 +606,7 @@ object Similarity {
       capProbe: Int = -1): DataFrame = {
     import spark.implicits._
     val n = nVecs(spark, sfDir)
-    val c = if (nCentroids > 0) nCentroids else autoCentroids(n)
+    val c = cellsFor(nCentroids, n)
     val cA = if (capAssign > 0) capAssign else autoCapAssign(n)
     val cP = if (capProbe > 0) capProbe else autoCapProbe(n)
     // The whole index pass runs NARROW — `(vec_id, cell, csim, crk)`,
@@ -586,20 +655,7 @@ object Similarity {
     * capped embedding pair evidence, reused by the pair query and the
     * cluster closure ([[dedupEmbeddingClustersOracle]]). */
   private[textops] lazy val embeddingCappedPairsCtes: String =
-    s"""$geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), cent AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), rankedcells AS (
-       |  SELECT vec_id, v, nrm, cent_id,
-       |         ${dotDuck("n.v", "c.centv", "s")} / (n.nrm * c.centn) AS csim,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY
-       |           ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) DESC,
-       |           cent_id ASC) AS crk
-       |  FROM n CROSS JOIN cent c
-       |), assign AS (
+    s"""$seededIvfCtes, ${rankedCellsCte(csim = true)}, assign AS (
        |  SELECT vec_id, v, nrm, cell FROM (
        |    SELECT vec_id, v, nrm, cent_id AS cell,
        |           row_number() OVER (PARTITION BY cent_id
@@ -715,20 +771,7 @@ object Similarity {
   /** DuckDB replay of [[dedupEmbeddingCappedCurve]] at the default
     * (geom-derived) caps. */
   val dedupEmbeddingCappedCurveOracle: String =
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), cent AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), rankedcells AS (
-       |  SELECT vec_id, cent_id,
-       |         ${dotDuck("n.v", "c.centv", "s")} / (n.nrm * c.centn) AS csim,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY
-       |           ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) DESC,
-       |           cent_id ASC) AS crk
-       |  FROM n CROSS JOIN cent c
-       |), lv AS (
+    s"""WITH $seededIvfCtes, ${rankedCellsCte("vec_id, cent_id", csim = true)}, lv AS (
        |  SELECT greatest(1, capa // 4) AS a1, greatest(1, capa // 2) AS a2,
        |         capa AS a3, capa * 2 AS a4,
        |         greatest(1, capp // 4) AS p1, greatest(1, capp // 2) AS p2,
@@ -813,39 +856,16 @@ object Similarity {
   def dedupEmbeddingClusters(spark: SparkSession, sfDir: String,
                              threshold: Double = 0.4): DataFrame = {
     import spark.implicits._
-    val pairs = embeddingCappedPairs(spark, sfDir, threshold)
-      .select($"vec1", $"vec2")
-    val nodes = Tables.embeddings(spark, sfDir).select($"vec_id")
-    val cc = Dedup.connectedComponents(nodes, pairs)
-      .select($"id".as("vec_id"), $"component".as("cluster_id"))
-    val sizes = cc.groupBy($"cluster_id")
-      .agg(count(lit(1)).as("cluster_size"))
-    cc.join(sizes, "cluster_id")
-      .select($"vec_id", $"cluster_id", $"cluster_size",
-        ($"vec_id" === $"cluster_id").as("is_keeper"))
-      .orderBy($"vec_id")
+    Dedup.clusterize(Tables.embeddings(spark, sfDir), "vec_id",
+      embeddingCappedPairs(spark, sfDir, threshold).select($"vec1", $"vec2"))
   }
 
   /** Oracle: transitive closure by recursive CTE (min reachable id =
     * component id) over the same capped pair evidence — the
     * embedding-tier twin of [[Dedup.dedupClustersOracle]]. */
   lazy val dedupEmbeddingClustersOracle: String =
-    s"""WITH RECURSIVE $embeddingCappedPairsCtes, edges AS (
-       |  SELECT vec1 AS src, vec2 AS dst FROM epairs
-       |  UNION ALL SELECT vec2, vec1 FROM epairs
-       |), reach AS (
-       |  SELECT vec_id AS vid, vec_id AS lab FROM embeddings
-       |  UNION
-       |  SELECT e.src, r.lab FROM reach r JOIN edges e ON e.dst = r.vid
-       |), cc AS (
-       |  SELECT vid, min(lab) AS cluster_id FROM reach GROUP BY vid
-       |), sizes AS (
-       |  SELECT cluster_id, count(*) AS cluster_size FROM cc GROUP BY 1
-       |)
-       |SELECT c.vid AS vec_id, c.cluster_id, s.cluster_size,
-       |       (c.vid = c.cluster_id) AS is_keeper
-       |FROM cc c JOIN sizes s ON c.cluster_id = s.cluster_id
-       |ORDER BY vec_id""".stripMargin
+    Dedup.clustersOracle(embeddingCappedPairsCtes,
+      Seq(("epairs", "vec1", "vec2")), "embeddings", "vec_id", "vid")
 
   /** Incremental (batch-vs-base) embedding dedup — the shape a 100 TB
     * embedding-dedup deployment actually runs: the corpus is indexed
@@ -922,37 +942,12 @@ object Similarity {
         expr(s"${dotSpark("qv", "ov", "d")} / (qn * onrm)").as("cosine"))
       .where($"cosine" >= threshold)
       .distinct()
-    val best = matches
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"qid").orderBy($"cosine".desc, $"oid".asc)))
-      .withColumn("n_dups", count(lit(1)).over(Window.partitionBy($"qid")))
-      .where($"rnk" === 1)
-      .select($"qid".as("vec_id"), $"oid".as("dup_of"),
-        $"cosine".as("best_cosine"), $"n_dups")
-    judged
-      .join(best, Seq("vec_id"), "left")
-      .selectExpr("vec_id", "dup_of is null as keep",
-        "cast(coalesce(n_dups, 0) as bigint) as n_dups",
-        "dup_of", "best_cosine")
-      .orderBy($"vec_id")
+    Dedup.keepFirstVerdicts(judged, "vec_id", matches, "qid", "cosine")
   }
 
   lazy val dedupEmbeddingIncrementalOracle: String = {
     val newGate = s"${TextHash.phDuck("CAST(vec_id AS VARCHAR) || '-incr'", "inc", 37)} % 10 = 0"
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), cent AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), rankedcells AS (
-       |  SELECT vec_id, v, nrm, cent_id,
-       |         ${dotDuck("n.v", "c.centv", "s")} / (n.nrm * c.centn) AS csim,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY
-       |           ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) DESC,
-       |           cent_id ASC) AS crk
-       |  FROM n CROSS JOIN cent c
-       |), assign AS (
+    s"""WITH $seededIvfCtes, ${rankedCellsCte(csim = true)}, assign AS (
        |  SELECT vec_id AS oid, v AS ov, nrm AS onrm, cell,
        |         ${newGate.replace("vec_id", "oid")} AS o_new
        |  FROM (
@@ -1014,7 +1009,7 @@ object Similarity {
                                threshold: Double = 0.4,
                                evalMod: Int = -1): DataFrame = {
     import spark.implicits._
-    val mod = if (evalMod > 0) evalMod else autoSampleMod(nVecs(spark, sfDir))
+    val mod = panelMod(spark, sfDir, evalMod)
     val e = vectors(spark, sfDir)
     val eval = e.where($"vec_id" % mod === 0)
       .select($"vec_id".as("eval_id"), $"v".as("evv"), $"nrm".as("en"))
@@ -1031,11 +1026,7 @@ object Similarity {
   }
 
   def embeddingDecontaminationOracle(threshold: Double = 0.4): String =
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), ev AS (
+    s"""WITH $geomCte, $vecCtes, ev AS (
        |  SELECT vec_id AS eval_id, v AS evv, nrm AS en
        |  FROM n WHERE vec_id % $gMod = 0
        |), tr AS (
@@ -1155,8 +1146,7 @@ object Similarity {
                                 nCentroids: Int = -1,
                                 rounds: Int = 2): DataFrame = {
     import spark.implicits._
-    val c = if (nCentroids > 0) nCentroids
-            else autoCentroids(nVecs(spark, sfDir))
+    val c = cellsFor(nCentroids, nVecs(spark, sfDir))
     val e = vectors(spark, sfDir)
     // TRAINED centroids, not seeded: the decision is about the index
     // you would build (IVFADC trains its coarse quantizer), and seeded
@@ -1182,13 +1172,7 @@ object Similarity {
   }
 
   lazy val embeddingSpectrumResidualOracle: String =
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), c0 AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), ${lloydRoundCte(1, "c0")}, ${lloydRoundCte(2, "c1n")}, rankedcells AS (
+    s"""WITH $trainedIvfCtes, rankedcells AS (
        |  SELECT n.vec_id, n.v, c.centv,
        |         row_number() OVER (PARTITION BY n.vec_id ORDER BY
        |           ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) DESC,
@@ -1323,37 +1307,20 @@ object Similarity {
     * per query from the probed cells.
     */
   def similarityIvf(spark: SparkSession, sfDir: String, k: Int = 5,
-                    nCentroids: Int = -1, nProbe: Int = -1): DataFrame = {
-    import spark.implicits._
-    val ranked = ivfRanked(spark, sfDir, nCentroids, nProbe)
-    // cell assignment = rank-1 row; probes = all nProbe rows
-    val assign = ranked.where($"crk" === 1)
-      .select($"vec_id", $"v", $"nrm", $"cell")
-    val probes = ranked
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"),
-        $"cell")
-    probes.join(assign, "cell")
-      .where($"query_id" =!= $"vec_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "v", "d")} / (qn * nrm)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
-  }
+                    nCentroids: Int = -1, nProbe: Int = -1): DataFrame =
+    rankTopK(ivfCandidates(ivfRanked(spark, sfDir, nCentroids, nProbe)), k, "vec_id")
 
   val similarityIvfOracle: String =
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), cent AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), scored AS (
+    s"WITH $seededIvfCtes, ${ivfTopKSql("cent")}"
+
+  /** DuckDB twin of [[ivfCandidates]] + [[rankTopK]] (k = 5) against
+    * the centroid CTE `cent`: `scored` → `rankedcells` → `assign` /
+    * `probes` → `cand` → the rank tail. */
+  private def ivfTopKSql(cent: String): String =
+    s"""scored AS (
        |  SELECT n.vec_id, n.v, n.nrm, c.cent_id,
        |         ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) AS csim
-       |  FROM n CROSS JOIN cent c
+       |  FROM n CROSS JOIN $cent c
        |), rankedcells AS (
        |  SELECT vec_id, v, nrm, cent_id, csim,
        |         row_number() OVER (PARTITION BY vec_id
@@ -1368,20 +1335,8 @@ object Similarity {
        |  SELECT p.query_id, a.vec_id AS neighbor_id,
        |         ${dotDuck("p.qv", "a.v", "d")} / (p.qn * a.nrm) AS cosine
        |  FROM probes p JOIN assign a ON p.cell = a.cell AND p.query_id <> a.vec_id
-       |), r AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-       |  FROM cand
-       |)
-       |SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rnk
-       |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
+       |), ${rankTailSql("cand", "5")}""".stripMargin
 
-  /** DuckDB replay of [[similarityIvfTrained]]: the two Lloyd rounds
-    * unroll into assign/sum/mean/coalesce/norm CTE blocks (the
-    * item_rank unrolled-iteration idiom), then the standard IVF
-    * rankedcells/probe/top-k tail runs against the trained table.
-    */
   /** One unrolled Lloyd round as a DuckDB CTE block (`a$r` assign →
     * `s$r` micro-unit sums → `m$r` means → `c$r`/`c${r}n` new centroid
     * table) — shared by the trained-IVF and cell-stats oracles. */
@@ -1414,40 +1369,13 @@ object Similarity {
          |  FROM c$r
          |)""".stripMargin
 
-  lazy val similarityIvfTrainedOracle: String = {
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), c0 AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), ${lloydRoundCte(1, "c0")}, ${lloydRoundCte(2, "c1n")}, scored AS (
-       |  SELECT n.vec_id, n.v, n.nrm, c.cent_id,
-       |         ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) AS csim
-       |  FROM n CROSS JOIN c2n c
-       |), rankedcells AS (
-       |  SELECT vec_id, v, nrm, cent_id, csim,
-       |         row_number() OVER (PARTITION BY vec_id
-       |                            ORDER BY csim DESC, cent_id ASC) AS crk
-       |  FROM scored
-       |), assign AS (
-       |  SELECT vec_id, v, nrm, cent_id AS cell FROM rankedcells WHERE crk = 1
-       |), probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, nrm AS qn, cent_id AS cell
-       |  FROM rankedcells WHERE crk <= $gNp
-       |), cand AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |         ${dotDuck("p.qv", "a.v", "d")} / (p.qn * a.nrm) AS cosine
-       |  FROM probes p JOIN assign a ON p.cell = a.cell AND p.query_id <> a.vec_id
-       |), r AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-       |  FROM cand
-       |)
-       |SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rnk
-       |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
-  }
+  /** DuckDB replay of [[similarityIvfTrained]]: the two Lloyd rounds
+    * unroll into assign/sum/mean/coalesce/norm CTE blocks (the
+    * item_rank unrolled-iteration idiom), then the standard IVF
+    * rankedcells/probe/top-k tail runs against the trained table.
+    */
+  lazy val similarityIvfTrainedOracle: String =
+    s"WITH $trainedIvfCtes, ${ivfTopKSql("c2n")}"
 
   /** Cell-occupancy balance telemetry for the IVF index — the ANN
     * analog of [[Dedup.dedupCandidateStats]]: one row per index
@@ -1464,7 +1392,7 @@ object Similarity {
                           nCentroids: Int = -1, rounds: Int = 2): DataFrame = {
     import spark.implicits._
     val n = nVecs(spark, sfDir)
-    val c = if (nCentroids > 0) nCentroids else autoCentroids(n)
+    val c = cellsFor(nCentroids, n)
     val hotT = 2L * (n / c)
     val e = vectors(spark, sfDir)
     def statsOf(label: String, cent: DataFrame): DataFrame =
@@ -1476,9 +1404,7 @@ object Similarity {
         .selectExpr(s"'$label' as index_variant", s"cast($c as int) as n_cells",
           "cells_used", "n_assigned", "occ_min", "occ_max",
           s"cast(n_assigned as double) / $c as occ_avg", "hot_cells")
-    statsOf("ivf_seeded",
-        e.where($"vec_id" < c)
-          .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn")))
+    statsOf("ivf_seeded", seededCentroids(e, c))
       .unionAll(statsOf("ivf_trained", trainedCentroids(spark, sfDir, c, rounds)))
       .orderBy($"index_variant")
   }
@@ -1510,13 +1436,7 @@ object Similarity {
          |       CAST(sum(CASE WHEN occ > $hotT THEN 1 ELSE 0 END) AS BIGINT)
          |         AS hot_cells
          |FROM $occ""".stripMargin
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), c0 AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), ${lloydRoundCte(1, "c0")}, ${lloydRoundCte(2, "c1n")},
+    s"""WITH $trainedIvfCtes,
        |${occCte("occs", "c0", "os")},
        |${occCte("occt", "c2n", "ot")}
        |${statsRow("ivf_seeded", "occs")}
@@ -1546,11 +1466,9 @@ object Similarity {
                     nCentroids: Int = -1, nProbe: Int = -1): DataFrame = {
     import spark.implicits._
     val n = nVecs(spark, sfDir)
-    val c = if (nCentroids > 0) nCentroids else autoCentroids(n)
-    val np = if (nProbe > 0) nProbe else autoNProbe(c)
+    val c = cellsFor(nCentroids, n)
+    val np = probesFor(nProbe, c)
     val e = vectors(spark, sfDir)
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
     // Round 18 (guide §8): the old form rode the FULL vector (and
     // computed the quantization lambdas once per join branch) through
     // the cell join and the rank window, because the exact re-rank
@@ -1570,7 +1488,7 @@ object Similarity {
           "array_max(transform(v, xa -> abs(xa))) as s")
         .selectExpr("vec_id", "nrm", "v", "s",
           "cast(transform(v, xq -> floor((xq * 127D) / s)) as array<double>) as q")
-        .crossJoin(flatCentRow(cent))
+        .crossJoin(flatCentRow(seededCentroids(e, c)))
         .selectExpr("vec_id", "nrm", "s", "q",
           s"posexplode(ivf_top_cells(v, nrm, cflat, cnorms, cids, $np)) " +
             "as (p0, tc)")
@@ -1592,7 +1510,7 @@ object Similarity {
         $"qn", $"nrm", $"rnk")
     val qvs = e.select($"vec_id".as("query_id"), $"v".as("qv"))
     val cvs = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"))
-    val small = n <= 100000L
+    val small = n <= Dedup.BroadcastReattachMaxVecs
     survivors
       .join(if (small) broadcast(qvs) else qvs, "query_id")
       .join(if (small) broadcast(cvs) else cvs, "neighbor_id")
@@ -1604,19 +1522,7 @@ object Similarity {
   }
 
   val similaritySq8Oracle: String =
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), cent AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), rankedcells AS (
-       |  SELECT vec_id, v, nrm, cent_id,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY
-       |           ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) DESC,
-       |           cent_id ASC) AS crk
-       |  FROM n CROSS JOIN cent c
-       |), scaled AS (
+    s"""WITH $seededIvfCtes, ${rankedCellsCte()}, scaled AS (
        |  SELECT vec_id, v, nrm, cent_id, crk,
        |         list_max(list_transform(v, xa -> abs(xa))) AS s
        |  FROM rankedcells
@@ -1667,30 +1573,6 @@ object Similarity {
     .map(j => s"slice(v, ${j * PqSub + 1}, $PqSub)")
     .mkString("array(", ", ", ")")
 
-  /** IVF + product-quantized ADC scoring with exact re-rank — the
-    * third compression rung of the ANN ladder (full-precision IVF →
-    * SQ8's 1 byte/dim → PQ's m codes/VECTOR, here 8 codes ≈ 8 B
-    * against 512 B of raw doubles). Each vector is encoded once:
-    * per subspace, the code of the nearest codebook entry by L2
-    * (argmax of dot(sub, cent) − ‖cent‖²/2 — same optimum, dot-only
-    * arithmetic both engines fold identically). A query never touches
-    * candidate vectors during scoring: it dots its own subvectors
-    * against the broadcast codebook once (the classic ADC lookup
-    * table, n×m×k rows), and a candidate's approximate score is the
-    * sum of m table lookups — relationally, an equi-join of the IVF
-    * candidate set against `codes` and `lut` on (query, subspace,
-    * code) plus a fixed-width sum. The m per-pair terms are floor-
-    * quantized to 1e-9 BIGINTs before summing so the aggregate is
-    * partition-order independent (the embedding_centroids micro-unit
-    * pattern); only the k ADC survivors per query are re-read at full
-    * precision for the exact cosine.
-    *
-    * Scale shape: codebook is O(m·k·d) — broadcast everywhere; codes
-    * and LUT build are narrow one-pass maps over the checkpointed IVF
-    * table; the ADC join shuffles on (query_id, j, code) with
-    * map-side partial sums. No stage touches raw vectors per
-    * candidate pair.
-    */
   /** The PQ index build — (ranked, cent, codes, lut); exposed for the
     * spec's ADC-identity check. */
   private[graft] def pqIndex(spark: SparkSession, sfDir: String,
@@ -1776,12 +1658,8 @@ object Similarity {
     * builders snapshot as `ann_centroids` without paying the full
     * assign pass. */
   private[textops] def ivfCentroids(spark: SparkSession, sfDir: String)
-      : DataFrame = {
-    import spark.implicits._
-    val c = autoCentroids(nVecs(spark, sfDir))
-    vectors(spark, sfDir).where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
-  }
+      : DataFrame =
+    seededCentroids(vectors(spark, sfDir), autoCentroids(nVecs(spark, sfDir)))
 
   /** Encode vectors `(vec_id, v)` against an arbitrary (possibly
     * trained, possibly stored) PQ codebook — per subspace, the code of
@@ -1884,6 +1762,30 @@ object Similarity {
     cent
   }
 
+  /** IVF + product-quantized ADC scoring with exact re-rank — the
+    * third compression rung of the ANN ladder (full-precision IVF →
+    * SQ8's 1 byte/dim → PQ's m codes/VECTOR, here 8 codes ≈ 8 B
+    * against 512 B of raw doubles). Each vector is encoded once:
+    * per subspace, the code of the nearest codebook entry by L2
+    * (argmax of dot(sub, cent) − ‖cent‖²/2 — same optimum, dot-only
+    * arithmetic both engines fold identically). A query never touches
+    * candidate vectors during scoring: it dots its own subvectors
+    * against the broadcast codebook once (the classic ADC lookup
+    * table, n×m×k rows), and a candidate's approximate score is the
+    * sum of m table lookups — relationally, an equi-join of the IVF
+    * candidate set against `codes` and `lut` on (query, subspace,
+    * code) plus a fixed-width sum. The m per-pair terms are floor-
+    * quantized to 1e-9 BIGINTs before summing so the aggregate is
+    * partition-order independent (the embedding_centroids micro-unit
+    * pattern); only the k ADC survivors per query are re-read at full
+    * precision for the exact cosine.
+    *
+    * Scale shape: codebook is O(m·k·d) — broadcast everywhere; codes
+    * and LUT build are narrow one-pass maps over the checkpointed IVF
+    * table; the ADC join shuffles on (query_id, j, code) with
+    * map-side partial sums. No stage touches raw vectors per
+    * candidate pair.
+    */
   def similarityPq(spark: SparkSession, sfDir: String, k: Int = 5,
                    nCentroids: Int = -1, nProbe: Int = -1): DataFrame = {
     import spark.implicits._
@@ -1934,19 +1836,7 @@ object Similarity {
     val adcExprDuck = (0 until PqM)
       .map(j => s"lut[codes[${j + 1}] + ${j * PqK + 1}]")
       .mkString(" + ")
-    s"""$geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), icent AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $gC
-       |), rankedcells AS (
-       |  SELECT vec_id, v, nrm, cent_id,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY
-       |           ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn) DESC,
-       |           cent_id ASC) AS crk
-       |  FROM n CROSS JOIN icent c
-       |), assign AS (
+    s"""$geomCte, $vecCtes, ${seededCentCte("icent")}, ${rankedCellsCte(cent = "icent")}, assign AS (
        |  SELECT vec_id, v, nrm, cent_id AS cell FROM rankedcells WHERE crk = 1
        |), js AS (
        |  SELECT unnest($jList) AS j
@@ -2012,19 +1902,21 @@ object Similarity {
     * no quality signal. */
   def similarityRecallPq(spark: SparkSession, sfDir: String, k: Int = 5,
                          sampleMod: Int = -1): DataFrame = {
+    val mod = panelMod(spark, sfDir, sampleMod)
+    recallVsExact(spark, sfDir, similarityPq(spark, sfDir, k), k, mod)
+  }
+
+  /** The recall tail every ANN quality gate shares: recall@k of an
+    * approximate top-k `(query_id, neighbor_id, …)` against the exact
+    * top-k ([[exactCandidates]] + [[topKPerQuery]]) on the 1-in-`mod`
+    * query panel — one row per panel query: hits, hits / k. */
+  private def recallVsExact(spark: SparkSession, sfDir: String,
+                            approxTopK: DataFrame, k: Int,
+                            mod: Int): DataFrame = {
     import spark.implicits._
-    val mod = if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
-    val e = vectors(spark, sfDir)
-    val q = e.where($"vec_id" % mod === 0)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val exact = q.join(c, $"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)))
-      .where($"rnk" <= k)
+    val exact = topKPerQuery(exactCandidates(spark, sfDir, mod), k)
       .select($"query_id", $"neighbor_id")
-    val approx = similarityPq(spark, sfDir, k)
+    val approx = approxTopK
       .where($"query_id" % mod === 0)
       .select($"query_id", $"neighbor_id", lit(1L).as("hit"))
     exact.join(approx, Seq("query_id", "neighbor_id"), "left_outer")
@@ -2035,18 +1927,35 @@ object Similarity {
       .orderBy($"query_id")
   }
 
-  def similarityRecallPqOracle(k: Int = 5, sampleMod: Int = -1): String = {
-    val mod = if (sampleMod > 0) sampleMod.toString else gMod
-    s"""WITH $pqCtes, exact AS (
+  /** DuckDB twin of the recall gates' ground truth: `exact(query_id,
+    * neighbor_id)`, the exact top-`k` of the 1-in-`mod` panel over `n`. */
+  private def exactTopKCte(k: Int, mod: String, sfx: String = "d"): String =
+    s"""exact AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
        |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY ${dotDuck("a.v", "b.v", "x")} / (a.nrm * b.nrm)
+       |             ORDER BY ${dotDuck("a.v", "b.v", sfx)} / (a.nrm * b.nrm)
        |               DESC, b.vec_id ASC) AS rnk
        |    FROM n a JOIN n b ON a.vec_id <> b.vec_id
        |    WHERE a.vec_id % $mod = 0
        |  ) WHERE rnk <= $k
-       |), approx AS (
+       |)""".stripMargin
+
+  /** DuckDB twin of [[recallVsExact]]'s aggregation over the `exact`
+    * and `approx(query_id, neighbor_id)` CTEs (IVF and LSH gates). */
+  private def recallSelectSql(k: Int): String =
+    s"""SELECT x.query_id,
+       |       CAST(sum(CASE WHEN ap.neighbor_id IS NULL THEN 0 ELSE 1 END)
+       |            AS BIGINT) AS hits,
+       |       CAST(CAST(sum(CASE WHEN ap.neighbor_id IS NULL THEN 0 ELSE 1 END)
+       |            AS BIGINT) AS DOUBLE) / $k AS recall
+       |FROM exact x LEFT JOIN approx ap
+       |  ON x.query_id = ap.query_id AND x.neighbor_id = ap.neighbor_id
+       |GROUP BY x.query_id ORDER BY x.query_id""".stripMargin
+
+  def similarityRecallPqOracle(k: Int = 5, sampleMod: Int = -1): String = {
+    val mod = if (sampleMod > 0) sampleMod.toString else gMod
+    s"""WITH $pqCtes, ${exactTopKCte(k, mod, "x")}, approx AS (
        |  SELECT query_id, neighbor_id, CAST(1 AS BIGINT) AS hit
        |  FROM rk WHERE rnk <= $k AND query_id % $mod = 0
        |)
@@ -2152,15 +2061,6 @@ object Similarity {
        |  JOIN (SELECT DISTINCT tbl, i FROM bt) f ON b.tbl = f.tbl
        |)""".stripMargin
 
-  /** LSH-bucketed ANN — the second scale path next to IVF: vectors
-    * whose signs agree on all b hyperplanes of SOME table land in the
-    * same (table, signature) bucket; candidates come from bucket
-    * equi-joins only (~L·n²/2^b pairs instead of n²), then exact-cosine
-    * rank. Near-uniform synthetic vectors are SRP's worst case, hence
-    * b = 8 and L = 4; clustered real embeddings bucket far more
-    * sharply. Recall is partial by design — the oracle replays the
-    * same candidate generation, keeping the gate exact.
-    */
   // --------------------------------------------- centroids & recall eval
 
   /** Per-label embedding centroids — the class-prototype aggregation a
@@ -2209,6 +2109,19 @@ object Similarity {
       |            AS DOUBLE) AS centroid
       |FROM ex GROUP BY label, dim ORDER BY label, dim""".stripMargin
 
+  /** The (label, centv, centn) prototype table [[embeddingOutliers]]
+    * ranks against — exposed so [[Pipelines.materializeProtos]] can
+    * persist it as the serving index for the streaming curation gate. */
+  private[graft] def protoTable(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    embeddingCentroids(spark, sfDir)
+      .groupBy($"label")
+      .agg(expr("transform(array_sort(collect_list(struct(dim, centroid))), cp -> cp.centroid)")
+        .as("centv"))
+      .selectExpr("label", "centv",
+        s"sqrt(${dotSpark("centv", "centv", "oc")}) as centn")
+  }
+
   /** Prototypicality-based data pruning (SSL-prototypes, Sorscher et
     * al. NeurIPS '22 "Beyond neural scaling laws"; the scoring half of
     * SemDeDup-style semantic curation): rank every embedding by cosine
@@ -2231,27 +2144,11 @@ object Similarity {
     * with the same two-level threshold upgrade path as
     * [[Sampling.corpusSample]] documented for few-label corpora.
     */
-  /** The (label, centv, centn) prototype table [[embeddingOutliers]]
-    * ranks against — exposed so [[Pipelines.materializeProtos]] can
-    * persist it as the serving index for the streaming curation gate. */
-  private[graft] def protoTable(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    embeddingCentroids(spark, sfDir)
-      .groupBy($"label")
-      .agg(expr("transform(array_sort(collect_list(struct(dim, centroid))), cp -> cp.centroid)")
-        .as("centv"))
-      .selectExpr("label", "centv",
-        s"sqrt(${dotSpark("centv", "centv", "oc")}) as centn")
-  }
-
   def embeddingOutliers(spark: SparkSession, sfDir: String,
                         outlierPct: Int = 5): DataFrame = {
     import spark.implicits._
     val cent = protoTable(spark, sfDir)
-    Tables.embeddings(spark, sfDir)
-      .selectExpr("vec_id", "label", "cast(embedding as array<double>) as v")
-      .selectExpr("vec_id", "label", "v",
-        s"sqrt(${dotSpark("v", "v", "ov")}) as nrm")
+    withNorm(Tables.embeddings(spark, sfDir), "embedding", "vec_id", "label")
       .join(broadcast(cent), "label")
       .withColumn("proto_cos", expr(s"${dotSpark("v", "centv", "op")} / (nrm * centn)"))
       .withColumn("n_label", count(lit(1)).over(Window.partitionBy($"label")))
@@ -2311,28 +2208,10 @@ object Similarity {
                        nCentroids: Int = -1, nProbe: Int = -1,
                        sampleMod: Int = -1,
                        trained: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val mod = if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
-    val e = vectors(spark, sfDir)
-    val q = e.where($"vec_id" % mod === 0)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val exact = q.join(c, $"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"neighbor_id")
-    val approx = (if (trained) similarityIvfTrained(spark, sfDir, k, nCentroids, nProbe)
-                  else similarityIvf(spark, sfDir, k, nCentroids, nProbe))
-      .where($"query_id" % mod === 0)
-      .select($"query_id", $"neighbor_id", lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left_outer")
-      .groupBy($"query_id")
-      .agg(sum(coalesce($"hit", lit(0L))).as("hits"))
-      .selectExpr("query_id", "hits",
-        s"cast(hits as double) / $k as recall")
-      .orderBy($"query_id")
+    val mod = panelMod(spark, sfDir, sampleMod)
+    recallVsExact(spark, sfDir,
+      if (trained) similarityIvfTrained(spark, sfDir, k, nCentroids, nProbe)
+      else similarityIvf(spark, sfDir, k, nCentroids, nProbe), k, mod)
   }
 
   def similarityRecallOracle(k: Int = 5, nCentroids: Int = -1,
@@ -2345,22 +2224,7 @@ object Similarity {
       else if (nCentroids > 0) autoNProbe(nCentroids).toString
       else gNp
     val mod = if (sampleMod > 0) sampleMod.toString else gMod
-    s"""WITH $geomCte, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY ${dotDuck("a.v", "b.v", "d")} / (a.nrm * b.nrm)
-       |               DESC, b.vec_id ASC) AS rnk
-       |    FROM n a JOIN n b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id % $mod = 0
-       |  ) WHERE rnk <= $k
-       |), cent AS (
-       |  SELECT vec_id AS cent_id, v AS centv, nrm AS centn FROM n WHERE vec_id < $cS
-       |), rankedcells AS (
+    s"""WITH $geomCte, $vecCtes, ${exactTopKCte(k, mod)}, ${seededCentCte("cent", cS)}, rankedcells AS (
        |  SELECT vec_id, v, nrm, cent_id,
        |         row_number() OVER (PARTITION BY vec_id
        |           ORDER BY ${dotDuck("n.v", "c.centv", "a")} / (n.nrm * c.centn)
@@ -2380,14 +2244,7 @@ object Similarity {
        |    FROM probes p JOIN assign a ON p.cell = a.cell AND p.query_id <> a.vec_id
        |  ) WHERE rnk <= $k AND query_id % $mod = 0
        |)
-       |SELECT x.query_id,
-       |       CAST(sum(CASE WHEN ap.neighbor_id IS NULL THEN 0 ELSE 1 END)
-       |            AS BIGINT) AS hits,
-       |       CAST(CAST(sum(CASE WHEN ap.neighbor_id IS NULL THEN 0 ELSE 1 END)
-       |            AS BIGINT) AS DOUBLE) / $k AS recall
-       |FROM exact x LEFT JOIN approx ap
-       |  ON x.query_id = ap.query_id AND x.neighbor_id = ap.neighbor_id
-       |GROUP BY x.query_id ORDER BY x.query_id""".stripMargin
+       |${recallSelectSql(k)}""".stripMargin
   }
 
   /** Shared SRP-LSH candidate scoring. Index side is always the exact
@@ -2452,7 +2309,7 @@ object Similarity {
       .distinct()
     val qv = e.select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
     val cv = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val small = n <= 100000L
+    val small = n <= Dedup.BroadcastReattachMaxVecs
     pairs
       .join(if (small) broadcast(qv) else qv, "query_id")
       .join(if (small) broadcast(cv) else cv, "neighbor_id")
@@ -2460,20 +2317,18 @@ object Similarity {
         expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)").as("cosine"))
   }
 
-  private def lshRankTopK(cand: DataFrame, k: Int): DataFrame = {
-    cand
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rnk").cast("int").as("rnk"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
+  /** LSH-bucketed ANN — the second scale path next to IVF: vectors
+    * whose signs agree on all b hyperplanes of SOME table land in the
+    * same (table, signature) bucket; candidates come from bucket
+    * equi-joins only (~L·n²/2^b pairs instead of n²), then exact-cosine
+    * rank. Near-uniform synthetic vectors are SRP's worst case, hence
+    * b = 8 and L = 4; clustered real embeddings bucket far more
+    * sharply. Recall is partial by design — the oracle replays the
+    * same candidate generation, keeping the gate exact.
+    */
   def similarityLsh(spark: SparkSession, sfDir: String, k: Int = 5,
                     tables: Int = LshTables, bits: Int = -1): DataFrame =
-    lshRankTopK(lshCandidates(spark, sfDir, tables, bits, multiprobe = false), k)
+    rankTopK(lshCandidates(spark, sfDir, tables, bits, multiprobe = false), k)
 
   /** Multi-probe SRP-LSH top-k — the recall-holding form of
     * [[similarityLsh]] (see [[lshCandidates]] and [[multiprobeCount]]
@@ -2485,7 +2340,7 @@ object Similarity {
     */
   def similarityLshMultiprobe(spark: SparkSession, sfDir: String, k: Int = 5,
                               tables: Int = LshTables, bits: Int = -1): DataFrame =
-    lshRankTopK(lshCandidates(spark, sfDir, tables, bits, multiprobe = true), k)
+    rankTopK(lshCandidates(spark, sfDir, tables, bits, multiprobe = true), k)
 
   /** Per-table SRP-LSH bucket-occupancy telemetry — the LSH analog of
     * [[similarityCellStats]] (diagnostic tier, oracled): how a user
@@ -2535,11 +2390,7 @@ object Similarity {
     * CTE chain; geometry and the hot threshold derive from the corpus.
     */
   lazy val similarityLshStatsOracle: String =
-    s"""WITH $geomCte, $lshPlanesDuck, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), $lshBucketCtesDuck, occs AS (
+    s"""WITH $geomCte, $lshPlanesDuck, $vecCtes, $lshBucketCtesDuck, occs AS (
        |  SELECT tbl, sig, count(*) AS occ FROM buckets GROUP BY tbl, sig
        |), hot AS (
        |  SELECT 4 * greatest(CAST(1 AS BIGINT),
@@ -2558,23 +2409,12 @@ object Similarity {
        |FROM occs GROUP BY tbl ORDER BY tbl""".stripMargin
 
   val similarityLshOracle: String =
-    s"""WITH $geomCte, $lshPlanesDuck, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), $lshBucketCtesDuck, cand AS (
+    s"""WITH $geomCte, $lshPlanesDuck, $vecCtes, $lshBucketCtesDuck, cand AS (
        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
        |         ${dotDuck("q.v", "c.v", "d")} / (q.nrm * c.nrm) AS cosine
        |  FROM buckets q JOIN buckets c
        |    ON q.tbl = c.tbl AND q.sig = c.sig AND q.vec_id <> c.vec_id
-       |), r AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-       |  FROM cand
-       |)
-       |SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rnk
-       |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
+       |), ${rankTailSql("cand", "5")}""".stripMargin
 
   /** DuckDB replay of the multi-probe candidate generation: the query
     * side is the bucket signatures UNION their b Hamming-1 XOR
@@ -2582,23 +2422,12 @@ object Similarity {
     * probe set the Spark side explodes.
     */
   val similarityLshMultiprobeOracle: String =
-    s"""WITH $geomCte, $lshPlanesDuck, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), $lshBucketCtesDuck, $lshProbeCtesDuck, cand AS (
+    s"""WITH $geomCte, $lshPlanesDuck, $vecCtes, $lshBucketCtesDuck, $lshProbeCtesDuck, cand AS (
        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
        |         ${dotDuck("q.v", "c.v", "d")} / (q.nrm * c.nrm) AS cosine
        |  FROM probes q JOIN buckets c
        |    ON q.tbl = c.tbl AND q.sig = c.sig AND q.vec_id <> c.vec_id
-       |), r AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-       |  FROM cand
-       |)
-       |SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rnk
-       |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
+       |), ${rankTailSql("cand", "5")}""".stripMargin
 
   /** ANN quality gate for the SRP-LSH tier — recall@k of
     * [[similarityLsh]] against the exact brute-force top-k, on the same
@@ -2618,29 +2447,10 @@ object Similarity {
                           sampleMod: Int = -1, tables: Int = LshTables,
                           bits: Int = -1,
                           multiprobe: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val mod = if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
-    val e = vectors(spark, sfDir)
-    val q = e.where($"vec_id" % mod === 0)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val exact = q.join(c, $"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"neighbor_id")
-    val lsh = if (multiprobe) similarityLshMultiprobe(spark, sfDir, k, tables, bits)
-              else similarityLsh(spark, sfDir, k, tables, bits)
-    val approx = lsh
-      .where($"query_id" % mod === 0)
-      .select($"query_id", $"neighbor_id", lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left_outer")
-      .groupBy($"query_id")
-      .agg(sum(coalesce($"hit", lit(0L))).as("hits"))
-      .selectExpr("query_id", "hits",
-        s"cast(hits as double) / $k as recall")
-      .orderBy($"query_id")
+    val mod = panelMod(spark, sfDir, sampleMod)
+    recallVsExact(spark, sfDir,
+      if (multiprobe) similarityLshMultiprobe(spark, sfDir, k, tables, bits)
+      else similarityLsh(spark, sfDir, k, tables, bits), k, mod)
   }
 
   def similarityRecallLshOracle(k: Int = 5, sampleMod: Int = -1,
@@ -2651,20 +2461,7 @@ object Similarity {
     val mod = if (sampleMod > 0) sampleMod.toString else gMod
     val qSide = if (multiprobe) s"$lshProbeCtesDuck, " else ""
     val qRel = if (multiprobe) "probes" else "buckets"
-    s"""WITH $geomCte, $lshPlanesDuck, e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, v, sqrt(${dotDuck("v", "v", "n")}) AS nrm FROM e
-       |), exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY ${dotDuck("a.v", "b.v", "d")} / (a.nrm * b.nrm)
-       |               DESC, b.vec_id ASC) AS rnk
-       |    FROM n a JOIN n b ON a.vec_id <> b.vec_id
-       |    WHERE a.vec_id % $mod = 0
-       |  ) WHERE rnk <= $k
-       |), $lshBucketCtesDuck, ${qSide}cand AS (
+    s"""WITH $geomCte, $lshPlanesDuck, $vecCtes, ${exactTopKCte(k, mod)}, $lshBucketCtesDuck, ${qSide}cand AS (
        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
        |         ${dotDuck("q.v", "c.v", "d")} / (q.nrm * c.nrm) AS cosine
        |  FROM $qRel q JOIN buckets c
@@ -2677,13 +2474,6 @@ object Similarity {
        |    FROM cand
        |  ) WHERE rnk <= $k AND query_id % $mod = 0
        |)
-       |SELECT x.query_id,
-       |       CAST(sum(CASE WHEN ap.neighbor_id IS NULL THEN 0 ELSE 1 END)
-       |            AS BIGINT) AS hits,
-       |       CAST(CAST(sum(CASE WHEN ap.neighbor_id IS NULL THEN 0 ELSE 1 END)
-       |            AS BIGINT) AS DOUBLE) / $k AS recall
-       |FROM exact x LEFT JOIN approx ap
-       |  ON x.query_id = ap.query_id AND x.neighbor_id = ap.neighbor_id
-       |GROUP BY x.query_id ORDER BY x.query_id""".stripMargin
+       |${recallSelectSql(k)}""".stripMargin
   }
 }

@@ -954,4 +954,34 @@ class PropertySpec extends AnyFunSuite {
       } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
+
+  test("rankTopK == Scala sort by (cosine DESC, neighbor_id ASC), k per query, ranks 1..n (exact ties, queries with < k candidates)") {
+    // cosines drawn from four exactly representable values, so most
+    // queries rank exact ties that only the neighbor_id tie-break
+    // orders; ~4 candidates per query on average against k up to 6, so
+    // many queries have fewer than k. Rows are spread over 4 input
+    // partitions in generation order, not neighbor order.
+    val rowGen = Gen.zip(Gen.chooseNum(0L, 30L), Gen.chooseNum(0L, 60L),
+      Gen.oneOf(-0.5, 0.125, 0.25, 0.75))
+    var sawTie = false
+    var sawShort = false
+    forAll(Gen.zip(Gen.chooseNum(0, 150).flatMap(Gen.listOfN(_, rowGen)),
+        Gen.chooseNum(1, 6)), n = 8) { case (raw, k) =>
+      // one cosine per (query, neighbor), as every candidate stage emits
+      val rows = raw.distinctBy(r => (r._1, r._2))
+      val byQuery = rows.groupBy(_._1)
+      sawShort ||= byQuery.values.exists(_.size < k)
+      sawTie ||= byQuery.values.exists(rs => rs.map(_._3).distinct.size < rs.size)
+      val want = byQuery.toSeq.flatMap { case (q, rs) =>
+        rs.sortBy(r => (-r._3, r._2)).take(k).zipWithIndex
+          .map { case (r, i) => (q, r._2, r._3, i + 1) }
+      }.sortBy(r => (r._1, r._4))
+      val got = graft.textops.Similarity.rankTopK(
+          spark.sparkContext.parallelize(rows, 4)
+            .toDF("query_id", "neighbor_id", "cosine"), k)
+        .as[(Long, Long, Double, Int)].collect().toSeq
+      assert(got == want, s"rank tail diverged at k=$k on ${rows.size} rows")
+    }
+    assert(sawTie && sawShort, "generator produced no ties or no short queries")
+  }
 }
