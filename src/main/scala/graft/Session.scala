@@ -76,15 +76,18 @@ object Session {
     tune(master.fold(b)(b.master), parallelism)
   }
 
-  /** Measurement-harness builder shared by Bench and `tools.Probe`:
-    * [[tune]]d `local[SPARK_GRAFT_CPUS]` session, UI off, plus
+  /** Measurement-harness builder shared by Bench, Verify, `tools.Probe`
+    * and perfbench: [[tune]]d `local[SPARK_GRAFT_CPUS]` session (the
+    * caller's `defaultCpus` when that variable is unset), UI off, plus
     * `SPARK_GRAFT_CONF` ("k=v;k=v") overrides. A Probe measurement
     * builds its session here, so it sees the SAME configuration surface
     * as Bench — an anchor taken under a conf override (e.g.
     * io.compression.codec=zstd at big SF) stays reproducible and
-    * comparable to the bench it corroborates.
+    * comparable to the bench it corroborates. There is no default core
+    * count: the committed `plans/` are taken at 4, and a session at
+    * another count plans differently.
     */
-  def harnessBuilder(defaultCpus: String = "32"): SparkSession.Builder = {
+  def harnessBuilder(defaultCpus: String): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     var b = tune(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
       .config("spark.ui.enabled", "false")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,29 +15,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * `zip_with`) are CodegenFallback — every lambda application is an
   * interpreted Catalyst eval with boxing. For the similarity and dedup
   * hot paths that interpretive overhead dominates the query (millions
-  * of pairs × 64-element folds), so these expressions compile the same
+  * of pairs × 64-element folds), so these expressions run the same
   * arithmetic — IN THE SAME LEFT-TO-RIGHT ORDER, so results stay
   * bit-identical to both the HOF formulation and the DuckDB oracle —
-  * into whole-stage-codegen'd Java loops.
+  * as compiled JVM loops.
   *
-  * This is preference path (b) of the build brief: a custom
+  * Each function has ONE kernel: a public method on this object over
+  * `ArrayData` / `UTF8String` / primitives. The expression's
+  * `nullSafeEval` (interpreted path) and its `doGenCode` (one static
+  * call from the whole-stage-codegen'd Java) both call that kernel, so
+  * the code a test checks through either path is the code production
+  * runs. This is preference path (b) of the build brief: a custom
   * `Expression` with `doGenCode`, not a Scala UDF (no boxing, no
   * encoder round-trip, participates in WholeStageCodegen).
   */
 object GraftExpressions {
 
-  /** Runtime shape guard for the SRP family (called from both the
-    * interpreted and generated paths — public so Janino sees the
-    * static forwarder). The plane matrix is a row-major (bits × d)
-    * flattening, so a length that is not a multiple of d means the
-    * caller built it against a different vector dimension — silently
-    * integer-dividing would drop trailing coefficients and hash with
-    * the wrong hyperplanes. bits > 31 would alias `1 << j` (Int shift
-    * wraps mod 32), folding distant planes onto the same signature
-    * bit. Internal callers cap at MaxLshBits = 16; this guard is for
-    * the SQL-registered user surface.
+  /** Runtime shape guard for the SRP family. The plane matrix is a
+    * row-major (bits × d) flattening, so a length that is not a
+    * multiple of d means the caller built it against a different
+    * vector dimension — silently integer-dividing would drop trailing
+    * coefficients and hash with the wrong hyperplanes. bits > 31 would
+    * alias `1 << j` (Int shift wraps mod 32), folding distant planes
+    * onto the same signature bit. Internal callers cap at
+    * MaxLshBits = 16; this guard is for the SQL-registered user
+    * surface.
     */
-  def checkSrpShape(fn: String, d: Int, planesLen: Int): Unit = {
+  private def checkSrpShape(fn: String, d: Int, planesLen: Int): Unit = {
     if (d > 0 && planesLen % d != 0)
       throw new IllegalArgumentException(
         s"$fn: planes length $planesLen is not a multiple of the vector dimension $d " +
@@ -48,7 +52,6 @@ object GraftExpressions {
           "(bit j is stored as 1 << j in an Int)")
   }
 
-  /** Σ aᵢ·bᵢ over two double arrays, sequential left fold. */
   /** Analysis-time guard for expressions whose loops read typed
     * getters: `getDouble` over an array<float> (etc.) reads garbage
     * bytes SILENTLY, so a wrong element type must fail the query
@@ -67,39 +70,72 @@ object GraftExpressions {
       s"$fn requires array<${et.simpleString}> inputs, got (${dts.map(_.sql).mkString(", ")})")
   }
 
+  /** Σ a[i]·b[off+i] for i in [0, n), sequential left fold — the one
+    * dot product behind vec_dot, the SRP planes and the IVF centroid
+    * scores, so all of them round identically. */
+  private def dot(a: ArrayData, b: ArrayData, off: Int, n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a.getDouble(i) * b.getDouble(off + i); i += 1 }
+    acc
+  }
+
+  /** The byte polynomial fold `acc = (acc·mult + (b & 0xff)) mod P`
+    * over b[from, until) — poly_hash, poly_hash37, the window hashes
+    * and `TextHash.phScala` all hash through it. */
+  def polyFold(b: Array[Byte], from: Int, until: Int, mult: Long): Long = {
+    var acc = 0L
+    var i = from
+    while (i < until) { acc = (acc * mult + (b(i) & 0xff)) % TextHash.P; i += 1 }
+    acc
+  }
+
+  def vecDot(a: ArrayData, b: ArrayData): Double =
+    dot(a, b, 0, math.min(a.numElements(), b.numElements()))
+
+  /** Σ aᵢ·bᵢ over two double arrays, sequential left fold (min-length
+    * semantics). */
   case class VecDot(left: Expression, right: Expression)
       extends BinaryExpression {
     override def checkInputDataTypes()
         : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
       requireArrays(DoubleType, "vec_dot", left.dataType, right.dataType)
     override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
-      acc
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      vecDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      // scope block: two instances in one codegen stage (filter +
-      // projection) must not redeclare the same locals — Janino would
-      // reject the stage and drop it to interpreted.
       nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"""
-           |{
-           |int vdN = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double vdAcc = 0.0;
-           |for (int vdI = 0; vdI < vdN; vdI++) {
-           |  vdAcc += $a.getDouble(vdI) * $b.getDouble(vdI);
-           |}
-           |${ev.value} = vdAcc;
-           |}
-           |""".stripMargin)
+        s"${ev.value} = graft.functions.GraftExpressions.vecDot($a, $b);")
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  /** [[VecDist2]]'s NULL decision: unequal lengths, or — only when the
+    * schema admits null elements — a null element in either array. */
+  def vecDist2IsNull(a: ArrayData, b: ArrayData, checkNulls: Boolean): Boolean = {
+    val n = a.numElements()
+    if (n != b.numElements()) return true
+    var i = 0
+    while (checkNulls && i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  /** Σ (aᵢ−bᵢ)² over two equal-length bigint arrays without nulls
+    * (callers check [[vecDist2IsNull]] first). */
+  def vecDist2(a: ArrayData, b: ArrayData): Long = {
+    val n = a.numElements()
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      val d = a.getLong(i) - b.getLong(i)
+      acc += d * d
+      i += 1
+    }
+    acc
   }
 
   /** Σ (aᵢ−bᵢ)² over two bigint arrays, sequential left fold — the
@@ -110,8 +146,7 @@ object GraftExpressions {
     * scans evaluate it panel×corpus (the sf10 exact TS scan spends its
     * 83 s there). Integer math — the fold order is immaterial to the
     * result (exact associativity), so the DuckDB oracle's list_reduce
-    * replays it bit-for-bit by construction; min-length semantics like
-    * VecDot (production arrays are fixed 30-day grids, equal length).
+    * replays it bit-for-bit by construction.
     * Overflow headroom: 30 elements of |diff| ≤ 5.5×10⁸ fit Int64.
     */
   case class VecDist2(left: Expression, right: Expression)
@@ -127,55 +162,24 @@ object GraftExpressions {
     // Malformed-input contract — identical to the HOF fold this
     // expression replaced (`aggregate(zip_with(a, b, …), 0L, +)`):
     // unequal lengths → NULL (zip_with pads with null, the sum
-    // absorbs it), and a null ELEMENT → NULL. The element check only
-    // compiles in when a child's schema says nulls are possible
+    // absorbs it), and a null ELEMENT → NULL. The element scan only
+    // runs when a child's schema says nulls are possible
     // (containsNull), so the hot TS path — transform-built arrays,
-    // containsNull = false — keeps the branch-free loop.
+    // containsNull = false — pays only the length check.
     private def mayHaveNullElems: Boolean =
       Seq(left, right).exists(_.dataType match {
         case ArrayType(_, cn) => cn
         case _ => false
       })
     override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (n != y.numElements()) return null
-      val checkNulls = mayHaveNullElems
-      var acc = 0L
-      var i = 0
-      while (i < n) {
-        if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-        val d = x.getLong(i) - y.getLong(i)
-        acc += d * d
-        i += 1
-      }
-      acc
+      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+      if (vecDist2IsNull(x, y, mayHaveNullElems)) null else vecDist2(x, y)
     }
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      // scope block: same Janino redeclaration guard as VecDot
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val elemNullCheck =
-          if (mayHaveNullElems)
-            s"if ($a.isNullAt(v2I) || $b.isNullAt(v2I)) { ${ev.isNull} = true; break; }"
-          else ""
-        s"""
-           |{
-           |if ($a.numElements() != $b.numElements()) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  int v2N = $a.numElements();
-           |  long v2Acc = 0L;
-           |  for (int v2I = 0; v2I < v2N; v2I++) {
-           |    $elemNullCheck
-           |    long v2D = $a.getLong(v2I) - $b.getLong(v2I);
-           |    v2Acc += v2D * v2D;
-           |  }
-           |  ${ev.value} = v2Acc;
-           |}
-           |}
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"""${ev.isNull} = graft.functions.GraftExpressions.vecDist2IsNull($a, $b, $mayHaveNullElems);
+           |if (!${ev.isNull}) ${ev.value} = graft.functions.GraftExpressions.vecDist2($a, $b);
+           |""".stripMargin)
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
@@ -204,11 +208,7 @@ object GraftExpressions {
     val csims = new Array[Double](c)
     var j = 0
     while (j < c) {
-      val off = j * d
-      var acc = 0.0
-      var i = 0
-      while (i < d) { acc += v.getDouble(i) * flat.getDouble(off + i); i += 1 }
-      csims(j) = acc / (nrm * norms.getDouble(j))
+      csims(j) = dot(v, flat, j * d, d) / (nrm * norms.getDouble(j))
       j += 1
     }
     val k = math.min(np, c)
@@ -230,7 +230,7 @@ object GraftExpressions {
         Array[Any](ids.getLong(idx(s)), csims(idx(s))))
       s += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Fused IVF cell ranking: the top-`np` centroids of one vector as
@@ -307,13 +307,26 @@ object GraftExpressions {
         norms = newChildren(3), ids = newChildren(4))
   }
 
+  def srpSig(v: ArrayData, planes: ArrayData): Int = {
+    val d = v.numElements()
+    val bits = if (d == 0) 0 else planes.numElements() / d
+    checkSrpShape("srp_sig", d, planes.numElements())
+    var sig = 0
+    var j = 0
+    while (j < bits) {
+      if (dot(v, planes, j * d, d) > 0) sig |= (1 << j)
+      j += 1
+    }
+    sig
+  }
+
   /** Signed-random-projection signature: bit j of the result is set
     * iff Σᵢ v[i]·planes[j·d+i] > 0, where `planes` is a row-major
     * (bits × d) flattened hyperplane matrix and d = |v|. Semantically
     * identical to summing `case when vec_dot(v, planeⱼ) > 0 then 2^j
     * end` over j (same left-fold dot order, same strict > 0 sign
     * rule — pinned by a PropertySpec bit-parity test), but ONE compact
-    * two-loop codegen body instead of `bits` separate 64-literal dot
+    * two-loop kernel call instead of `bits` separate 64-literal dot
     * expressions: at b ≥ 10 the per-bit form blew Spark's generated
     * method size and fell off the whole-stage-codegen cliff (measured
     * 1.6 s → 4.0 s on the sf0.1 LSH bench).
@@ -324,46 +337,55 @@ object GraftExpressions {
         : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
       requireArrays(DoubleType, "srp_sig", left.dataType, right.dataType)
     override def dataType: DataType = IntegerType
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val p = b.asInstanceOf[ArrayData]
-      val d = v.numElements()
-      val bits = if (d == 0) 0 else p.numElements() / d
-      GraftExpressions.checkSrpShape("srp_sig", d, p.numElements())
-      var sig = 0
-      var j = 0
-      while (j < bits) {
-        var acc = 0.0
-        var i = 0
-        val off = j * d
-        while (i < d) { acc += v.getDouble(i) * p.getDouble(off + i); i += 1 }
-        if (acc > 0) sig |= (1 << j)
-        j += 1
-      }
-      sig
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      srpSig(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"""
-           |{
-           |int ssD = $a.numElements();
-           |int ssBits = ssD == 0 ? 0 : $b.numElements() / ssD;
-           |graft.functions.GraftExpressions.checkSrpShape("srp_sig", ssD, $b.numElements());
-           |int ssSig = 0;
-           |for (int ssJ = 0; ssJ < ssBits; ssJ++) {
-           |  double ssAcc = 0.0;
-           |  int ssOff = ssJ * ssD;
-           |  for (int ssI = 0; ssI < ssD; ssI++) {
-           |    ssAcc += $a.getDouble(ssI) * $b.getDouble(ssOff + ssI);
-           |  }
-           |  if (ssAcc > 0) ssSig |= (1 << ssJ);
-           |}
-           |${ev.value} = ssSig;
-           |}
-           |""".stripMargin)
+        s"${ev.value} = graft.functions.GraftExpressions.srpSig($a, $b);")
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  def srpProbes(v: ArrayData, planes: ArrayData, nProbes: Int): ArrayData = {
+    val d = v.numElements()
+    val bits = if (d == 0) 0 else planes.numElements() / d
+    checkSrpShape("srp_probes", d, planes.numElements())
+    val margins = new Array[Double](bits)
+    var sig = 0
+    var j = 0
+    while (j < bits) {
+      val acc = dot(v, planes, j * d, d)
+      if (acc > 0) sig |= (1 << j)
+      // NaN margin (NaN in the vector or planes) → +Inf so the plane
+      // is still selectable — `x < bm` is false for NaN, which with a
+      // -1 sentinel used to crash used(best) when EVERY margin was NaN
+      val m = math.abs(acc)
+      margins(j) = if (java.lang.Double.isNaN(m)) Double.PositiveInfinity else m
+      j += 1
+    }
+    val t = math.min(nProbes, bits)
+    val out = new Array[Int](1 + t)
+    out(0) = sig
+    val used = new Array[Boolean](bits)
+    var k = 0
+    while (k < t) {
+      var best = -1
+      var bm = Double.MaxValue
+      var i = 0
+      while (i < bits) {
+        // best == -1 seeds the scan so an all-Inf (all-NaN-input) row
+        // still picks deterministically (lowest unused index)
+        if (!used(i) && (best == -1 || margins(i) < bm)) {
+          bm = margins(i); best = i
+        }
+        i += 1
+      }
+      used(best) = true
+      out(k + 1) = sig ^ (1 << best)
+      k += 1
+    }
+    new GenericArrayData(out)
   }
 
   /** Multi-probe SRP signatures (Lv et al., VLDB '07): the base
@@ -386,91 +408,19 @@ object GraftExpressions {
         : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
       requireArrays(DoubleType, "srp_probes", left.dataType, right.dataType)
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val p = b.asInstanceOf[ArrayData]
-      val d = v.numElements()
-      val bits = if (d == 0) 0 else p.numElements() / d
-      GraftExpressions.checkSrpShape("srp_probes", d, p.numElements())
-      val margins = new Array[Double](bits)
-      var sig = 0
-      var j = 0
-      while (j < bits) {
-        var acc = 0.0
-        var i = 0
-        val off = j * d
-        while (i < d) { acc += v.getDouble(i) * p.getDouble(off + i); i += 1 }
-        if (acc > 0) sig |= (1 << j)
-        // NaN margin (NaN in the vector or planes) → +Inf so the plane
-        // is still selectable — `x < bm` is false for NaN, which with a
-        // -1 sentinel used to crash used(best) when EVERY margin was NaN
-        val m = math.abs(acc)
-        margins(j) = if (java.lang.Double.isNaN(m)) Double.PositiveInfinity else m
-        j += 1
-      }
-      val t = math.min(nProbes, bits)
-      val out = new Array[Int](1 + t)
-      out(0) = sig
-      val used = new Array[Boolean](bits)
-      var k = 0
-      while (k < t) {
-        var best = -1
-        var bm = Double.MaxValue
-        var i = 0
-        while (i < bits) {
-          // best == -1 seeds the scan so an all-Inf (all-NaN-input) row
-          // still picks deterministically (lowest unused index)
-          if (!used(i) && (best == -1 || margins(i) < bm)) {
-            bm = margins(i); best = i
-          }
-          i += 1
-        }
-        used(best) = true
-        out(k + 1) = sig ^ (1 << best)
-        k += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      srpProbes(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], nProbes)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"""
-           |{
-           |int spD = $a.numElements();
-           |int spBits = spD == 0 ? 0 : $b.numElements() / spD;
-           |graft.functions.GraftExpressions.checkSrpShape("srp_probes", spD, $b.numElements());
-           |double[] spM = new double[spBits];
-           |int spSig = 0;
-           |for (int spJ = 0; spJ < spBits; spJ++) {
-           |  double spAcc = 0.0;
-           |  int spOff = spJ * spD;
-           |  for (int spI = 0; spI < spD; spI++) {
-           |    spAcc += $a.getDouble(spI) * $b.getDouble(spOff + spI);
-           |  }
-           |  if (spAcc > 0) spSig |= (1 << spJ);
-           |  double spAbs = Math.abs(spAcc);
-           |  spM[spJ] = Double.isNaN(spAbs) ? Double.POSITIVE_INFINITY : spAbs;
-           |}
-           |int spT = Math.min($nProbes, spBits);
-           |int[] spOut = new int[1 + spT];
-           |spOut[0] = spSig;
-           |boolean[] spUsed = new boolean[spBits];
-           |for (int spK = 0; spK < spT; spK++) {
-           |  int spBest = -1;
-           |  double spBm = Double.MAX_VALUE;
-           |  for (int spI = 0; spI < spBits; spI++) {
-           |    if (!spUsed[spI] && (spBest == -1 || spM[spI] < spBm)) {
-           |      spBm = spM[spI]; spBest = spI;
-           |    }
-           |  }
-           |  spUsed[spBest] = true;
-           |  spOut[spK + 1] = spSig ^ (1 << spBest);
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(spOut);
-           |}
-           |""".stripMargin)
+        s"${ev.value} = graft.functions.GraftExpressions.srpProbes($a, $b, $nProbes);")
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  def polyHash(s: UTF8String, mult: Long): Long = {
+    val b = s.getBytes
+    polyFold(b, 0, b.length, mult)
   }
 
   /** Polynomial char-fold hash — semantics of TextHash.phSpark for
@@ -480,76 +430,65 @@ object GraftExpressions {
   case class PolyHash(child: Expression, mult: Long = 31)
       extends UnaryExpression {
     override def dataType: DataType = LongType
-    override def nullSafeEval(s: Any): Any = {
-      val b = s.asInstanceOf[UTF8String].getBytes
-      var acc = 0L
-      var i = 0
-      while (i < b.length) { acc = (acc * mult + (b(i) & 0xff)) % TextHash.P; i += 1 }
-      acc
-    }
+    override def nullSafeEval(s: Any): Any =
+      polyHash(s.asInstanceOf[UTF8String], mult)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c =>
-        s"""
-           |{
-           |byte[] phB = $c.getBytes();
-           |long phAcc = 0L;
-           |for (int phI = 0; phI < phB.length; phI++) {
-           |  phAcc = (phAcc * ${mult}L + (phB[phI] & 0xFF)) % ${TextHash.P}L;
-           |}
-           |${ev.value} = phAcc;
-           |}
-           |""".stripMargin)
+        s"${ev.value} = graft.functions.GraftExpressions.polyHash($c, ${mult}L);")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+  }
+
+  /** Number of `window`-byte windows [[windowHash]] hashes over a
+    * string of `len` bytes: at least one, the whole string, when it is
+    * shorter than a window. */
+  private def windowCount(len: Int, window: Int): Int = math.max(len - window + 1, 1)
+
+  /** Poly31 hash of the window starting at byte `i`; tail windows
+    * shorter than `window` hash their remaining bytes. */
+  private def windowHash(b: Array[Byte], i: Int, window: Int): Long =
+    polyFold(b, i, math.min(i + window, b.length), 31)
+
+  def rollingMinHash(s: UTF8String, window: Int): Long = {
+    val b = s.getBytes
+    val nWin = windowCount(b.length, window)
+    var mn = Long.MaxValue
+    var i = 0
+    while (i < nWin) { mn = math.min(mn, windowHash(b, i, window)); i += 1 }
+    mn
   }
 
   /** Min over all 16-char sliding-window polynomial hashes — the
     * winnowing fingerprint of TextStats.docFingerprint, computed as a
     * true O(n·w) byte loop instead of n interpreted substring+fold
-    * lambdas.
+    * lambdas. Exactly the minimum of [[windowHashes]].
     */
   case class RollingMinHash(child: Expression, window: Int)
       extends UnaryExpression {
     override def dataType: DataType = LongType
-    private def hashAt(b: Array[Byte], start: Int, len: Int): Long = {
-      var acc = 0L
-      var i = start
-      val end = start + len
-      while (i < end) { acc = (acc * 31 + (b(i) & 0xff)) % TextHash.P; i += 1 }
-      acc
-    }
-    override def nullSafeEval(s: Any): Any = {
-      val b = s.asInstanceOf[UTF8String].getBytes
-      val nWin = math.max(b.length - window + 1, 1)
-      var mn = Long.MaxValue
-      var i = 0
-      while (i < nWin) {
-        val h = hashAt(b, i, math.min(window, b.length - i))
-        if (h < mn) mn = h
-        i += 1
-      }
-      mn
-    }
+    override def nullSafeEval(s: Any): Any =
+      rollingMinHash(s.asInstanceOf[UTF8String], window)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c =>
-        s"""
-           |{
-           |byte[] rmB = $c.getBytes();
-           |int rmWins = java.lang.Math.max(rmB.length - $window + 1, 1);
-           |long rmMin = Long.MAX_VALUE;
-           |for (int rmI = 0; rmI < rmWins; rmI++) {
-           |  long rmAcc = 0L;
-           |  int rmEnd = java.lang.Math.min(rmI + $window, rmB.length);
-           |  for (int rmJ = rmI; rmJ < rmEnd; rmJ++) {
-           |    rmAcc = (rmAcc * 31L + (rmB[rmJ] & 0xFF)) % ${TextHash.P}L;
-           |  }
-           |  if (rmAcc < rmMin) rmMin = rmAcc;
-           |}
-           |${ev.value} = rmMin;
-           |}
-           |""".stripMargin)
+        s"${ev.value} = graft.functions.GraftExpressions.rollingMinHash($c, $window);")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+  }
+
+  def simHash60(hs: ArrayData): Long = {
+    val n = hs.numElements()
+    val w = new Array[Long](60)
+    var j = 0
+    while (j < n) {
+      val h = hs.getLong(j)
+      var i = 0
+      while (i < 60) { w(i) += ((h >> i) & 1L) * 2 - 1; i += 1 }
+      j += 1
+    }
+    var acc = 0L
+    var i = 0
+    while (i < 60) { if (w(i) > 0) acc += 1L << i; i += 1 }
+    acc
   }
 
   /** 60-bit SimHash over an array of (60-bit) token hashes: per bit i,
@@ -566,43 +505,35 @@ object GraftExpressions {
         : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
       requireArrays(LongType, "simhash60", child.dataType)
     override def dataType: DataType = LongType
-    override def nullSafeEval(a: Any): Any = {
-      val arr = a.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      val w = new Array[Long](60)
-      var j = 0
-      while (j < n) {
-        val h = arr.getLong(j)
-        var i = 0
-        while (i < 60) { w(i) += ((h >> i) & 1L) * 2 - 1; i += 1 }
-        j += 1
-      }
-      var acc = 0L
-      var i = 0
-      while (i < 60) { if (w(i) > 0) acc += 1L << i; i += 1 }
-      acc
-    }
+    override def nullSafeEval(a: Any): Any = simHash60(a.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c =>
-        s"""
-           |{
-           |int shN = $c.numElements();
-           |long[] shW = new long[60];
-           |for (int shJ = 0; shJ < shN; shJ++) {
-           |  long shH = $c.getLong(shJ);
-           |  for (int shI = 0; shI < 60; shI++) {
-           |    shW[shI] += ((shH >> shI) & 1L) * 2 - 1;
-           |  }
-           |}
-           |long shAcc = 0L;
-           |for (int shI = 0; shI < 60; shI++) {
-           |  if (shW[shI] > 0) shAcc += 1L << shI;
-           |}
-           |${ev.value} = shAcc;
-           |}
-           |""".stripMargin)
+        s"${ev.value} = graft.functions.GraftExpressions.simHash60($c);")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+  }
+
+  // TextHash's MinHash constants as arrays: they are Seqs (Lists), whose
+  // apply(k) walks k cells — not a lookup for the per-element inner loop
+  private val MinhashA: Array[Long] = TextHash.MinhashA.toArray
+  private val MinhashB: Array[Long] = TextHash.MinhashB.toArray
+
+  def minhashSig(hs: ArrayData): ArrayData = {
+    val n = hs.numElements()
+    val mins = new Array[Long](MinhashA.length)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    var j = 0
+    while (j < n) {
+      val v = hs.getLong(j)
+      var k = 0
+      while (k < mins.length) {
+        val t = (v * MinhashA(k) + MinhashB(k)) % TextHash.P
+        if (t < mins(k)) mins(k) = t
+        k += 1
+      }
+      j += 1
+    }
+    new GenericArrayData(mins)
   }
 
   /** MinHash signature: K affine rehash minima over the shingle-hash
@@ -614,52 +545,32 @@ object GraftExpressions {
     */
   case class MinHashSig(child: Expression)
       extends UnaryExpression {
-    private val K = TextHash.K
     override def checkInputDataTypes()
         : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
       requireArrays(LongType, "minhash_sig", child.dataType)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(a: Any): Any = {
-      val arr = a.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      val mins = Array.fill(K)(Long.MaxValue)
-      var j = 0
-      while (j < n) {
-        val v = arr.getLong(j)
-        var k = 0
-        while (k < K) {
-          val t = (v * TextHash.MinhashA(k) + TextHash.MinhashB(k)) % TextHash.P
-          if (t < mins(k)) mins(k) = t
-          k += 1
-        }
-        j += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val aConst = TextHash.MinhashA.mkString("{", "L,", "L}")
-      val bConst = TextHash.MinhashB.mkString("{", "L,", "L}")
+    override def nullSafeEval(a: Any): Any = minhashSig(a.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c =>
-        s"""
-           |{
-           |int mhN = $c.numElements();
-           |long[] mhA = new long[]$aConst;
-           |long[] mhB = new long[]$bConst;
-           |long[] mhM = new long[$K];
-           |java.util.Arrays.fill(mhM, Long.MAX_VALUE);
-           |for (int mhJ = 0; mhJ < mhN; mhJ++) {
-           |  long mhV = $c.getLong(mhJ);
-           |  for (int mhK = 0; mhK < $K; mhK++) {
-           |    long mhT = (mhV * mhA[mhK] + mhB[mhK]) % ${TextHash.P}L;
-           |    if (mhT < mhM[mhK]) mhM[mhK] = mhT;
-           |  }
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(mhM);
-           |}
-           |""".stripMargin)
-    }
+        s"${ev.value} = graft.functions.GraftExpressions.minhashSig($c);")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+  }
+
+  def sortedIntersectCount(a: ArrayData, b: ArrayData): Int = {
+    var i = 0
+    var j = 0
+    var cnt = 0
+    val n = a.numElements()
+    val m = b.numElements()
+    while (i < n && j < m) {
+      val x = a.getInt(i)
+      val y = b.getInt(j)
+      if (x == y) { cnt += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    cnt
   }
 
   /** |A ∩ B| for two SORTED distinct int arrays via a two-pointer
@@ -685,45 +596,11 @@ object GraftExpressions {
           org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
             s"sorted_intersect_count requires (array<int>, array<int>), got (${l.sql}, ${r.sql})")
       }
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      var i = 0
-      var j = 0
-      var cnt = 0
-      val n = x.numElements()
-      val m = y.numElements()
-      while (i < n && j < m) {
-        val xv = x.getInt(i)
-        val yv = y.getInt(j)
-        if (xv == yv) { cnt += 1; i += 1; j += 1 }
-        else if (xv < yv) i += 1
-        else j += 1
-      }
-      cnt
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // freshName per instance: two intersect counts in one codegen
-      // stage (e.g. a filter + projection pair) must not redeclare the
-      // same locals — Janino rejects the stage and the whole
-      // WholeStageCodegen span falls back to interpreted.
-      val (i, j, c) = (ctx.freshName("siI"), ctx.freshName("siJ"), ctx.freshName("siC"))
-      val (n, m) = (ctx.freshName("siN"), ctx.freshName("siM"))
-      val (x, y) = (ctx.freshName("siX"), ctx.freshName("siY"))
+    override def nullSafeEval(a: Any, b: Any): Any =
+      sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"""
-           |int $i = 0, $j = 0, $c = 0;
-           |int $n = $a.numElements(), $m = $b.numElements();
-           |while ($i < $n && $j < $m) {
-           |  int $x = $a.getInt($i);
-           |  int $y = $b.getInt($j);
-           |  if ($x == $y) { $c++; $i++; $j++; }
-           |  else if ($x < $y) $i++;
-           |  else $j++;
-           |}
-           |${ev.value} = $c;
-           |""".stripMargin)
-    }
+        s"${ev.value} = graft.functions.GraftExpressions.sortedIntersectCount($a, $b);")
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
@@ -776,10 +653,10 @@ object GraftExpressions {
       else if (x < y) i += 1
       else j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
   private val EmptyContribs: ArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    new GenericArrayData(Array.empty[Any])
 
   /** `tri_contribs(src, dst, nu, nv)` →
     * array<struct<part_id:bigint, n:bigint>> — see [[triContribs]]. */
@@ -835,7 +712,7 @@ object GraftExpressions {
     // this runs once per document on the dedup hot path
     val toks = WsRegex.split(text.toString).filter(_.nonEmpty)
     if (toks.length < n)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+      return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String]()
     val sb = new java.lang.StringBuilder
     var i = 0
@@ -850,13 +727,12 @@ object GraftExpressions {
     val it = seen.iterator()
     var k = 0
     while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Distinct whitespace n-gram shingles of a document — codegen emits
-    * a single static call into [[wordShingles]] (string/regex work
-    * doesn't benefit from inlined Java the way the arithmetic kernels
-    * above do; the win is skipping the per-element HOF interpreter).
+    * a single static call into [[wordShingles]]; the win is skipping
+    * the per-element HOF interpreter.
     */
   case class WordShingles(child: Expression, n: Int)
       extends UnaryExpression {
@@ -878,33 +754,30 @@ object GraftExpressions {
   private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r'
 
+  /** `h(start, end)` over each whitespace token's byte range, in
+    * token order — one tokenizing scan, no token string allocation. */
+  private def mapTokens(b: Array[Byte])(h: (Int, Int) => Long): Array[Long] = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    var i = 0
+    while (i < b.length) {
+      while (i < b.length && isWs(b(i))) i += 1
+      val start = i
+      while (i < b.length && !isWs(b(i))) i += 1
+      if (i > start) out += h(start, i)
+    }
+    out.result()
+  }
+
   /** Runtime for [[TokenHashes60]]: whitespace-tokenize and compute
     * each token's packed 60-bit hash (poly31 + poly37·2^30 —
-    * TextHash.tokenHash60Spark) in ONE byte scan, no token string
-    * allocation. Replaces the interpreted
+    * TextHash.tokenHash60Spark). Replaces the interpreted
     * `transform(filter(split(text,'\s+'), …), tk -> poly_hash(tk) + …)`
     * chain on the SimHash front end.
     */
   def tokenHashes60(text: UTF8String): ArrayData = {
-    val bytes = text.getBytes
-    val out = new scala.collection.mutable.ArrayBuffer[Any]()
-    var i = 0
-    val n = bytes.length
-    while (i < n) {
-      while (i < n && isWs(bytes(i))) i += 1
-      if (i < n) {
-        var h31 = 0L
-        var h37 = 0L
-        while (i < n && !isWs(bytes(i))) {
-          val c = bytes(i) & 0xff
-          h31 = (h31 * 31 + c) % TextHash.P
-          h37 = (h37 * 37 + c) % TextHash.P
-          i += 1
-        }
-        out += h31 + h37 * 1073741824L
-      }
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+    val b = text.getBytes
+    new GenericArrayData(mapTokens(b)((s, e) =>
+      polyFold(b, s, e, 31) + polyFold(b, s, e, 37) * 1073741824L))
   }
 
   case class TokenHashes60(child: Expression) extends UnaryExpression {
@@ -918,31 +791,18 @@ object GraftExpressions {
       copy(child = newChild)
   }
 
-  /** Runtime for [[ShingleHashes]]: token poly31 hashes (one byte
-    * scan) combined into 3-gram shingle hashes
+  /** Runtime for [[ShingleHashes]]: token poly31 hashes combined
+    * into 3-gram shingle hashes
     * `((h1·SH + h2) % P · SH + h3) % P` — the MinHash front end's
     * tokenize → transform(poly_hash) → 3-gram-combine HOF chain fused
     * into one call. Empty if the document has < 3 tokens (matching the
     * pre-filter the HOF form required).
     */
   def shingleHashes(text: UTF8String): ArrayData = {
-    val bytes = text.getBytes
-    val th = new scala.collection.mutable.ArrayBuffer[Long]()
-    var i = 0
-    val n = bytes.length
-    while (i < n) {
-      while (i < n && isWs(bytes(i))) i += 1
-      if (i < n) {
-        var h31 = 0L
-        while (i < n && !isWs(bytes(i))) {
-          h31 = (h31 * 31 + (bytes(i) & 0xff)) % TextHash.P
-          i += 1
-        }
-        th += h31
-      }
-    }
+    val b = text.getBytes
+    val th = mapTokens(b)((s, e) => polyFold(b, s, e, 31))
     if (th.length < 3)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+      return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](th.length - 2)
     var j = 0
     while (j < th.length - 2) {
@@ -950,7 +810,7 @@ object GraftExpressions {
         TextHash.ShingleMult + th(j + 2)) % TextHash.P
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   case class ShingleHashes(child: Expression) extends UnaryExpression {
@@ -974,22 +834,14 @@ object GraftExpressions {
     * total yields one whole-string hash.
     */
   private def windowHashArray(b: Array[Byte], window: Int): Array[Long] = {
-    val nWin = math.max(b.length - window + 1, 1)
-    val out = new Array[Long](nWin)
+    val out = new Array[Long](windowCount(b.length, window))
     var i = 0
-    while (i < nWin) {
-      var acc = 0L
-      var j = i
-      val end = math.min(i + window, b.length)
-      while (j < end) { acc = (acc * 31 + (b(j) & 0xff)) % TextHash.P; j += 1 }
-      out(i) = acc
-      i += 1
-    }
+    while (i < out.length) { out(i) = windowHash(b, i, window); i += 1 }
     out
   }
 
   def windowHashes(text: UTF8String, window: Int): ArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    new GenericArrayData(
       windowHashArray(text.getBytes, window))
 
   case class WindowHashes(child: Expression, window: Int)
@@ -1032,7 +884,7 @@ object GraftExpressions {
     val it = seen.iterator()
     var j = 0
     while (it.hasNext) { out(j) = it.next().longValue(); j += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   case class WinnowHashes(child: Expression, window: Int, radius: Int)
@@ -1047,11 +899,6 @@ object GraftExpressions {
       copy(child = newChild)
   }
 
-  /** Idempotent session registration; afterwards usable from any
-    * `expr(...)` / SQL string as vec_dot, poly_hash, rolling_min_hash,
-    * poly_hash37, simhash60, minhash_sig, sorted_intersect_count,
-    * word_shingles, token_hashes60, shingle_hashes, window_hashes.
-    */
   private def intArg(e: Expression): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case other => other.eval().asInstanceOf[Int]
@@ -1128,6 +975,9 @@ object GraftExpressions {
       es => WinnowHashes(es(0), intArg(es(1)), intArg(es(2))))
   )
 
+  /** Idempotent session registration; afterwards every function in
+    * [[registrations]] is usable from any `expr(...)` / SQL string.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     // idempotence guard: every Tables.load calls register; re-registering

@@ -738,9 +738,7 @@ object Dedup {
         .select(col("n.id").as("id"),
           least(col("n.label"), coalesce($"plabel", col("n.label"))).as("label"))
     }
-    var rounds = 0
     while (!converged) {
-      rounds += 1
       // exactly one step per materialization: `step` references its
       // input twice (the pointer-jump self-join), so composing steps
       // without a checkpoint re-evaluates the inner subtree 2^k times
@@ -769,10 +767,6 @@ object Dedup {
       prevSum = s
       labels = next
     }
-    // -Dgraft.cc.debug=true: round count to stderr (perf forensics —
-    // per-round cost × rounds is the whole cost model of this loop)
-    if (sys.props.get("graft.cc.debug").contains("true"))
-      System.err.println(s"CC converged in $rounds rounds")
     labels.select($"id", $"label".as("component"))
       .union(isolated.select($"id", $"id".as("component")))
   }

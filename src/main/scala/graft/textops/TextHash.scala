@@ -1,5 +1,7 @@
 package graft.textops
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Portable hashing primitives expressible in BOTH Spark SQL and DuckDB.
   *
   * The dedup/fingerprint operators must hash-match a DuckDB oracle, so
@@ -48,17 +50,15 @@ object TextHash {
   def tokenHash60Duck(tk: String, sfx: String): String =
     s"${phDuck(tk, sfx + "p")} + ${phDuck(tk, sfx + "q", 37)} * 1073741824"
 
-  /** Driver-side replica of the `poly_hash` fold — lets serving code
-    * compute a token's partition literal WITHOUT a Spark job (e.g. the
-    * phrase-search index prune). `poly_hash` folds over the string's
-    * UTF-8 BYTES (GraftExpressions: `b(i) & 0xff`), so this replica
-    * folds over the same bytes — identical for ALL inputs, not just
-    * the ASCII range a char-fold would cover (TextOpsSpec pins a
-    * non-ASCII token through both paths).
+  /** Driver-side `poly_hash` — lets serving code compute a token's
+    * partition literal WITHOUT a Spark job (e.g. the phrase-search
+    * index prune). It calls the expression's own kernel, which folds
+    * over the string's UTF-8 BYTES, so it agrees for ALL inputs, not
+    * just the ASCII range a char-fold would cover (PropertySpec pins
+    * a non-ASCII token through both paths).
     */
   def phScala(s: String, mult: Long = 31): Long =
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .foldLeft(0L)((a, b) => (a * mult + (b & 0xff)) % P)
+    graft.functions.GraftExpressions.polyHash(UTF8String.fromString(s), mult)
 
   /** Whitespace tokenization with empty tokens dropped — identical
     * token arrays in both engines regardless of leading/trailing

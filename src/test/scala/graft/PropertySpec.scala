@@ -984,4 +984,177 @@ class PropertySpec extends AnyFunSuite {
     }
     assert(sawTie && sawShort, "generator produced no ties or no short queries")
   }
+
+  test("every registered native function: generated code == interpreted eval == reference") {
+    // Seq(...).toDF input never runs generated code: ConvertToLocalRelation
+    // folds the projection at optimization time through nullSafeEval. So
+    // each call runs twice — on the LocalRelation (interpreted) and on the
+    // same rows read back from parquet inside a WholeStageCodegen stage,
+    // with codegen's silent interpreted fallback switched off — and both
+    // must equal a plain-Scala reference.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.types._
+    import graft.textops.TextHash.{MinhashA, MinhashB, P, ShingleMult}
+    GraftExpressions.register(spark)
+    val rnd = new scala.util.Random(20261019L)
+    val d = 6
+    case class In(id: Long, s: String, text: String,
+                  a: Seq[Double], b: Seq[Double], planes: Seq[Double],
+                  nrm: Double, flat: Seq[Double], norms: Seq[Double], ids: Seq[Long],
+                  la: Seq[Long], lb: Seq[Long], na: Seq[java.lang.Long], nb: Seq[java.lang.Long],
+                  hs: Seq[Long], ia: Seq[Int], ib: Seq[Int],
+                  src: Long, dst: Long, nu: Seq[Long], nv: Seq[Long])
+    def dbls(n: Int) = Seq.fill(n)((rnd.nextInt(2001) - 1000) / 7.0)
+    def sortedSet(n: Int, hi: Int) = Seq.fill(n)(rnd.nextInt(hi)).distinct.sorted
+    def str(n: Int, alphabet: String) = Seq.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    val words = Seq("alpha", "beta", "gamma", "the", "of", "scan", "join")
+    val seps = Seq(" ", "  ", "\t", "\n", " \r\n")
+    val ins = (0L until 40L).map { id =>
+      val a = dbls(d)
+      val cells = 5
+      val la = Seq.fill(rnd.nextInt(8))(rnd.nextLong(200001L) - 100000L)
+      val boxed = (xs: Seq[Long]) => xs.map(x =>
+        if (rnd.nextInt(10) == 0) null else java.lang.Long.valueOf(x))
+      In(id,
+        s = str(rnd.nextInt(40), "abcdef gh\tijxyz0189éü中"),
+        text = Seq.fill(rnd.nextInt(12))(words(rnd.nextInt(words.size)))
+          .map(_ + seps(rnd.nextInt(seps.size))).mkString(seps(rnd.nextInt(seps.size)), "", ""),
+        a = a, b = dbls(3 + rnd.nextInt(6)), planes = dbls(d * (1 + rnd.nextInt(12))),
+        nrm = math.sqrt(a.map(x => x * x).sum), flat = dbls(cells * d),
+        norms = Seq.fill(cells)(0.5 + rnd.nextDouble()),
+        ids = Seq.fill(cells)(rnd.nextLong(1000L)).distinct.padTo(cells, 1001L),
+        la = la, lb = la.map(_ + rnd.nextLong(100L)),
+        na = boxed(la), nb = boxed(Seq.fill(la.size + (if (rnd.nextInt(4) == 0) 1 else 0))(rnd.nextLong(1000L))),
+        hs = Seq.fill(rnd.nextInt(20))(rnd.nextLong(1L << 60)),
+        ia = sortedSet(rnd.nextInt(15), 30), ib = sortedSet(rnd.nextInt(15), 30),
+        src = rnd.nextLong(50L), dst = rnd.nextLong(50L),
+        nu = sortedSet(rnd.nextInt(10), 20).map(_.toLong),
+        nv = sortedSet(rnd.nextInt(10), 20).map(_.toLong))
+    }
+    val arr = (t: DataType, nulls: Boolean) => ArrayType(t, containsNull = nulls)
+    val schema = StructType(Seq(
+      "id" -> LongType, "s" -> StringType, "text" -> StringType,
+      "a" -> arr(DoubleType, false), "b" -> arr(DoubleType, false),
+      "planes" -> arr(DoubleType, false), "nrm" -> DoubleType,
+      "flat" -> arr(DoubleType, false), "norms" -> arr(DoubleType, false),
+      "ids" -> arr(LongType, false), "la" -> arr(LongType, false),
+      "lb" -> arr(LongType, false), "na" -> arr(LongType, true),
+      "nb" -> arr(LongType, true), "hs" -> arr(LongType, false),
+      "ia" -> arr(IntegerType, false), "ib" -> arr(IntegerType, false),
+      "src" -> LongType, "dst" -> LongType,
+      "nu" -> arr(LongType, false), "nv" -> arr(LongType, false))
+      .map { case (n, t) => StructField(n, t, nullable = false) })
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(ins.map(in => Row.fromTuple(in)): _*), schema)
+    val dir = java.nio.file.Files.createTempDirectory("graftnative").toString
+    local.write.mode("overwrite").parquet(dir)
+    val scanned = spark.read.parquet(dir)
+
+    // ---- plain-Scala references ----
+    def fold(b: Seq[Byte], m: Long) = b.foldLeft(0L)((h, x) => (h * m + (x & 0xff)) % P)
+    def utf8(s: String) = s.getBytes("UTF-8").toSeq
+    def windows(s: String, w: Int) = {
+      val b = utf8(s)
+      (0 until math.max(b.length - w + 1, 1)).map(i => fold(b.slice(i, i + w), 31))
+    }
+    def toks(t: String) = t.split("\\s+").filter(_.nonEmpty).toSeq
+    def dot(x: Seq[Double], y: Seq[Double]) =
+      x.zip(y).foldLeft(0.0) { case (h, (p, q)) => h + p * q }
+    def planeDots(in: In) = in.planes.grouped(d).map(dot(in.a, _)).toSeq
+    def sig(ds: Seq[Double]) = ds.zipWithIndex.collect { case (x, j) if x > 0 => 1 << j }.sum
+    def dist2(x: Seq[java.lang.Long], y: Seq[java.lang.Long]): Any =
+      if (x.size != y.size || (x ++ y).contains(null)) null
+      else x.zip(y).map { case (p, q) => (p - q) * (p - q) }.sum
+    val cases: Seq[(String, String, In => Any)] = Seq(
+      ("vec_dot", "vec_dot(a, b)", in => dot(in.a, in.b)),
+      ("vec_dist2", "vec_dist2(la, lb)", in =>
+        dist2(in.la.map(Long.box), in.lb.map(Long.box))),
+      ("vec_dist2", "vec_dist2(na, nb)", in => dist2(in.na, in.nb)),
+      ("srp_sig", "srp_sig(a, planes)", in => sig(planeDots(in))),
+      ("srp_probes", "srp_probes(a, planes, 3)", { in =>
+        val ds = planeDots(in)
+        sig(ds) +: ds.zipWithIndex.sortBy { case (x, j) => (math.abs(x), j) }
+          .take(3).map { case (_, j) => sig(ds) ^ (1 << j) }
+      }),
+      ("ivf_top_cells", "ivf_top_cells(a, nrm, flat, norms, ids, 3)", { in =>
+        val cs = in.flat.grouped(d).map(dot(in.a, _)).zip(in.norms)
+          .map { case (x, n) => x / (in.nrm * n) }.toSeq
+        cs.zip(in.ids).sortBy { case (c, i) => (-c, i) }.take(3)
+          .map { case (c, i) => Row(i, c) }
+      }),
+      ("poly_hash", "poly_hash(s)", in => fold(utf8(in.s), 31)),
+      ("poly_hash37", "poly_hash37(s)", in => fold(utf8(in.s), 37)),
+      ("window_hashes", "window_hashes(s, 8)", in => windows(in.s, 8)),
+      ("rolling_min_hash", "rolling_min_hash(s, 8)", in => windows(in.s, 8).min),
+      ("winnow_hashes", "winnow_hashes(s, 8, 3)", { in =>
+        val f = windows(in.s, 8)
+        f.indices.filter(i => f(i) == f.slice(i - 3 max 0, i + 4).min).map(f).distinct
+      }),
+      ("word_shingles", "word_shingles(text, 3)", in =>
+        if (toks(in.text).size < 3) Seq.empty
+        else toks(in.text).sliding(3).map(_.mkString(" ")).toSeq.distinct),
+      ("token_hashes60", "token_hashes60(text)", in =>
+        toks(in.text).map(t => fold(utf8(t), 31) + fold(utf8(t), 37) * (1L << 30))),
+      ("shingle_hashes", "shingle_hashes(text)", { in =>
+        val th = toks(in.text).map(t => fold(utf8(t), 31))
+        if (th.size < 3) Seq.empty
+        else th.sliding(3).map { case Seq(x, y, z) =>
+          ((x * ShingleMult + y) % P * ShingleMult + z) % P }.toSeq
+      }),
+      ("simhash60", "simhash60(hs)", in =>
+        (0 until 60).filter(i => in.hs.map(h => ((h >> i) & 1L) * 2 - 1).sum > 0)
+          .map(1L << _).sum),
+      ("minhash_sig", "minhash_sig(hs)", in =>
+        MinhashA.zip(MinhashB).map { case (ma, mb) =>
+          in.hs.map(v => (v * ma + mb) % P).foldLeft(Long.MaxValue)(math.min) }),
+      ("sorted_intersect_count", "sorted_intersect_count(ia, ib)", in =>
+        in.ia.intersect(in.ib).size),
+      ("tri_contribs", "tri_contribs(src, dst, nu, nv)", { in =>
+        val w = in.nu.intersect(in.nv)
+        if (w.isEmpty) Seq.empty
+        else Seq(Row(in.src, w.size.toLong), Row(in.dst, w.size.toLong)) ++
+          w.map(Row(_, 1L))
+      }))
+    assert(cases.map(_._1).toSet == GraftExpressions.registrations.map(_.name).toSet)
+    assert(ins.exists(in => dist2(in.na, in.nb) == null) &&
+      ins.exists(in => dist2(in.na, in.nb) != null),
+      "generator must reach both sides of vec_dist2's NULL decision")
+
+    val codegenOnly = Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val saved = codegenOnly.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      codegenOnly.foreach { case (k, v) => spark.conf.set(k, v) }
+      cases.foreach { case (fn, call, ref) =>
+        val interp = local.selectExpr("id", call)
+        assert(interp.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+          s"$call: the local projection was not folded, so it was not interpreted")
+        val gen = scanned.selectExpr("id", call)
+        val compiled = gen.queryExecution.executedPlan.exists {
+          case w: WholeStageCodegenExec => w.exists {
+            case p: ProjectExec => p.projectList.exists(_.exists(
+              _.getClass.getName.startsWith(GraftExpressions.getClass.getName)))
+            case _ => false
+          }
+          case _ => false
+        }
+        assert(compiled, s"$call: no WholeStageCodegen stage over the call\n" +
+          gen.queryExecution.executedPlan)
+        val byId = (df: org.apache.spark.sql.DataFrame) =>
+          df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+        val (gi, gg) = (byId(interp), byId(gen))
+        ins.foreach { in =>
+          val want = ref(in)
+          assert(gi(in.id) == want, s"$fn interpreted != reference on $in")
+          assert(gg(in.id) == want, s"$fn generated != reference on $in")
+        }
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
