@@ -41,11 +41,15 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Steady-state methodology (matches BASELINE.md): one untimed warm
     // pass over EVERY query first — each query's first execution pays
-    // one-time codegen/JIT compilation (~0.5-1 s per distinct operator
-    // shape) that says nothing about the operator and everything about
-    // the Janino/C2 compile queue, which is also the most
+    // codegen/JIT compilation (~0.5-1 s per distinct operator shape)
+    // that says nothing about the operator and everything about the
+    // Janino/C2 compile queue, which is also the most
     // host-contention-sensitive cost. Then 3 timed reps per query,
-    // reported as the per-query median.
+    // reported as the per-query median. The Janino half is one-time
+    // only because Session.CodegenCache holds the whole surface's
+    // generated classes (all 139 queries at sf0.1: 1,608 distinct
+    // sources, 2,920 cache entries); Spark's default 100-entry cache
+    // evicted them, and the timed reps recompiled them.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // SPARK_GRAFT_ONLY="q1,q2" restricts the run for local perf loops;
     // unset (the driver's invocation) benches the full surface

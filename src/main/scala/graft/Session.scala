@@ -26,9 +26,11 @@ object Session {
     *    advisory size below).
     *  - [[LocalFileSystemImpl]]: `file:` paths without a subprocess
     *    per created file or renamed checkpoint file.
+    *  - [[CodegenCache]]: a generated class cache that holds the
+    *    engine's working set, so a warm query compiles nothing.
     */
   def tune(b: SparkSession.Builder, parallelism: Int = 4): SparkSession.Builder =
-    LocalFileSystemImpl.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    (LocalFileSystemImpl ++ CodegenCache).foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
     .config("spark.sql.shuffle.partitions", parallelism.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -129,6 +131,23 @@ object Session {
   val LocalFileSystemImpl: Seq[(String, String)] = Seq(
     "spark.hadoop.fs.file.impl" -> classOf[NoForkLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NoForkLocalFs].getName)
+
+  /** Sizes Spark's generated class cache (Janino compiles) for the
+    * engine's working set. The cache is keyed by (context class loader,
+    * source), and whole-stage codegen compiles each source once on the
+    * driver and once more in the first task, so each source takes two
+    * entries. Spark's default of 100 entries is far below that: warm
+    * queries recompiled classes they had compiled before (50 per timed
+    * perfbench `dashboard` pass; 17–21 of the 20–24 compiles of each
+    * `stream` op). 4096: one pass of all 139 registered queries at
+    * sf0.1 (count() and full output) generated 1,608 distinct sources,
+    * × 2 loaders = 3,216 (2,920 entries measured), plus ~25 % headroom;
+    * that JVM held 197 MB of Metaspace after the pass.
+    * `CodeGenerator` reads this static conf once per JVM, so it takes
+    * effect only if it is set before the JVM's first codegen.
+    */
+  val CodegenCache: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "4096")
 
   /** Streaming state at 100× — the RocksDB state store knob.
     *

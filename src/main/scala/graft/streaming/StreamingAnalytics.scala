@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming parity layer.
   *
@@ -49,26 +48,14 @@ object StreamingAnalytics {
 
   /** Streaming events source: the same parquet file tail-read as a
     * stream (each new file = one micro-batch at scale; here the single
-    * file arrives as one batch). `ts` normalization identical to the
-    * batch loader (`Tables`): the stored encoding is sniffed from the
-    * parquet footer via a one-off batch read — readStream needs the
-    * schema up front — then nanos-as-long or NTZ is converted to a
-    * session-tz TIMESTAMP.
+    * file arrives as one batch). readStream needs the schema up front:
+    * it is the batch loader's ([[graft.Tables.eventsSchema]]), and `ts`
+    * goes through the same [[graft.Tables.normalizeEventsTs]].
     */
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val raw = spark.readStream.schema(schema).parquet(s"$sfDir/events.parquet")
-    tsType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Tables.normalizeEventsTs(spark.readStream
+      .schema(graft.Tables.eventsSchema(spark, sfDir))
+      .parquet(s"$sfDir/events.parquet"))
 
   /** S3 analog (REF: AppMarketingByChannel.scala § SimulatedEventSource
     * — reconstructed): the reference's RichSourceFunction loops

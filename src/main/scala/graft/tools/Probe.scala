@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 
 import graft.{Session, SparkEntry}
 import graft.functions.GraftExpressions
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -31,6 +32,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *   - `full_s`: the frame's own `queryExecution.toRdd.count()` —
   *     every output row, final sort kept
   *   - `rows`: output rows
+  *   - `compiles`: Janino compiles (generated classes) over the whole
+  *     rep; above 0 on a warm rep means the class cache is thrashing
+  *     or the query generates fresh source each run
   *   - `jobs`/`stages`/`tasks`: submitted by the Bench-equivalent part
   *     of the rep (build + plan + count)
   */
@@ -39,7 +43,7 @@ object Probe {
   private val RepTag = "graft.probe.rep"
 
   final case class Rep(buildS: Double, planS: Double, countS: Double,
-                       fullS: Double, rows: Long)
+                       fullS: Double, rows: Long, compiles: Long)
 
   /** One measured rep of `q`. Build, plan and count run with [[RepTag]]
     * set to `tag`; the full-output pass runs untagged. Returns the rep
@@ -50,8 +54,10 @@ object Probe {
           q: (SparkSession, String) => DataFrame, tag: String): (Rep, DataFrame) = {
     val sc = spark.sparkContext
     def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     sc.setLocalProperty(RepTag, tag)
     try {
+      val c0 = compiles()
       var t0 = System.nanoTime()
       val df = q(spark, sfDir)
       val buildS = since(t0)
@@ -66,7 +72,8 @@ object Probe {
       // queryExecution keeps the final sort and finalizes its AQE plan
       t0 = System.nanoTime()
       val rows = df.queryExecution.toRdd.count()
-      (Rep(buildS, planS, countS, since(t0), rows), df)
+      val fullS = since(t0)
+      (Rep(buildS, planS, countS, fullS, rows, compiles() - c0), df)
     } finally sc.setLocalProperty(RepTag, null)
   }
 
@@ -143,7 +150,7 @@ object Probe {
           f"count_s=${med(rs.map(_.countS))}%.3f " +
           f"full_s=${med(rs.map(_.fullS))}%.3f rows=${rs.head.rows} " +
           s"jobs=${med(c.map(_(0)))} stages=${med(c.map(_(1)))} " +
-          s"tasks=${med(c.map(_(2)))}")
+          s"tasks=${med(c.map(_(2)))} compiles=${med(rs.map(_.compiles))}")
         println(plan)
     }
   }

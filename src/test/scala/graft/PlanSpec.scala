@@ -103,6 +103,22 @@ class PlanSpec extends AnyFunSuite {
       "count() kept the global Sort — the full-output pass measures nothing extra")
   }
 
+  test("second round of the five dashboard queries compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val names = Seq("hot_items_topn", "tx_match", "cep_funnel",
+      "pricing_summary", "dedup_minhash_lsh_capped")
+    def round(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      names.foreach(n => SparkEntry.queries(n)(spark, sf).queryExecution.toRdd.count())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    round()
+    // the class cache (Session.CodegenCache) must hold the round's
+    // working set: each generated source is cached per class loader
+    // (driver and task), and the default 100 entries evict and recompile
+    assert(round() == 0, "a warm round recompiled generated classes")
+  }
+
   test("dedup_embedding_capped: both cell caps push down as WindowGroupLimit") {
     // the caps must PRUNE the cell exchange (map-side per-partition
     // top-k), not follow it — otherwise the capped tier still shuffles

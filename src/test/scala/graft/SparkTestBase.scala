@@ -24,9 +24,11 @@ object SparkTestBase {
     // order-timeout / blacklist streams now ride. Tests that pin the
     // HDFS-backed provider set it explicitly (StreamingRecoverySpec's
     // provider-matrix case).
-    // Session.tune's `file:` filesystem too, so every checkpoint and
-    // parquet write in the suite runs on the production path.
-    val s = (Session.RocksDbStateStore ++ Session.LocalFileSystemImpl)
+    // Session.tune's `file:` filesystem and generated class cache too,
+    // so every checkpoint, parquet write and compile in the suite runs
+    // on the production path.
+    val s = (Session.RocksDbStateStore ++ Session.LocalFileSystemImpl ++
+        Session.CodegenCache)
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
