@@ -6,7 +6,7 @@ import scala.util.control.NonFatal
 import graft.{Session, SparkEntry}
 import graft.functions.GraftExpressions
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -37,6 +37,11 @@ import org.apache.spark.sql.execution.ExplainMode
   *     or the query generates fresh source each run
   *   - `jobs`/`stages`/`tasks`: submitted by the Bench-equivalent part
   *     of the rep (build + plan + count)
+  *   - `shuffle_write_ms`: summed task shuffle-write time
+  *     (`shuffleWriteMetrics.writeTime`: opening, writing and committing
+  *     shuffle files) over that same part of the rep
+  *   - `spill_mb`: summed task disk spill, and `peak_mem_mb`: the largest
+  *     task peak execution memory, over that same part of the rep
   */
 object Probe {
   /** Local property naming the rep a job belongs to. */
@@ -77,18 +82,29 @@ object Probe {
     } finally sc.setLocalProperty(RepTag, null)
   }
 
-  /** Jobs, stages and tasks per [[RepTag]] value. Written on the
+  /** Jobs, stages, tasks, task shuffle-write nanoseconds, disk spill
+    * bytes and peak execution memory per [[RepTag]] value; a task counts
+    * toward the tag of the job that submitted its stage. Written on the
     * listener-bus thread; read after `spark.stop()` has drained it. */
   private final class JobCounts extends SparkListener {
-    val byTag = mutable.HashMap.empty[String, Array[Int]]
+    val byTag = mutable.HashMap.empty[String, Array[Long]]
+    private val stageTag = mutable.HashMap.empty[Int, String]
     override def onJobStart(js: SparkListenerJobStart): Unit =
       Option(js.properties).flatMap(p => Option(p.getProperty(RepTag)))
         .foreach { tag =>
-          val c = byTag.getOrElseUpdate(tag, new Array[Int](3))
+          val c = byTag.getOrElseUpdate(tag, new Array[Long](6))
           c(0) += 1
           c(1) += js.stageInfos.size
           c(2) += js.stageInfos.map(_.numTasks).sum
+          js.stageInfos.foreach(si => stageTag(si.stageId) = tag)
         }
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+      for (tag <- stageTag.get(te.stageId); m <- Option(te.taskMetrics)) {
+        val c = byTag(tag)
+        c(3) += m.shuffleWriteMetrics.writeTime
+        c(4) += m.diskBytesSpilled
+        c(5) = math.max(c(5), m.peakExecutionMemory)
+      }
   }
 
   def main(args: Array[String]): Unit = {
@@ -144,13 +160,15 @@ object Probe {
         println(s"PROBE $n FAILED ${e.getClass.getName}: ${e.getMessage}")
       case (n, Right((rs, plan))) =>
         val c = (1 to reps).map(i =>
-          counts.byTag.getOrElse(s"$n#$i", new Array[Int](3)).toSeq)
+          counts.byTag.getOrElse(s"$n#$i", new Array[Long](6)).toSeq)
         println(f"PROBE $n%-34s build_s=${med(rs.map(_.buildS))}%.3f " +
           f"plan_s=${med(rs.map(_.planS))}%.3f " +
           f"count_s=${med(rs.map(_.countS))}%.3f " +
           f"full_s=${med(rs.map(_.fullS))}%.3f rows=${rs.head.rows} " +
           s"jobs=${med(c.map(_(0)))} stages=${med(c.map(_(1)))} " +
-          s"tasks=${med(c.map(_(2)))} compiles=${med(rs.map(_.compiles))}")
+          s"tasks=${med(c.map(_(2)))} compiles=${med(rs.map(_.compiles))} " +
+          f"shuffle_write_ms=${med(c.map(_(3))) / 1e6}%.1f " +
+          f"spill_mb=${med(c.map(_(4))) / 1e6}%.1f peak_mem_mb=${med(c.map(_(5))) / 1e6}%.1f")
         println(plan)
     }
   }

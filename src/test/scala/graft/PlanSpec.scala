@@ -119,6 +119,35 @@ class PlanSpec extends AnyFunSuite {
     assert(round() == 0, "a warm round recompiled generated classes")
   }
 
+  test("shuffle writer: one file per map task above `parallelism` partitions, bypass at `parallelism`") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.spark_partition_id
+    val (n, slices) = (20000, 4)
+    val rows = spark.range(0, n, 1, slices).selectExpr("id % 97 as k", "id as v")
+    val expected = (0 until n).map(v => (v % 97L, v.toLong)).sorted
+    for ((parts, handle) <- Seq(64 -> "SerializedShuffleHandle",
+                                4 -> "BypassMergeSortShuffleHandle")) {
+      val df = rows.repartition(parts, $"k").withColumn("p", spark_partition_id())
+        .as[(Long, Long, Int)]
+      val out = df.collect()
+      assert(out.map(r => (r._1, r._2)).sorted.toSeq == expected,
+        s"$parts partitions: output differs from the reference")
+      assert(out.groupBy(_._1).values.forall(_.map(_._3).distinct.length == 1),
+        s"$parts partitions: a key landed in two partitions")
+      // collect() keeps each partition's row order: rows from one map
+      // task (one range slice) must keep their input order
+      assert(out.groupBy(r => (r._3, r._2 * slices / n)).values
+        .forall(g => g.map(_._2).toSeq == g.map(_._2).sorted.toSeq),
+        s"$parts partitions: the writer reordered a map task's rows")
+      val exchanges = new AdaptiveSparkPlanHelper {}
+        .collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.map(_.numPartitions) == Seq(parts))
+      assert(exchanges.map(_.shuffleDependency.shuffleHandle.getClass.getSimpleName) ==
+        Seq(handle), s"$parts partitions: wrong shuffle writer (Session.ShuffleWriter)")
+    }
+  }
+
   test("dedup_embedding_capped: both cell caps push down as WindowGroupLimit") {
     // the caps must PRUNE the cell exchange (map-side per-partition
     // top-k), not follow it — otherwise the capped tier still shuffles

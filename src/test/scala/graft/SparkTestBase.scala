@@ -24,11 +24,11 @@ object SparkTestBase {
     // order-timeout / blacklist streams now ride. Tests that pin the
     // HDFS-backed provider set it explicitly (StreamingRecoverySpec's
     // provider-matrix case).
-    // Session.tune's `file:` filesystem and generated class cache too,
-    // so every checkpoint, parquet write and compile in the suite runs
-    // on the production path.
+    // Session.tune's `file:` filesystem, generated class cache and
+    // shuffle writer choice too, so every checkpoint, parquet write,
+    // compile and shuffle write in the suite runs on the production path.
     val s = (Session.RocksDbStateStore ++ Session.LocalFileSystemImpl ++
-        Session.CodegenCache)
+        Session.CodegenCache ++ Session.ShuffleWriter(parallelism = 4))
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
