@@ -79,10 +79,9 @@ object Bench {
     // tools.Probe) drops leftovers + forces a driver GC after
     // every invocation, outside the timed window — see its doc for the
     // shuffle-file half of the story.
-    def clearLeftoverBlocks(): Unit = Session.scrubBlocks(spark)
     for ((_, fn) <- sorted) {
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      clearLeftoverBlocks()
+      Session.scrubBlocks(spark)
     }
     // Host-calibration scalar: same-code sweep totals have spanned
     // 67-83 s round-over-round purely from host contention (BASELINE
@@ -102,45 +101,35 @@ object Bench {
     // A calib failure records -1 (the failed-query sentinel) rather
     // than aborting the sweep before any JSON is emitted.
     val wantCalib = only.forall(_.contains("pricing_summary"))
-    def calibOnce(): Double =
-      if (!wantCalib) -1.0
-      else SparkEntry.queries.get("pricing_summary").map { fn =>
-        val reps = (1 to 5).map { _ =>
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-                   catch { case _: Throwable => false }
-          // dt BEFORE the scrub, same as the query loop — the round-11
-          // System.gc in clearLeftoverBlocks would otherwise put a full
-          // driver-GC pause INSIDE every calib rep (measured: calib
-          // 0.38 vs the same query's in-sweep 0.24 at sf0.1)
-          val dt = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-          clearLeftoverBlocks()
-          dt
-        }.sorted
-        if (reps.exists(_.isNaN)) -1.0 else reps(2)
-      }.getOrElse(-1.0)
     val sweepStart = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - sweepStart) / 1e9
     def timeQuery(name: String,
                   fn: (org.apache.spark.sql.SparkSession, String)
-                    => org.apache.spark.sql.DataFrame): QRec = {
+                    => org.apache.spark.sql.DataFrame,
+                  reps: Int = 3): QRec = {
       val t = elapsed()
       var error = Option.empty[String]
-      val reps = (1 to 3).map { _ =>
+      val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
                  catch { case e: Throwable =>
                    error = error.orElse(Some(e.getClass.getName)); false }
         // a crash must read as a failure (-1), never as a fast timing
         val dt = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-        clearLeftoverBlocks() // outside the timed window
+        // outside the timed window: the scrub's driver GC inside a rep
+        // read 0.38 s vs 0.24 s for pricing_summary at sf0.1
+        Session.scrubBlocks(spark)
         dt
       }
       val med =
-        if (reps.exists(_.isNaN)) -1.0 else reps.sorted.apply(1)
+        if (times.exists(_.isNaN)) -1.0 else times.sorted.apply(reps / 2)
       QRec(name, med,
-        reps.map(r => if (r.isNaN) -1.0 else r), t, error)
+        times.map(r => if (r.isNaN) -1.0 else r), t, error)
     }
+    def calibOnce(): Double =
+      if (!wantCalib) -1.0
+      else SparkEntry.queries.get("pricing_summary")
+        .fold(-1.0)(fn => timeQuery("pricing_summary", fn, reps = 5).median)
     // 1-minute load average at each calib station: calib measures what
     // contention COSTS this workload, loadavg shows WHO was there — a
     // calm calib + load 6 means other tenants were runnable but this

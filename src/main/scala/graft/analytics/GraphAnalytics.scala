@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -209,7 +210,7 @@ object GraphAnalytics {
     // explode probe AND the dst-side join below.
     val adj = oriented.groupBy($"src")
       .agg(sort_array(collect_list($"dst")).as("nbrs"))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     // Probe-join strategy, audited round 17 (guide §3.1): an explicit
     // broadcast of the adjacency on the dst side was built and MEASURED
     // — it regressed 10.4-13.2 s to 16.7-34.8 s at sf0.1 despite
@@ -280,18 +281,15 @@ object GraphAnalytics {
         // jobs and each reduces to an n-row partial before the next
         // pass's wide shuffle starts — the peak-shuffle cap is the point
         val partials = (0 until buckets)
-          .map(i => passCounts(Some((buckets, i))).localCheckpoint())
+          .map(i => BlockHygiene.checkpointTracked(passCounts(Some((buckets, i)))))
         val total = partials.reduce(_ union _)
           .groupBy($"part_id").agg(sum($"n_triangles").as("n_triangles"))
           // n rows — the only block a library caller keeps alive; the
           // B per-pass partials and the adjacency checkpoint are dead
           // once this sum is materialized, and without this sweep a
           // long-lived session accumulates B+1 persisted RDDs per call
-          .localCheckpoint()
-        (partials :+ adj).foreach(df =>
-          df.queryExecution.analyzed.collectFirst {
-            case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-          }.foreach(_.unpersist(blocking = false)))
+          .transform(BlockHygiene.checkpointTracked)
+        (partials :+ adj).foreach(BlockHygiene.unpersistCheckpointed)
         total
       }
     counts.orderBy($"part_id")

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -231,7 +232,8 @@ object LateDataAnalytics {
         .withColumn("late", coalesce(
           col("ts") < col("wm_all") - expr(s"interval $lateness"), lit(false)))
         .withColumn("batch_id", lit(batchId))
-        .localCheckpoint() // one compute: feeds both splits + the max
+        // one compute: feeds both splits + the max
+        .transform(BlockHygiene.checkpointTracked)
       def part(df: DataFrame, sub: String): Unit =
         df.select(col("event_id"), col("user_id"), col("event_type"),
             col("ts"), col("wm_all").as("watermark"), col("batch_id"))

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,8 +77,7 @@ object TimeSeriesAnalytics {
   def tsSimilarity(spark: SparkSession, sfDir: String, k: Int = 5,
                    mod: Int = -1): DataFrame = {
     import spark.implicits._
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val m = if (mod > 0) mod else autoMod(s.count())
     val q = s.where($"user_id" % m === 0)
       .select($"user_id".as("query_id"), $"arr".as("qa"))
@@ -186,8 +186,7 @@ object TimeSeriesAnalytics {
                       quantScale: Int = 1): DataFrame = {
     import spark.implicits._
     val qs = resolveQuantScale(spark, sfDir, quantScale)
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val sig = paaSignatures(s, qs)
     val thresh = expr(s"16 * step * step") // dist² ≤ 16·step² ⇒ near
     sig.select($"user_id".as("u1"), $"arr".as("qa"), $"sig", $"step")
@@ -322,11 +321,9 @@ object TimeSeriesAnalytics {
                             quantScale: Int = 1, cap: Int = -1): DataFrame = {
     import spark.implicits._
     val qs = resolveQuantScale(spark, sfDir, quantScale)
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val c = if (cap > 0) cap else autoSigCap(s.count())
-    val kept = graft.streaming.BlockHygiene.checkpointTracked(
-      paaCappedKept(s, qs, c))
+    val kept = BlockHygiene.checkpointTracked(paaCappedKept(s, qs, c))
     val thresh = expr(s"16 * step * step")
     kept.select($"user_id".as("u1"), $"arr".as("qa"), $"sig", $"step")
       .join(kept.select($"user_id".as("u2"), $"arr".as("ca"), $"sig"), "sig")
@@ -375,10 +372,9 @@ object TimeSeriesAnalytics {
                    quantScale: Int = 1, cap: Int = -1): DataFrame = {
     import spark.implicits._
     val qs = resolveQuantScale(spark, sfDir, quantScale)
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val c = if (cap > 0) cap else autoSigCap(s.count())
-    val ranked = graft.streaming.BlockHygiene.checkpointTracked(
+    val ranked = BlockHygiene.checkpointTracked(
       paaSignatures(s, qs)
         .withColumn("srk", row_number().over(
           Window.partitionBy($"sig").orderBy($"user_id".asc))))
@@ -456,14 +452,12 @@ object TimeSeriesAnalytics {
   def tsPaaAutoScale(spark: SparkSession, sfDir: String,
                      cap: Int = -1): DataFrame = {
     import spark.implicits._
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val nSeg = Days / Seg
     val nUsers = s.count()
     val c = if (cap > 0) cap else autoSigCap(nUsers)
     val m = autoMod(nUsers)
-    val kept = graft.streaming.BlockHygiene.checkpointTracked(
-      paaCappedKept(s, 1, c))
+    val kept = BlockHygiene.checkpointTracked(paaCappedKept(s, 1, c))
     val tight = kept
       .select($"user_id".as("u1"), $"arr".as("qa"), $"sig", $"step")
       .join(kept.select($"user_id".as("u2"), $"arr".as("ca"), $"sig"), "sig")
@@ -592,8 +586,7 @@ object TimeSeriesAnalytics {
   def tsPaaRecall(spark: SparkSession, sfDir: String,
                   stepOverride: Long = -1): DataFrame = {
     import spark.implicits._
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val nSeg = Days / Seg
     val m = autoMod(s.count())
     val step =
@@ -642,8 +635,7 @@ object TimeSeriesAnalytics {
     */
   def tsPaaRecallCurve(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val nSeg = Days / Seg
     val m = autoMod(s.count())
     val step = s
@@ -819,10 +811,7 @@ object TimeSeriesAnalytics {
     // the choice with zero per-query cost). Structure-free corpora
     // resolve to 1 — identical snapshots to the pre-auto builds.
     val qs = resolveQuantScale(spark, sfDir, quantScale)
-    // tracked checkpoint: identical for batch callers; a streaming
-    // bracket (an index-refresh loop) sweeps the block per micro-batch
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val nSeg = Days / Seg
     // the snapshot freezes BOTH constants: the match threshold's step
     // and the signature grid `qstep = quantScale·step` (the recall/cost
@@ -1074,11 +1063,10 @@ object TimeSeriesAnalytics {
                           quantScale: Int = 1, cap: Int = -1): DataFrame = {
     import spark.implicits._
     require(quantScale >= 1, "quantScale must be >= 1")
-    val s = graft.streaming.BlockHygiene.checkpointTracked(
-      series(spark, sfDir))
+    val s = BlockHygiene.checkpointTracked(series(spark, sfDir))
     val c = if (cap > 0) cap else autoSigCap(s.count())
     // ranked signature rows feed the occupancy agg AND the pair pass
-    val sig = graft.streaming.BlockHygiene.checkpointTracked(
+    val sig = BlockHygiene.checkpointTracked(
       paaSignatures(s, quantScale)
         .withColumn("srk", row_number().over(
           Window.partitionBy($"sig").orderBy($"user_id".asc))))

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -353,7 +354,7 @@ object UserBehaviorAnalytics {
       .select(array_min($"days").as("cohort_day"), explode($"days").as("day"))
       .groupBy($"cohort_day", datediff($"day", $"cohort_day").as("day_offset"))
       .agg(count(lit(1)).as("n_users"))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val sizes = matrix.where($"day_offset" === 0)
       .select($"cohort_day".as("c2"), $"n_users".as("cohort_size"))
     matrix.join(broadcast(sizes), $"cohort_day" === $"c2")
@@ -487,7 +488,7 @@ object UserBehaviorAnalytics {
     * which build produced it).
     */
   private[graft] def retentionTail(sk0: DataFrame): DataFrame = {
-    val sk = sk0.localCheckpoint()
+    val sk = BlockHygiene.checkpointTracked(sk0)
     import sk.sparkSession.implicits._
     val est = sk.groupBy($"day")
       .agg(count(lit(1)).as("cnt"), max($"h").as("kth"))

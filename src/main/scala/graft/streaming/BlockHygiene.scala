@@ -5,55 +5,44 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Per-micro-batch storage hygiene for `foreachBatch` sinks.
+/** The engine's one eager-checkpoint call, and the per-micro-batch
+  * release of the blocks it persists.
   *
-  * Several streaming finishes reuse batch report math that
-  * `localCheckpoint()`s an intermediate (the (source, token) counts in
-  * corpus drift, the band table in the incremental dedup loop, the
-  * span table in span dedup). `localCheckpoint` persists RDD blocks
-  * that nothing unpersists — in the BATCH harness, Bench drops
-  * leftovers after every invocation (Bench.scala), but a long-running
-  * STREAM would otherwise leak one persisted RDD per micro-batch
-  * without bound: exactly the spill/GC-pressure class the v20 bench
-  * block-hygiene fix measured (21 s vs 7.5 s on graph_triangles).
+  * Contract: every eager `DataFrame` checkpoint in the engine is
+  * [[checkpointTracked]]; a checkpoint path that materializes its own
+  * RDD registers it with [[trackPersisted]]. BlockHygieneSpec fails
+  * on any other `localCheckpoint` call in the main sources.
   *
-  * [[releasingNewPersists]] brackets a foreachBatch body and, on exit,
-  * unpersists exactly the RDDs the body registered through
-  * [[checkpointTracked]] — NOT a before/after diff of the driver's
-  * whole persistent-RDD registry. The distinction matters in a shared
-  * session: a registry diff would sweep anything persisted during the
-  * bracket window, including an RDD a concurrently-running query just
-  * `localCheckpoint`'d, and unpersisting someone else's checkpoint
-  * destroys its only copy (lineage is truncated). The tracked set is
-  * held in a plain [[ThreadLocal]] — deliberately NOT Scala's
-  * `DynamicVariable`, whose InheritableThreadLocal backing would make
-  * any thread spawned inside a bracket (a `writeStream.start()`, a
-  * parallel collection) inherit the buffer forever: its post-bracket
-  * `checkpointTracked` calls would register into a set nothing will
-  * ever sweep (a silent re-leak) and mutate it unsynchronized.
-  * Concurrent foreachBatch bodies on different streams each release
-  * only their own blocks; a spawned thread sees no bracket and
-  * degrades to plain `localCheckpoint()` as the contract states.
+  *  - Outside a [[releasingNewPersists]] bracket, [[checkpointTracked]]
+  *    is `df.localCheckpoint()`: batch callers (Bench, Verify) keep
+  *    their own leftover-block sweep.
+  *  - Inside a bracket, the persisted RDD is registered with the
+  *    innermost bracket on this thread and unpersisted when the
+  *    bracket exits. A `foreachBatch` body wrapped in a bracket
+  *    therefore holds its checkpoint blocks for one micro-batch
+  *    instead of leaking one set per batch for the life of the stream
+  *    (the spill/GC-pressure class the v20 bench block-hygiene fix
+  *    measured: 21 s vs 7.5 s on graph_triangles). A bracketed body
+  *    must not let a checkpointed frame escape it.
   *
-  * Contract: inside a bracketed body, materialize with
-  * [[checkpointTracked]] instead of bare `localCheckpoint()`. Outside
-  * a bracket, [[checkpointTracked]] degrades to a plain
-  * `localCheckpoint()` — batch callers (Bench, Verify) need no
-  * changes and keep their own leftover-block sweep.
+  * A bracket releases exactly the ids registered inside it, not a
+  * before/after diff of the driver's persistent-RDD registry: in a
+  * shared session a registry diff would also sweep a concurrently
+  * running query's checkpoint, whose blocks are its only copy
+  * (lineage is truncated). The registered set is held in a plain
+  * [[ThreadLocal]], deliberately NOT Scala's `DynamicVariable`, whose
+  * InheritableThreadLocal backing would hand the set to any thread
+  * spawned inside a bracket (a `writeStream.start()`, a parallel
+  * collection): that thread's later checkpoints would land in a set
+  * nothing sweeps, mutated unsynchronized. A spawned thread sees no
+  * bracket, and brackets on different threads release only their own
+  * blocks. Brackets nest: an inner bracket releases its own blocks and
+  * leaves the outer bracket's alone.
   */
 object BlockHygiene {
   private val active = new ThreadLocal[Option[mutable.Set[Int]]] {
     override def initialValue(): Option[mutable.Set[Int]] = None
   }
-
-  /** All brackets currently open on ANY thread. The untracked-RDD
-    * debug diff consults this so an id correctly registered via
-    * [[checkpointTracked]] in a CONCURRENT bracket (another stream's
-    * foreachBatch overlapping ours) is not reported as a re-leak.
-    * Guarded by its own monitor: buffers are written by their owning
-    * thread but read cross-thread by the diff.
-    */
-  private val liveBufs = mutable.Set.empty[mutable.Set[Int]]
 
   /** `df.localCheckpoint()` whose persisted RDD is registered with the
     * innermost [[releasingNewPersists]] bracket on this thread (no-op
@@ -63,8 +52,7 @@ object BlockHygiene {
     */
   def checkpointTracked(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint()
-    for (buf <- active.get(); id <- persistedRddId(ck))
-      liveBufs.synchronized { buf += id }
+    for (buf <- active.get(); id <- persistedRddId(ck)) buf += id
     ck
   }
 
@@ -73,14 +61,10 @@ object BlockHygiene {
     * [[checkpointTracked]] for checkpoint paths that materialize their
     * own RDD instead of calling `Dataset.localCheckpoint` (the
     * fresh-stats checkpoint in
-    * `org.apache.spark.sql.execution.GraftCheckpoint`). Without this,
-    * a bracketed caller of such a path would leak one persisted RDD
-    * per micro-batch and the untracked-RDD detector would report every
-    * round as a re-leak.
+    * `org.apache.spark.sql.execution.GraftCheckpoint`, the shingle
+    * dictionary in `Dedup`).
     */
-  def trackPersisted(rddId: Int): Unit =
-    for (buf <- active.get())
-      liveBufs.synchronized { buf += rddId }
+  def trackPersisted(rddId: Int): Unit = active.get().foreach(_ += rddId)
 
   /** Unpersist the checkpointed RDD a frame reads (no-op for frames
     * whose plan has no [[LogicalRDD]] leaf). For loop-carried
@@ -96,51 +80,17 @@ object BlockHygiene {
   private def persistedRddId(ck: DataFrame): Option[Int] =
     ck.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd.id }
 
-  /** Debug re-leak detector. [[releasingNewPersists]] ALWAYS diffs
-    * the driver's persistent-RDD registry across the bracket and
-    * invokes this handler with any new persisted RDD the body created
-    * WITHOUT [[checkpointTracked]] — the silent re-leak class this
-    * module exists to prevent (a future plain `.localCheckpoint()`
-    * added deep inside a bracketed Dedup/TextStats helper would
-    * otherwise leak one persisted RDD per micro-batch, detected only
-    * in a long-running stream). Only the DEFAULT handler is gated
-    * (prints solely under `-Dgraft.blockHygiene.debug=true`); tests
-    * swap the handler to observe every report. Ids registered by
-    * other concurrently-live brackets are excluded from the diff via
-    * [[liveBufs]]; an id another bracket registers in the instant
-    * between that snapshot and the diff can still slip through, so
-    * the report is advisory — the detector only REPORTS and never
-    * unpersists an untracked id, because in a shared session that id
-    * may belong to a concurrently-running query whose only copy the
-    * checkpoint is. The sweep itself stays tracked-ids-only.
-    */
-  @volatile var onUntracked: Set[Int] => Unit = ids =>
-    if (sys.props.get("graft.blockHygiene.debug").contains("true"))
-      System.err.println(
-        s"[BlockHygiene] untracked new persisted RDDs inside bracket " +
-        s"(plain localCheckpoint instead of checkpointTracked?): " +
-        ids.toSeq.sorted.mkString(", "))
-
+  /** Run `body` with a fresh bracket on this thread; on exit, unpersist
+    * every RDD registered inside it. */
   def releasingNewPersists[A](spark: SparkSession)(body: => A): A = {
     val buf = mutable.Set.empty[Int]
-    val before = spark.sparkContext.getPersistentRDDs.keySet
     val saved = active.get()
     active.set(Some(buf))
-    liveBufs.synchronized { liveBufs += buf }
     try body
     finally {
       active.set(saved)
       val registry = spark.sparkContext.getPersistentRDDs
-      // snapshot under the lock: this bracket's ids to sweep, and the
-      // ids concurrent live brackets tracked (theirs, not re-leaks)
-      val (mine, others) = liveBufs.synchronized {
-        liveBufs -= buf
-        (buf.toSet, liveBufs.iterator.flatten.toSet)
-      }
-      val untracked = registry.keySet.toSet -- before -- mine -- others
-      if (untracked.nonEmpty) onUntracked(untracked)
-      mine.foreach(id =>
-        registry.get(id).foreach(_.unpersist(blocking = false)))
+      buf.foreach(id => registry.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.textops
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import graft.textops.TextHash._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -129,7 +130,7 @@ object Bpe {
       .orderBy($"pair_count".desc, $"lft".asc, $"rgt".asc).limit(1)
       .selectExpr(s"$r as round", "lft", "rgt", "pair_count",
         "concat(lft, rgt) as new_symbol")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     // freq·|seq| rides the checkpoint pass as a 4th column so the
     // round's n_symbols_after needs no second job (round 17 — same
     // fold the CC loop's labelSum got); the helper returns the sum and
@@ -161,13 +162,6 @@ object Bpe {
       .orderBy($"round")
   }
 
-  /** Unpersist a localCheckpoint'd frame's backing RDD (the frame is
-    * dead after this — lineage was truncated). */
-  private def unpersistCk(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   /** The merge loop: runs the unrolled rounds; returns (merge rows,
     * final re-encoded vocabulary `(word, freq, seq)`). Measured
     * round-cost law (sf1, R=16 and R=64 — BASELINE.md "BPE merge-round
@@ -186,7 +180,7 @@ object Bpe {
     var seqs = words
       .selectExpr("word", "freq",
         "transform(sequence(1, length(word)), ci -> substring(word, ci, 1)) as seq")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val rows = (1 to Rounds).map { r =>
       // n_symbols_after arrives WITH the round (computed inside the
       // vocabulary checkpoint's materialization pass — no second job,
@@ -198,7 +192,7 @@ object Bpe {
       // merge-round law") the difference between a bounded loop and an
       // unbounded block leak.
       val (best, applied, nAfter) = round(spark, seqs, r)
-      unpersistCk(seqs)
+      BlockHygiene.unpersistCheckpointed(seqs)
       seqs = applied
       best.withColumn("n_symbols_after", lit(nAfter))
     }

@@ -1,6 +1,7 @@
 package graft.textops
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import graft.textops.TextHash._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -267,7 +268,7 @@ object Dedup {
       .selectExpr("doc_id",
         "array_sort(array_distinct(transform(shingle_hashes(text), sx -> cast(sx as int)))) as ds")
       .where("size(ds) >= 1")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val small = sets.count() <= BroadcastVerifyMaxDocs
     val s1 = sets.selectExpr("doc_id as doc1", "ds as ds1")
     val s2 = sets.selectExpr("doc_id as doc2", "ds as ds2")
@@ -424,7 +425,7 @@ object Dedup {
     */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val bands = minhashBuckets(spark, sfDir).localCheckpoint()
+    val bands = BlockHygiene.checkpointTracked(minhashBuckets(spark, sfDir))
     incrementalVerdicts(spark, sfDir, bands.where($"is_new"), bands)
   }
 
@@ -671,7 +672,7 @@ object Dedup {
     val edges = pairs.toDF("a", "b")
     val sym = edges.select($"a".as("src"), $"b".as("dst"))
       .union(edges.select($"b".as("src"), $"a".as("dst")))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     // Isolated nodes (no edge) can never change label — keep them out
     // of the loop entirely and attach them at the end. In a dedup
     // corpus the near-dup graph touches a small fraction of documents,
@@ -762,7 +763,7 @@ object Dedup {
       // call (lineage is truncated, but nothing re-evaluates the old
       // frame; labels0 is the one exception, read by `isolated`)
       if (labels ne labels0)
-        graft.streaming.BlockHygiene.unpersistCheckpointed(labels)
+        BlockHygiene.unpersistCheckpointed(labels)
       converged = s == prevSum
       prevSum = s
       labels = next
@@ -1043,7 +1044,7 @@ object Dedup {
     // encoding join; measured with the native word_shingles front end,
     // the checkpoint still beats recomputing those three subtrees
     val inv = shingled.selectExpr("doc_id", "explode(shingles) as sh")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     // global rarity order over the shingle dictionary — contiguous ids
     // WITHOUT a single-partition window: range-partition on the rank
     // order, sort within partitions, zipWithIndex. The ids are
@@ -1075,8 +1076,9 @@ object Dedup {
       // CC labelSum trick), then assign ids from the cumulative
       // offsets while reading the materialized blocks. Ids are
       // bit-identical to zipWithIndex's (global position in
-      // (freq, sh) order, +1).
-      sortedRdd.localCheckpoint()
+      // (freq, sh) order, +1). Registered like every checkpoint, so
+      // an enclosing BlockHygiene bracket releases it.
+      BlockHygiene.trackPersisted(sortedRdd.localCheckpoint().id)
       val counts = sortedRdd
         .mapPartitionsWithIndex { (pid, it) =>
           var c = 0L
@@ -1106,7 +1108,7 @@ object Dedup {
     inv.join(broadcast(ranked), "sh")
       .groupBy($"doc_id")
       .agg(sort_array(collect_list($"rid")).as("ids"))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
   }
 
   /** Rarest-prefix posting rows for the PPJoin candidate stage:
@@ -1342,7 +1344,7 @@ object Dedup {
   private def winnowSelected(docs: DataFrame, k: Int, radius: Int): DataFrame =
     docs
       .selectExpr("doc_id", s"explode(winnow_hashes(text, $k, $radius)) as fp")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
 
   /** Core over any (doc_id, text) frame — the query below binds it to
     * the documents table; the planted-run property test drives it over
@@ -1632,9 +1634,10 @@ object Dedup {
       .select(col("x.doc_id").as("doc1"), col("y.doc_id").as("doc2"),
         (col("x.gcnt") <= dfCapN).as("kept"))
       .groupBy($"doc1", $"doc2").agg(max($"kept").as("capped_kept"))
-      .localCheckpoint() // feeds 2× candidate counts AND the verify
+      // feeds 2× candidate counts AND the verify
+      .transform(BlockHygiene.checkpointTracked)
     val verified = ngramVerify(enc, nCand.select($"doc1", $"doc2"), jaccardT)
-      .join(nCand, Seq("doc1", "doc2")).localCheckpoint()
+      .join(nCand, Seq("doc1", "doc2")).transform(BlockHygiene.checkpointTracked)
     val ngramRow = encTotals
       .crossJoin(cnt(ngramPrefix(enc, jaccardT), "postings_filtered"))
       .crossJoin(cnt(nCand, "candidates"))
@@ -1655,7 +1658,7 @@ object Dedup {
     // further with the exact positional filter; survivors — the column
     // that matters for filter health — are identical under both)
     val cCand = containmentCandidates(enc, containT, positional = false)
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val containRow = encTotals
       .crossJoin(cnt(containmentPrefix(enc, containT), "postings_filtered"))
       .crossJoin(cnt(cCand, "candidates"))
@@ -1672,7 +1675,7 @@ object Dedup {
       .join(kept.select($"fp", $"doc_id".as("doc2")), "fp")
       .where($"doc1" < $"doc2")
       .groupBy($"doc1", $"doc2").agg(count(lit(1)).as("shared_fp"))
-      .localCheckpoint() // feeds candidates AND survivors
+      .transform(BlockHygiene.checkpointTracked) // feeds candidates AND survivors
     val substrRow = broadcast(docs.agg(count(lit(1)).as("n_docs")))
       .crossJoin(cnt(sel, "postings_full"))
       .crossJoin(cnt(kept, "postings_filtered"))
@@ -1689,7 +1692,8 @@ object Dedup {
     val mBands = minhashBandRows(spark, sfDir)
       .withColumn("occ", count(lit(1)).over(
         Window.partitionBy($"band_idx", $"band_hash")))
-      .localCheckpoint() // feeds 2× postings counts AND the pair join
+      // feeds 2× postings counts AND the pair join
+      .transform(BlockHygiene.checkpointTracked)
     val mPairable = mBands.where($"occ" >= 2) // singleton buckets can't pair
     val mCand = mPairable.as("x")
       .join(mPairable.as("y"),
@@ -1701,7 +1705,8 @@ object Dedup {
         s"x.occ <= $dfCapN as kept")
       .groupBy($"doc1", $"doc2")
       .agg(max($"sim").as("sim"), max($"kept").as("capped_kept"))
-      .localCheckpoint() // feeds 2× candidate AND 2× survivor counts
+      // feeds 2× candidate AND 2× survivor counts
+      .transform(BlockHygiene.checkpointTracked)
     val mhDocs = broadcast(docs.agg(count(lit(1)).as("n_docs")))
     val mRow = mhDocs
       .crossJoin(cnt(mBands, "postings_full"))
@@ -1913,13 +1918,14 @@ object Dedup {
     val capsArr = array(caps.map(lit(_)): _*)
     val sel = winnowSelected(Tables.documents(spark, sfDir), k, radius)
     val dfs = sel.groupBy($"fp").agg(count(lit(1)).as("df"))
-      .where($"df" <= caps.max).localCheckpoint()
+      .where($"df" <= caps.max).transform(BlockHygiene.checkpointTracked)
     val kept = sel.join(dfs, "fp") // (fp, doc_id, df)
     val pairDf = kept.select($"fp", $"df", $"doc_id".as("doc1"))
       .join(kept.select($"fp", $"doc_id".as("doc2")), "fp")
       .where($"doc1" < $"doc2")
       .groupBy($"doc1", $"doc2", $"df").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // the ×|caps| explode below runs on this aggregate
+      // the ×|caps| explode below runs on this aggregate
+      .transform(BlockHygiene.checkpointTracked)
     val perCap = pairDf.withColumn("max_df", explode(capsArr))
       .where($"df" <= $"max_df")
       .groupBy($"max_df", $"doc1", $"doc2").agg(sum($"cnt").as("shared_fp"))

@@ -1,6 +1,7 @@
 package graft.textops
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import graft.textops.TextHash._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -70,7 +71,7 @@ object Packing {
     val parts = toks
       .repartitionByRange(np, $"doc_id")
       .sortWithinPartitions($"doc_id")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val ptot: Array[(Int, Long)] = parts.as[(Long, Long)].mapPartitions { it =>
       var s = 0L
       it.foreach(s += _._2)

@@ -2,6 +2,7 @@ package graft.textops
 
 import graft.Tables
 import graft.sources.ParquetSink
+import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -130,7 +131,7 @@ object Pipelines {
     import spark.implicits._
     val newBands = Dedup.minhashBuckets(spark, sfDir).where(expr(bandPred))
       .withColumn("pb", pmod($"band_hash", lit(BucketPartitions)))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val base = spark.read.parquet(s"$outDir/minhash_buckets")
     val ySide = base.select(newBands.columns.toIndexedSeq.map(col): _*)
       .union(newBands)
@@ -192,8 +193,8 @@ object Pipelines {
     val spark = batch.sparkSession
     // the localCheckpoint'd band table lives exactly one batch: release
     // its blocks on exit or a long-running stream leaks one per batch
-    graft.streaming.BlockHygiene.releasingNewPersists(spark) {
-    val bands = graft.streaming.BlockHygiene.checkpointTracked(
+    BlockHygiene.releasingNewPersists(spark) {
+    val bands = BlockHygiene.checkpointTracked(
       Dedup.minhashBucketsFrom(
           batch.select(col("doc_id"), col("text"), lit(true).as("is_new")))
         .withColumn("pb", pmod(col("band_hash"), lit(BucketPartitions))))
@@ -284,8 +285,8 @@ object Pipelines {
     val spark = batch.sparkSession
     // one-batch lifetime for the checkpointed span table (see
     // dedupIncrementalBatch): release its blocks on exit
-    graft.streaming.BlockHygiene.releasingNewPersists(spark) {
-    val spans = graft.streaming.BlockHygiene.checkpointTracked(
+    BlockHygiene.releasingNewPersists(spark) {
+    val spans = BlockHygiene.checkpointTracked(
       Dedup.docSpans(batch.select(col("doc_id"), col("text")), span))
     Dedup.spanVerdicts(spans, readSpanIndex(spark, outDir, beforeBatch = id))
       .withColumn("batch_id", lit(id))
@@ -397,7 +398,8 @@ object Pipelines {
         .join(broadcast(cent), assign("cell") === cent("cent_id"))
         .selectExpr("vec_id", "nrm", "cell",
           "zip_with(v, centv, (ra, rb) -> ra - rb) as v")
-        .localCheckpoint() // feeds codebook training AND the encode
+        // feeds codebook training AND the encode
+        .transform(BlockHygiene.checkpointTracked)
       // seed the residual codebook PAST the IVF seed range: vectors
       // with vec_id < C are their own cell centroid, so their
       // residuals are zero vectors — seeding from them collapses the
@@ -472,7 +474,7 @@ object Pipelines {
     val ctf = Tables.documents(spark, sfDir)
       .selectExpr(s"explode(${TextHash.tokensSpark}) as token")
       .groupBy($"token").agg(count(lit(1)).as("ctf"))
-      .localCheckpoint() // feeds the total AND the top-V cut
+      .transform(BlockHygiene.checkpointTracked) // feeds the total AND the top-V cut
     val ctot = ctf.agg(sum($"ctf").as("ctotal"))
     ctf.orderBy($"ctf".desc, $"token").limit(topV)
       .crossJoin(broadcast(ctot))
@@ -640,7 +642,7 @@ object Pipelines {
         "shingle_hashes(text) as sh")
       .where("bucket >= 95 and size(sh) >= 1")
       .selectExpr("doc_id", "explode(sh) as shingle").distinct()
-      .localCheckpoint() // feeds totals AND the partitioned write
+      .transform(BlockHygiene.checkpointTracked) // feeds totals AND the partitioned write
     ParquetSink.writePartitioned(
       evalShingles.withColumn("ps", pmod($"shingle", lit(BucketPartitions))),
       s"$outDir/eval_shingles", Seq("ps"))
@@ -692,7 +694,7 @@ object Pipelines {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         // bracket: the probe path checkpoints the batch's ranked cells
         // (Similarity.ivfRankedFrom) — swept here per micro-batch
-        graft.streaming.BlockHygiene.releasingNewPersists(batch.sparkSession) {
+        BlockHygiene.releasingNewPersists(batch.sparkSession) {
           annSearchFrom(batch.sparkSession, outDir, batch, k, nProbe,
               excludeSelfId)
             .withColumn("batch_id", lit(id))
@@ -857,7 +859,7 @@ object Pipelines {
     val spark = batch.sparkSession
     // the ranked-cells checkpoint lives exactly one batch: release its
     // blocks on exit or a long-running stream leaks one per batch
-    graft.streaming.BlockHygiene.releasingNewPersists(spark) {
+    BlockHygiene.releasingNewPersists(spark) {
       val q = Similarity.withNorm(batch, "embedding", "vec_id")
       val (verdicts, batchAssign) = embDedupJudge(q, id, outDir, threshold)
       verdicts.withColumn("batch_id", lit(id))

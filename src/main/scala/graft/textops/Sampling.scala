@@ -1,6 +1,7 @@
 package graft.textops
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import graft.textops.TextHash._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -168,7 +169,7 @@ object Sampling {
     val counts = docs.groupBy($"lang").agg(count(lit(1)).as("n_docs"))
       .withColumn("wq",
         expr("cast(floor(sqrt(cast(n_docs as double)) * 1000000) as bigint)"))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val totals = counts.agg(sum($"n_docs").as("n_total"),
       sum($"wq").as("total_wq"))
     val probs = counts.crossJoin(broadcast(totals))
@@ -259,7 +260,7 @@ object Sampling {
       .selectExpr("source", s"size($tokensSpark) as n_tokens")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"), sum($"n_tokens").as("src_tokens"))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     mixturePlanFinish(counts)
   }
 

@@ -1,6 +1,7 @@
 package graft.textops
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -365,9 +366,7 @@ object Similarity {
     val c = cellsFor(nCentroids, nVecs(spark, sfDir))
     val np = probesFor(nProbe, c)
     val e = vectors(spark, sfDir)
-    // tracked checkpoint: plain localCheckpoint outside a bracket;
-    // inside a foreachBatch bracket the block is swept per micro-batch
-    graft.streaming.BlockHygiene.checkpointTracked(
+    BlockHygiene.checkpointTracked(
       e.crossJoin(flatCentRow(seededCentroids(e, c)))
         .selectExpr("vec_id",
           s"posexplode(ivf_top_cells(v, nrm, cflat, cnorms, cids, $np)) " +
@@ -408,11 +407,7 @@ object Similarity {
     */
   private[textops] def ivfRankedFrom(e: DataFrame, cent: DataFrame,
                             nProbe: Int): DataFrame = {
-    // tracked checkpoint: identical to localCheckpoint for batch
-    // callers, but a streaming foreachBatch bracket (annSearchStream,
-    // the embedding-dedup crawl loop) sweeps the block per micro-batch
-    // instead of leaking one per batch for the life of the stream
-    graft.streaming.BlockHygiene.checkpointTracked(
+    BlockHygiene.checkpointTracked(
       e.crossJoin(flatCentRow(cent))
         .selectExpr("vec_id", "v", "nrm",
           s"posexplode(ivf_top_cells(v, nrm, cflat, cnorms, cids, $nProbe)) " +
@@ -453,7 +448,7 @@ object Similarity {
                                       c: Int, rounds: Int): DataFrame = {
     import spark.implicits._
     val e = vectors(spark, sfDir)
-    var cent = seededCentroids(e, c).localCheckpoint()
+    var cent = BlockHygiene.checkpointTracked(seededCentroids(e, c))
     for (_ <- 1 to rounds) {
       // fused argmax assignment (np = 1): no n·C rows, no rank window —
       // the same bit-exact order as the windowed form (ivfRankedFrom)
@@ -479,7 +474,7 @@ object Similarity {
         .selectExpr("cent_id", "coalesce(newv, oldv) as centv")
         .selectExpr("cent_id", "centv",
           s"sqrt(${dotSpark("centv", "centv", "cn")}) as centn")
-        .localCheckpoint()
+        .transform(BlockHygiene.checkpointTracked)
     }
     cent
   }
@@ -1483,7 +1478,7 @@ object Similarity {
     // equi-joins beyond — the verifyIntersect flip). The approx score,
     // the window spec, and the exact cosine expression are unchanged,
     // so the output is bit-identical.
-    val qtab = graft.streaming.BlockHygiene.checkpointTracked(
+    val qtab = BlockHygiene.checkpointTracked(
       e.selectExpr("vec_id", "nrm", "v",
           "array_max(transform(v, xa -> abs(xa))) as s")
         .selectExpr("vec_id", "nrm", "v", "s",
@@ -1586,11 +1581,11 @@ object Similarity {
     // encode side and the query-LUT side
     val vsub = assign
       .selectExpr("vec_id", s"posexplode($pqSlices) as (j, subv)")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val cent = vsub.where($"vec_id" < PqK)
       .selectExpr("j", "vec_id as cent_id", "subv as centv",
         s"${dotSpark("subv", "subv", "pc")} / 2D as cn2h")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val codes = vsub.join(broadcast(cent), "j")
       .withColumn("score", expr(s"${dotSpark("subv", "centv", "pe")} - cn2h"))
       .withColumn("erk", row_number().over(
@@ -1724,7 +1719,7 @@ object Similarity {
     import spark.implicits._
     val vsub = vecs
       .selectExpr("vec_id", s"posexplode($pqSlices) as (j, subv)")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     // seeds are the [0, k) id window — callers that want a different
     // seed population remap ids first (the residual build shifts by
     // −C so cell-seed vectors, whose residuals are zero, fall below
@@ -1732,7 +1727,7 @@ object Similarity {
     var cent = vsub.where($"vec_id" >= 0 && $"vec_id" < k)
       .selectExpr("j", "vec_id as cent_id", "subv as centv",
         s"${dotSpark("subv", "subv", "pc")} / 2D as cn2h")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     for (_ <- 1 to rounds) {
       val assigned = vsub.join(broadcast(cent), "j")
         .withColumn("score", expr(s"${dotSpark("subv", "centv", "pt")} - cn2h"))
@@ -1757,7 +1752,7 @@ object Similarity {
         .selectExpr("j", "cent_id", "coalesce(newv, oldv) as centv")
         .selectExpr("j", "cent_id", "centv",
           s"${dotSpark("centv", "centv", "pc")} / 2D as cn2h")
-        .localCheckpoint()
+        .transform(BlockHygiene.checkpointTracked)
     }
     cent
   }

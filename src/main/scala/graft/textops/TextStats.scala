@@ -1,6 +1,7 @@
 package graft.textops
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import graft.textops.TextHash._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -205,7 +206,7 @@ object TextStats {
       .selectExpr("doc_id", "size(tokens) as n_tokens", "explode(tokens) as term")
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("cnt"), min($"n_tokens").as("n_tokens"))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val df = toks.groupBy($"term").agg(count(lit(1)).as("doc_freq"))
     // corpus size as a broadcast 1-row join, NOT an eager .count():
     // the query stays lazy and single-job (no driver-side action in a
@@ -273,7 +274,7 @@ object TextStats {
     val counts = Tables.documents(spark, sfDir)
       .selectExpr(s"explode($tokensSpark) as token")
       .groupBy($"token").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val total = counts.agg(sum($"cnt").as("total"))
     counts.orderBy($"cnt".desc, $"token".asc).limit(v)
       .crossJoin(broadcast(total))
@@ -638,7 +639,7 @@ object TextStats {
       .selectExpr("doc_id", "dl", "explode(tokens) as token")
       .where(expr(qList))
       .groupBy($"doc_id", $"dl", $"token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val dfreq = hits.groupBy($"token").agg(count(lit(1)).as("df"))
     hits.join(broadcast(dfreq), "token")
       .crossJoin(broadcast(corpus))
@@ -822,7 +823,7 @@ object TextStats {
         "explode(transform(sequence(1, cast(n - 1 as int)), ig -> " +
           "struct(element_at(tokens, ig) as w1, element_at(tokens, ig + 1) as w2))) as bg")
       .selectExpr("doc_id", "is_train", "bg.w1 as w1", "bg.w2 as w2")
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     val train = bigrams.where($"is_train")
     val model = train.groupBy($"w1", $"w2").agg(count(lit(1)).as("c12"))
     val ctx = train.groupBy($"w1").agg(count(lit(1)).as("c1"))
@@ -1075,7 +1076,7 @@ object TextStats {
       .selectExpr("doc_id", s"$tokensSpark as tokens")
       .select($"doc_id", posexplode($"tokens").as(Seq("pos", "token")))
       .where(expr(inList("token", phrase.distinct)))
-      .localCheckpoint()
+      .transform(BlockHygiene.checkpointTracked)
     phraseJoin(postings, phrase)
   }
 
@@ -1164,10 +1165,8 @@ object TextStats {
                                        k: Int = 100): DataFrame = {
     val spark = stfIn.sparkSession
     import spark.implicits._
-    // four consumers below; tracked so corpusDriftStream's bracket can
-    // release exactly this block per micro-batch (plain localCheckpoint
-    // when called from the batch query — see BlockHygiene)
-    val stf = graft.streaming.BlockHygiene.checkpointTracked(stfIn)
+    // four consumers below
+    val stf = BlockHygiene.checkpointTracked(stfIn)
     val stot = stf.groupBy($"source").agg(sum($"tf").as("stotal"))
     val ctf = stf.groupBy($"token").agg(sum($"tf").as("ctf"))
       .orderBy($"ctf".desc, $"token").limit(topV)
@@ -1206,7 +1205,7 @@ object TextStats {
         // corpusDriftFinish localCheckpoints the count frame; release
         // the batch's blocks once the report is written so a long-
         // running stream doesn't leak one persisted RDD per batch
-        graft.streaming.BlockHygiene.releasingNewPersists(
+        BlockHygiene.releasingNewPersists(
             stf.sparkSession) {
           corpusDriftFinish(stf, topV, k)
             .write.mode("overwrite").parquet(resultDir)

@@ -71,24 +71,10 @@ class AnalyticsSpec extends AnyFunSuite {
   test("Session.tune AQE settings: a KB-scale shuffle coalesces to one task") {
     // pins the load-bearing bench config (BASELINE.md v2): byte-sized
     // AQE coalescing, not core-count-first — without it every tiny
-    // shuffle fans out `parallelism` near-empty tasks
-    val keys = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(keys(0), "true")
-      spark.conf.set(keys(1), "true")
-      spark.conf.set(keys(2), "false")
-      spark.conf.set(keys(3), "16m")
-      val parts = events.groupBy($"event_type").count().rdd.getNumPartitions
-      assert(parts == 1, s"KB-scale shuffle used $parts partitions")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    // shuffle fans out `parallelism` near-empty tasks. The shared
+    // session is Session.tuneStreaming as built, no overrides.
+    val parts = events.groupBy($"event_type").count().rdd.getNumPartitions
+    assert(parts == 1, s"KB-scale shuffle used $parts partitions")
   }
 
   test("Bench totals: a failed query never lowers the headline and is named in failed") {

@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import graft.streaming.BlockHygiene
 import org.apache.spark.sql.DataFrame
@@ -9,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the ownership contract of [[BlockHygiene]]: a bracket releases
   * exactly the RDDs ITS body registered — not a concurrent query's
   * checkpoints, not an outer bracket's, and (the round-11 fix) not via
-  * a buffer inherited by a thread spawned inside the bracket.
+  * a buffer inherited by a thread spawned inside the bracket — and that
+  * the main sources take no checkpoint outside its tracked call.
   */
 class BlockHygieneSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -40,58 +45,35 @@ class BlockHygieneSpec extends AnyFunSuite {
 
   test("fresh-stats checkpoint is bracket-tracked: swept on exit, not reported as a re-leak") {
     val before = persistedIds
-    val reported = scala.collection.mutable.Set.empty[Int]
-    val saved = BlockHygiene.onUntracked
-    BlockHygiene.onUntracked = ids => reported ++= ids
-    try {
-      BlockHygiene.releasingNewPersists(spark) {
-        org.apache.spark.sql.execution.GraftCheckpoint
-          .localCheckpointFreshStats(Seq(1, 2).toDF("v")).count()
-      }
-    } finally BlockHygiene.onUntracked = saved
+    BlockHygiene.releasingNewPersists(spark) {
+      org.apache.spark.sql.execution.GraftCheckpoint
+        .localCheckpointFreshStats(Seq(1, 2).toDF("v")).count()
+    }
     assert((persistedIds -- before).isEmpty,
       "fresh-stats checkpoint leaked past the bracket sweep")
-    assert(reported.isEmpty,
-      s"tracked fresh-stats checkpoint mis-reported as re-leak: $reported")
   }
 
   test("materializePaa's series checkpoint is bracket-tracked: swept, not a re-leak") {
     val dir = java.nio.file.Files.createTempDirectory("graftpaahyg").toString
     val before = persistedIds
-    val reported = scala.collection.mutable.Set.empty[Int]
-    val saved = BlockHygiene.onUntracked
-    BlockHygiene.onUntracked = ids => reported ++= ids
-    try {
-      BlockHygiene.releasingNewPersists(spark) {
-        graft.analytics.TimeSeriesAnalytics
-          .materializePaa(spark, SparkTestBase.sf, dir)
-      }
-    } finally BlockHygiene.onUntracked = saved
+    BlockHygiene.releasingNewPersists(spark) {
+      graft.analytics.TimeSeriesAnalytics
+        .materializePaa(spark, SparkTestBase.sf, dir)
+    }
     assert((persistedIds -- before).isEmpty,
       "materializePaa's series checkpoint leaked past the bracket sweep")
-    assert(reported.isEmpty,
-      s"materializePaa checkpoint mis-reported as re-leak: $reported")
   }
 
   test("TS pair tiers' series checkpoints are bracket-tracked: swept, not re-leaks") {
-    // tsSimilarity / tsSimilarityPaaCapped graduated from bare
-    // localCheckpoint in round 16 — zero bare sites remain in the file
     val before = persistedIds
-    val reported = scala.collection.mutable.Set.empty[Int]
-    val saved = BlockHygiene.onUntracked
-    BlockHygiene.onUntracked = ids => reported ++= ids
-    try {
-      BlockHygiene.releasingNewPersists(spark) {
-        graft.analytics.TimeSeriesAnalytics
-          .tsSimilarity(spark, SparkTestBase.sf).count()
-        graft.analytics.TimeSeriesAnalytics
-          .tsSimilarityPaaCapped(spark, SparkTestBase.sf).count()
-      }
-    } finally BlockHygiene.onUntracked = saved
+    BlockHygiene.releasingNewPersists(spark) {
+      graft.analytics.TimeSeriesAnalytics
+        .tsSimilarity(spark, SparkTestBase.sf).count()
+      graft.analytics.TimeSeriesAnalytics
+        .tsSimilarityPaaCapped(spark, SparkTestBase.sf).count()
+    }
     assert((persistedIds -- before).isEmpty,
       "TS pair tiers' series checkpoints leaked past the bracket sweep")
-    assert(reported.isEmpty,
-      s"tracked TS checkpoints mis-reported as re-leak: $reported")
   }
 
   test("fresh-stats checkpoint preserves the physical output partitioning") {
@@ -134,38 +116,27 @@ class BlockHygieneSpec extends AnyFunSuite {
       "outer bracket failed to release its own (incl. post-inner) blocks")
   }
 
-  test("debug detector reports a plain localCheckpoint inside a bracket") {
-    // the silent-re-leak class: a future helper calls bare
-    // localCheckpoint() inside a bracketed body — the sweep won't (and
-    // must not) unpersist it, but the detector should name it so the
-    // leak is caught in tests, not in a long-running stream
-    val savedReporter = BlockHygiene.onUntracked
-    @volatile var reported: Set[Int] = Set.empty
-    var leaked: DataFrame = null
-    try {
-      BlockHygiene.onUntracked = ids => reported = ids
-      BlockHygiene.releasingNewPersists(spark) {
-        ckpt(70).count()
-        leaked = Seq(71).toDF("v").localCheckpoint()
-        leaked.count()
-      }
-    } finally BlockHygiene.onUntracked = savedReporter
-    val leakedId = leaked.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id }.get
-    assert(reported.contains(leakedId),
-      s"detector missed the untracked checkpoint $leakedId (got $reported)")
-    assert(leaked.count() == 1) // reported, NOT unpersisted
-    leaked.unpersist(blocking = true)
-  }
-
-  test("debug detector stays silent when everything is tracked") {
-    val savedReporter = BlockHygiene.onUntracked
-    @volatile var fired = false
-    try {
-      BlockHygiene.onUntracked = _ => fired = true
-      BlockHygiene.releasingNewPersists(spark) { ckpt(80).count() }
-    } finally BlockHygiene.onUntracked = savedReporter
-    assert(!fired, "detector false-positived on a fully-tracked bracket")
+  test("every main-source localCheckpoint goes through the tracked call") {
+    // the one-call contract, checked on the source: a bare
+    // localCheckpoint reached from a bracketed foreachBatch body would
+    // leak one persisted RDD per micro-batch, which no sweep can see.
+    // An RDD-level checkpoint passes only if the same line registers
+    // it (trackPersisted); comments are ignored.
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
+    val exempt = Set("BlockHygiene.scala", "GraftCheckpoint.scala")
+    val files = Using.resource(Files.walk(root))(_.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList)
+    assert(files.exists(_.getFileName.toString == "Dedup.scala"))
+    val bare = for {
+      f <- files if !exempt(f.getFileName.toString)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.split("//", 2)(0)
+      if !code.trim.startsWith("*") && code.contains(".localCheckpoint(") &&
+        !code.contains("trackPersisted(")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(bare.isEmpty,
+      s"localCheckpoint outside BlockHygiene.checkpointTracked:\n${bare.mkString("\n")}")
   }
 
   test("a thread spawned inside a bracket does not inherit the tracked buffer") {

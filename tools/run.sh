@@ -8,7 +8,7 @@ cd "$(dirname "$0")/.."
 MEM=16g
 if [ "${1:-}" = "-mem" ]; then MEM="$2"; shift 2; fi
 MAIN="$1"; shift
-# extra JVM flags (e.g. -Dgraft.blockHygiene.debug=true) via GRAFT_JAVA_OPTS
+# extra JVM flags (e.g. -Dlog4j2.configurationFile=/path/log4j2.properties) via GRAFT_JAVA_OPTS
 exec java -Xmx"$MEM" -Xss16m ${GRAFT_JAVA_OPTS:-} \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
