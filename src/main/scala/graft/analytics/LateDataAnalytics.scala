@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.Tables
+import graft.sources.ParquetSink
 import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -173,10 +174,12 @@ object LateDataAnalytics {
     * split on the same input (pinned in LateDataSpec;
     * restart-from-checkpoint pinned in StreamingRecoverySpec).
     *
-    * Sink contract matches the serving streams: both splits and the
-    * wm record are partitioned by `batch_id` and written with dynamic
-    * partition overwrite, so a replayed micro-batch rewrites exactly
-    * its own partition — idempotent without a transactional sink.
+    * Sink rule of the serving streams: both splits and the wm record
+    * are written through [[ParquetSink.overwriteBatch]], so a replayed
+    * micro-batch rewrites exactly its own `batch_id` partition —
+    * idempotent without a transactional sink — and the stream runs
+    * through [[BlockHygiene.eachBatch]], whose bracket releases the
+    * batch's checkpoint when it returns.
     * Scale shape: per batch, one bounded window pass + three appends;
     * carried state is ONE long regardless of stream length.
     */
@@ -231,23 +234,18 @@ object LateDataAnalytics {
         .withColumn("wm_all", greatest(col("wm"), carriedCol))
         .withColumn("late", coalesce(
           col("ts") < col("wm_all") - expr(s"interval $lateness"), lit(false)))
-        .withColumn("batch_id", lit(batchId))
         // one compute: feeds both splits + the max
         .transform(BlockHygiene.checkpointTracked)
       def part(df: DataFrame, sub: String): Unit =
-        df.select(col("event_id"), col("user_id"), col("event_type"),
-            col("ts"), col("wm_all").as("watermark"), col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$root/$sub")
+        ParquetSink.overwriteBatch(
+          df.select(col("event_id"), col("user_id"), col("event_type"),
+            col("ts"), col("wm_all").as("watermark")), batchId, s"$root/$sub")
       part(out.filter(col("late")), "late")
       part(out.filter(!col("late")), "ontime")
       val batchMax = out.agg(max(unix_micros(col("ts")))).head().getLong(0)
       val newMax = math.max(carried, batchMax)
-      spark.range(1).select(lit(batchId).as("batch_id"), lit(newMax).as("max_us"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(s"$root/wm")
+      ParquetSink.overwriteBatch(
+        spark.range(1).select(lit(newMax).as("max_us")), batchId, s"$root/wm")
       carriedUs = Some(newMax)
     }
   }
@@ -257,7 +255,7 @@ object LateDataAnalytics {
     */
   def lateCaptureWriter(events: DataFrame, root: String,
                         lateness: String = Lateness) =
-    events.writeStream
-      .foreachBatch(new LateCapture(root, lateness).onBatch _)
+    BlockHygiene.eachBatch(events.writeStream)(
+        new LateCapture(root, lateness).onBatch)
       .option("checkpointLocation", s"$root/ck")
 }

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.Tables
+import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -649,15 +650,15 @@ object RelationalAnalytics {
   /** The quantile dashboard AS A STREAM: the bounded sample is the
     * streaming aggregation state (complete mode, ≤ K pairs per
     * group), quantiles re-finished per micro-batch on the O(groups)
-    * snapshot and fully overwritten — replay-idempotent (the
-    * mixturePlanStream contract). */
+    * snapshot and fully overwritten — replay-idempotent by
+    * construction (the complete-mode form of the
+    * [[BlockHygiene.eachBatch]] sink). */
   def valueQuantilesStream(events: DataFrame, resultDir: String) =
-    valueQuantilesState(events)
-      .writeStream.outputMode("complete")
-      .foreachBatch { (snap: DataFrame, _: Long) =>
-        valueQuantilesFinish(snap)
-          .write.mode("overwrite").parquet(resultDir)
-      }
+    BlockHygiene.eachBatch(
+      valueQuantilesState(events).writeStream.outputMode("complete")) {
+      (snap, _) =>
+        valueQuantilesFinish(snap).write.mode("overwrite").parquet(resultDir)
+    }
 
   val valueQuantilesSketchOracle: String = {
     import graft.textops.TextHash.phDuck

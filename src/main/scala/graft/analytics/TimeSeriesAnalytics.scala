@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.Tables
+import graft.sources.ParquetSink
 import graft.streaming.BlockHygiene
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -907,19 +908,14 @@ object TimeSeriesAnalytics {
 
   /** The PAA pattern match AS A STREAM: query series arrive
     * continuously, each micro-batch probed against the stored
-    * signature index via [[tsMatchPaaFrom]]; results land partitioned
-    * by batch_id with dynamic partition overwrite (replay-idempotent —
-    * the `annSearchStream` contract). */
+    * signature index via [[tsMatchPaaFrom]]; results land through
+    * [[graft.sources.ParquetSink.overwriteBatch]] (replay-idempotent). */
   def tsMatchPaaStream(queries: DataFrame, outDir: String,
                        resultDir: String) =
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        tsMatchPaaFrom(batch.sparkSession, outDir, batch)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(resultDir)
-      }
+    BlockHygiene.eachBatch(queries.writeStream) { (batch, id) =>
+      ParquetSink.overwriteBatch(
+        tsMatchPaaFrom(batch.sparkSession, outDir, batch), id, resultDir)
+    }
 
   /** Top-k nearest stored series for an arbitrary batch of
     * (query_id, arr) query series — exact scoring against the
@@ -946,20 +942,15 @@ object TimeSeriesAnalytics {
 
   /** TS search AS A STREAM: query series arrive continuously, each
     * micro-batch searched against the stored snapshot via
-    * [[tsSearchFrom]]; results land partitioned by batch_id with
-    * dynamic partition overwrite (replay-idempotent — the
-    * [[graft.textops.Pipelines.annSearchStream]] contract). */
+    * [[tsSearchFrom]]; results land through
+    * [[graft.sources.ParquetSink.overwriteBatch]] (replay-idempotent). */
   def tsSearchStream(queries: DataFrame, outDir: String,
                      resultDir: String, k: Int = 5,
                      excludeSelfId: Boolean = false) =
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        tsSearchFrom(batch.sparkSession, outDir, batch, k, excludeSelfId)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(resultDir)
-      }
+    BlockHygiene.eachBatch(queries.writeStream) { (batch, id) =>
+      ParquetSink.overwriteBatch(tsSearchFrom(batch.sparkSession, outDir,
+        batch, k, excludeSelfId), id, resultDir)
+    }
 
   def tsSimilarityPaaOracle(): String = {
     val nSeg = Days / Seg

@@ -92,7 +92,6 @@ private[cep] abstract class CepProcessor[O] extends BufferedEventProcessor[
 private[cep] class CepNfaProcessor(kk: Int, win: Long, isStrict: Boolean)
     extends CepProcessor[PatternMatch] {
   @transient private var partialsState: ListState[(Int, Long, Long, Long)] = _
-  @transient private var live: List[(Int, Long, Long, Long)] = Nil
 
   override protected def initDomain(): Unit =
     partialsState = getHandle.getListState("partials",
@@ -101,7 +100,7 @@ private[cep] class CepNfaProcessor(kk: Int, win: Long, isStrict: Boolean)
 
   override protected def step(key: Long, ready: Seq[(Long, Long, Long)],
                               wmUs: Long,
-                              out: scala.collection.mutable.ListBuffer[PatternMatch]): Unit = {
+                              out: scala.collection.mutable.ListBuffer[PatternMatch]): Seq[Long] = {
     var partials = partialsState.get().toList
     for ((ts, ord, mask) <- ready) {
       def bit(i: Int) = ((mask >> i) & 1L) == 1L
@@ -125,15 +124,11 @@ private[cep] class CepNfaProcessor(kk: Int, win: Long, isStrict: Boolean)
     }
     // a partial whose deadline the watermark passed can never
     // complete (every future ready event has ts > wm > s + win)
-    live = partials.filter { case (_, s, _, _) => s + win >= wmUs }
+    val live = partials.filter { case (_, s, _, _) => s + win >= wmUs }
     partialsState.clear()
     live.foreach(partialsState.appendValue)
-  }
-
-  override protected def deadlines(): Seq[Long] =
     live.map { case (_, s, _, _) => s + win }
-  override protected def domainEmpty: Boolean = live.isEmpty
-  override protected def clearDomain(): Unit = partialsState.clear()
+  }
 }
 
 /** The absence detector of [[Pattern.compileStreamAbsence]]: open
@@ -143,7 +138,6 @@ private[cep] class CepNfaProcessor(kk: Int, win: Long, isStrict: Boolean)
 private[cep] class CepAbsenceProcessor(win: Long)
     extends CepProcessor[PatternMatch] {
   @transient private var openState: ListState[(Long, Long)] = _
-  @transient private var live: List[(Long, Long)] = Nil
 
   override protected def initDomain(): Unit =
     openState = getHandle.getListState("open",
@@ -151,7 +145,7 @@ private[cep] class CepAbsenceProcessor(win: Long)
 
   override protected def step(key: Long, ready: Seq[(Long, Long, Long)],
                               wmUs: Long,
-                              out: scala.collection.mutable.ListBuffer[PatternMatch]): Unit = {
+                              out: scala.collection.mutable.ListBuffer[PatternMatch]): Seq[Long] = {
     var open = openState.get().toList
     for ((ts, ord, mask) <- ready) {
       if (((mask >> 1) & 1L) == 1L)
@@ -161,14 +155,10 @@ private[cep] class CepAbsenceProcessor(win: Long)
     // deadline passed unmatched → the absence fires
     val (absent, stillLive) = open.partition { case (s, _) => s + win < wmUs }
     absent.foreach { case (s, so) => out += PatternMatch(key, s, so, s, so) }
-    live = stillLive
     openState.clear()
-    live.foreach(openState.appendValue)
+    stillLive.foreach(openState.appendValue)
+    stillLive.map(_._1 + win)
   }
-
-  override protected def deadlines(): Seq[Long] = live.map(_._1 + win)
-  override protected def domainEmpty: Boolean = live.isEmpty
-  override protected def clearDomain(): Unit = openState.clear()
 }
 
 /** The Kleene-run machine of [[Pattern.consecutiveRunsStream]]: one
@@ -181,8 +171,6 @@ private[cep] class CepRunsProcessor(minTimes: Int, win: Long)
     extends CepProcessor[PatternMatch] {
   @transient private var runState: ValueState[(Long, Long, Long, Long, Int)] = _
   @transient private var deadState: ValueState[Boolean] = _
-  @transient private var live: Option[(Long, Long, Long, Long, Int)] = None
-  @transient private var dead: Boolean = false
 
   override protected def initDomain(): Unit = {
     runState = getHandle.getValueState("run",
@@ -195,9 +183,9 @@ private[cep] class CepRunsProcessor(minTimes: Int, win: Long)
 
   override protected def step(key: Long, ready: Seq[(Long, Long, Long)],
                               wmUs: Long,
-                              out: scala.collection.mutable.ListBuffer[PatternMatch]): Unit = {
+                              out: scala.collection.mutable.ListBuffer[PatternMatch]): Seq[Long] = {
     var run = if (runState.exists()) Some(runState.get()) else None
-    dead = deadState.exists() && deadState.get()
+    var dead = deadState.exists() && deadState.get()
     def close(): Unit = {
       run.foreach { case (s, so, l, lo, cnt) =>
         if (cnt >= minTimes && l - s <= win)
@@ -222,18 +210,13 @@ private[cep] class CepRunsProcessor(minTimes: Int, win: Long)
       close()
       dead = true
     }
-    live = run
-    live match {
+    run match {
       case Some(r) => runState.update(r)
       case None => runState.clear()
     }
     if (dead) deadState.update(true) else deadState.clear()
+    run.map { case (_, _, l, _, _) => l + win }.toSeq
   }
-
-  override protected def deadlines(): Seq[Long] =
-    live.map { case (_, _, l, _, _) => l + win }.toSeq
-  override protected def domainEmpty: Boolean = live.isEmpty && !dead
-  override protected def clearDomain(): Unit = { runState.clear(); deadState.clear() }
 }
 
 object Pattern {
@@ -293,15 +276,22 @@ object Pattern {
     */
   def consecutiveRunsStream(events: Dataset[PatternEv], minTimes: Int,
                             withinUs: Long, watermark: String = "1 hour")
-                           (implicit spark: SparkSession): Dataset[PatternMatch] = {
+                           (implicit spark: SparkSession): Dataset[PatternMatch] =
+    runStream(events, watermark, new CepRunsProcessor(minTimes, withinUs))
+
+  /** The one wiring of every streaming CEP operator: the µs event time
+    * becomes the watermarked `ts` column, events group by key, and
+    * `proc` runs each key's events on `transformWithState`. */
+  private def runStream(events: Dataset[PatternEv], watermark: String,
+                        proc: CepProcessor[PatternMatch])
+                       (implicit spark: SparkSession): Dataset[PatternMatch] = {
     import spark.implicits._
     events
       .withColumn("ts", expr("timestamp_micros(ts_us)"))
       .withWatermark("ts", watermark)
       .as[(Long, Long, Long, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
-      .transformWithState(new CepRunsProcessor(minTimes, withinUs),
-        TimeMode.EventTime(), OutputMode.Append())
+      .transformWithState(proc, TimeMode.EventTime(), OutputMode.Append())
   }
 }
 
@@ -407,15 +397,7 @@ case class Pattern(rawSteps: Seq[Step], withinUs: Long, strict: Boolean = true) 
   def compileStreamAbsence(events: Dataset[PatternEv], watermark: String = "1 hour")
                           (implicit spark: SparkSession): Dataset[PatternMatch] = {
     require(k == 2 && !strict, "absence = 2 steps, relaxed mode")
-    import spark.implicits._
-    val win = withinUs
-    events
-      .withColumn("ts", expr("timestamp_micros(ts_us)"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .transformWithState(new CepAbsenceProcessor(win),
-        TimeMode.EventTime(), OutputMode.Append())
+    Pattern.runStream(events, watermark, new CepAbsenceProcessor(withinUs))
   }
 
   /** Evaluate the step predicates into the [[PatternEv]] mask (Catalyst
@@ -443,17 +425,7 @@ case class Pattern(rawSteps: Seq[Step], withinUs: Long, strict: Boolean = true) 
     * buffered events for keys with no new data and GC dead partials.
     */
   def compileStream(events: Dataset[PatternEv], watermark: String = "1 hour")
-                   (implicit spark: SparkSession): Dataset[PatternMatch] = {
-    import spark.implicits._
-    val kk = k
-    val win = withinUs
-    val isStrict = strict
-    events
-      .withColumn("ts", expr("timestamp_micros(ts_us)"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .transformWithState(new CepNfaProcessor(kk, win, isStrict),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+                   (implicit spark: SparkSession): Dataset[PatternMatch] =
+    Pattern.runStream(events, watermark,
+      new CepNfaProcessor(k, withinUs, strict))
 }

@@ -29,6 +29,21 @@ object ParquetSink {
                        mode: String = "overwrite"): Unit =
     df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
+  /** Rewrite exactly batch `id`'s partition of `path`: `df` gains a
+    * `batch_id` column and is written partitioned by it (then by
+    * `partitionCols`) with dynamic partition overwrite, so a replayed
+    * micro-batch replaces its own earlier output and leaves every
+    * other batch's alone. The engine's one batch-partition write: the
+    * idempotent half of the micro-batch sink rule
+    * ([[graft.streaming.BlockHygiene.eachBatch]]).
+    */
+  def overwriteBatch(df: DataFrame, id: Long, path: String,
+                     partitionCols: String*): Unit =
+    df.withColumn("batch_id", lit(id))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id" +: partitionCols: _*).parquet(path)
+
   /** Write a bucketed+sorted table (bucketing requires the table
     * catalog — `saveAsTable`, not a bare path). Joins and aggregations
     * on `bucketCol` between tables with matching bucket counts skip

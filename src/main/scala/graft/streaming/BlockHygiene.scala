@@ -2,16 +2,26 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.streaming.DataStreamWriter
 
-/** The engine's one eager-checkpoint call, and the per-micro-batch
-  * release of the blocks it persists.
+/** The engine's one eager-checkpoint call, its one `foreachBatch`
+  * call, and the per-micro-batch release of the blocks it persists.
   *
   * Contract: every eager `DataFrame` checkpoint in the engine is
   * [[checkpointTracked]]; a checkpoint path that materializes its own
   * RDD registers it with [[trackPersisted]]. BlockHygieneSpec fails
   * on any other `localCheckpoint` call in the main sources.
+  *
+  * Sink rule: every `foreachBatch` stream in the engine is
+  * [[eachBatch]], which runs the micro-batch body inside a
+  * [[releasingNewPersists]] bracket, and writes its per-batch output
+  * through [[graft.sources.ParquetSink.overwriteBatch]] (a replayed
+  * batch rewrites exactly its own `batch_id` partition). Exactly-once
+  * output then follows from the replayable source plus this
+  * idempotent sink. BlockHygieneSpec fails on a `foreachBatch`, a
+  * bracket or a dynamic partition overwrite written anywhere else.
   *
   *  - Outside a [[releasingNewPersists]] bracket, [[checkpointTracked]]
   *    is `df.localCheckpoint()`: batch callers (Bench, Verify) keep
@@ -79,6 +89,15 @@ object BlockHygiene {
 
   private def persistedRddId(ck: DataFrame): Option[Int] =
     ck.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd.id }
+
+  /** The engine's one `foreachBatch` call: `body` runs once per
+    * micro-batch inside a [[releasingNewPersists]] bracket, so every
+    * block the batch checkpoints is released when it returns. */
+  def eachBatch(writer: DataStreamWriter[Row])
+               (body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    writer.foreachBatch { (batch: DataFrame, id: Long) =>
+      releasingNewPersists(batch.sparkSession)(body(batch, id))
+    }
 
   /** Run `body` with a fresh bracket on this thread; on exit, unpersist
     * every RDD registered inside it. */

@@ -29,15 +29,17 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   *     `registerEventTimeTimer` analog — unlike the fMGWS timeout it
   *     survives arbitrarily many intervening batches for the key —
   *     but it does NOT auto-clear on re-arm, so [[run]] deletes every
-  *     listed timer before arming (at most one extant by induction).
+  *     listed timer before arming (at most one extant by induction),
+  *     except the one firing: Spark deletes that one itself once
+  *     `handleExpiredTimer` returns.
   *   - state clears when both the buffer and the domain state drain —
   *     bounded state on a long-running stream.
   *
   * Subclasses own their domain state (`initDomain` against
   * `getHandle`) and implement one watermark-driven transition
-  * ([[step]]); the base owns the buffer, the drain order, and timer
-  * hygiene. Requires the RocksDB state store provider, a
-  * `transformWithState` constraint set by the caller/test.
+  * ([[step]]) that returns its wake-ups; the base owns the buffer, the
+  * drain order, and timer hygiene. Requires the RocksDB state store
+  * provider, a `transformWithState` constraint set by the caller/test.
   *
   * @tparam K grouping key
   * @tparam I input row
@@ -63,61 +65,59 @@ abstract class BufferedEventProcessor[K, I, B, O](bufEnc: Encoder[B])
   protected def admitAtWm: Boolean = true
 
   /** Apply the watermark-finalized events (sorted by (ts, ord)) to the
-    * domain state, emitting into `out`. Runs on BOTH input batches and
-    * timer firings — watermark-driven machines make no distinction.
+    * domain state, emitting into `out`, and return the deadlines
+    * (event-time µs) of the state just written: the times the machine
+    * must wake at even with no further input — order timeouts,
+    * midnight resets, pattern windows. A step that leaves nothing live
+    * writes its state empty, so its key is removable. Runs on BOTH
+    * input batches and timer firings — watermark-driven machines make
+    * no distinction.
     */
   protected def step(key: K, ready: Seq[B], wmUs: Long,
-                     out: scala.collection.mutable.ListBuffer[O]): Unit
-
-  /** Deadlines (event-time µs) the machine must wake at even with no
-    * further input — order timeouts, midnight resets, pattern windows.
-    */
-  protected def deadlines(): Seq[Long]
-
-  /** True when the domain state holds nothing live (key removable). */
-  protected def domainEmpty: Boolean
-
-  protected def clearDomain(): Unit
+                     out: scala.collection.mutable.ListBuffer[O]): Seq[Long]
 
   final override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     buf = getHandle.getListState("evbuf", bufEnc, TTLConfig.NONE)
     initDomain()
   }
 
-  private def run(key: K, incoming: Seq[B], wmUs: Long): Iterator[O] = {
+  /** One transition; `firing` is the expiry (ms) of the timer being
+    * handled, if any. */
+  private def run(key: K, incoming: Seq[B], wmUs: Long,
+                  firing: Option[Long]): Iterator[O] = {
     val admitted = incoming.filter(b =>
       if (admitAtWm) tsOf(b) >= wmUs else tsOf(b) > wmUs)
     val (ready, held) =
       (buf.get().toList ++ admitted).partition(tsOf(_) <= wmUs)
     val out = scala.collection.mutable.ListBuffer.empty[O]
-    step(key, ready.sortBy(b => (tsOf(b), ordOf(b))), wmUs, out)
+    val wakes = held.map(tsOf) ++
+      step(key, ready.sortBy(b => (tsOf(b), ordOf(b))), wmUs, out)
     // timer hygiene: re-arm from scratch each transition — registered
     // timers persist until they fire, so a stale earlier wake would
-    // otherwise fire a spurious (if harmless) extra transition.
-    // Materialize before deleting: mutating the state store while its
-    // own listTimers() iterator is live relies on snapshot isolation
-    // the provider contract doesn't promise
-    getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-    if (held.isEmpty && domainEmpty) {
-      buf.clear(); clearDomain()
-    } else {
-      buf.clear()
-      held.foreach(buf.appendValue)
-      val wakes = held.map(tsOf) ++ deadlines()
-      // a machine may hold deadline-free state (e.g. the Kleene runs'
-      // dead-island mark): nothing to wake for — the key's next event
-      // (if any) revives processing
-      if (wakes.nonEmpty)
-        getHandle.registerTimer(math.max(wakes.min / 1000 + 1, wmUs / 1000 + 1))
-    }
+    // otherwise fire a spurious (if harmless) extra transition. The
+    // firing timer is Spark's to delete. Materialize before deleting:
+    // mutating the state store while its own listTimers() iterator is
+    // live relies on snapshot isolation the provider contract doesn't
+    // promise
+    getHandle.listTimers().toSeq.filterNot(firing.contains)
+      .foreach(getHandle.deleteTimer)
+    buf.clear()
+    held.foreach(buf.appendValue)
+    // a machine may hold deadline-free state (e.g. the Kleene runs'
+    // dead-island mark): nothing to wake for — the key's next event
+    // (if any) revives processing. The new timer is past the
+    // watermark, so it is never the firing one.
+    if (wakes.nonEmpty)
+      getHandle.registerTimer(math.max(wakes.min / 1000 + 1, wmUs / 1000 + 1))
     out.iterator
   }
 
   final override def handleInputRows(key: K, rows: Iterator[I],
                                      tv: TimerValues): Iterator[O] =
-    run(key, rows.map(toBuf).toSeq, tv.getCurrentWatermarkInMs() * 1000)
+    run(key, rows.map(toBuf).toSeq, tv.getCurrentWatermarkInMs() * 1000, None)
 
   final override def handleExpiredTimer(key: K, tv: TimerValues,
                                         info: ExpiredTimerInfo): Iterator[O] =
-    run(key, Nil, tv.getCurrentWatermarkInMs() * 1000)
+    run(key, Nil, tv.getCurrentWatermarkInMs() * 1000,
+      Some(info.getExpiryTimeInMs()))
 }

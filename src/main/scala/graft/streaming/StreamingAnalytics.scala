@@ -208,10 +208,6 @@ object StreamingAnalytics {
       (Long, Long, String), OrderResult](
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING)) {
     @transient private var pendingState: ListState[(Long, Long)] = _
-    // live pending orders of the key being processed — set by step(),
-    // read by deadlines()/domainEmpty in the same single-threaded
-    // transition (never carries across keys)
-    @transient private var live: List[(Long, Long)] = Nil
 
     override protected def initDomain(): Unit =
       pendingState = getHandle.getListState("pending",
@@ -224,7 +220,7 @@ object StreamingAnalytics {
 
     override protected def step(user: Long, ready: Seq[(Long, Long, String)],
                                 wmUs: Long,
-                                out: scala.collection.mutable.ListBuffer[OrderResult]): Unit = {
+                                out: scala.collection.mutable.ListBuffer[OrderResult]): Seq[Long] = {
       var pending = pendingState.get().toList
       for ((eid, t, typ) <- ready) typ match {
         case "signup" => pending = pending :+ (eid, t)
@@ -245,14 +241,10 @@ object StreamingAnalytics {
       expired.foreach { case (oid, c) =>
         out += OrderResult(oid, user, c, None, "timeout")
       }
-      live = stillLive
       pendingState.clear()
-      live.foreach(pendingState.appendValue)
+      stillLive.foreach(pendingState.appendValue)
+      stillLive.map(_._2 + deadlineUs)
     }
-
-    override protected def deadlines(): Seq[Long] = live.map(_._2 + deadlineUs)
-    override protected def domainEmpty: Boolean = live.isEmpty
-    override protected def clearDomain(): Unit = pendingState.clear()
   }
 
   def orderTimeoutStream(events: Dataset[Ev], deadlineUs: Long = 24L * 3600 * 1000000)
@@ -287,7 +279,6 @@ object StreamingAnalytics {
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)) {
     private val DayUs = 86400L * 1000000
     @transient private var counter: org.apache.spark.sql.streaming.ValueState[ClickState] = _
-    @transient private var live: Option[ClickState] = None
 
     override protected def initDomain(): Unit =
       counter = getHandle.getValueState("counter",
@@ -300,7 +291,7 @@ object StreamingAnalytics {
 
     override protected def step(key: (Long, Int), ready: Seq[(Long, Long)],
                                 wmUs: Long,
-                                out: scala.collection.mutable.ListBuffer[BlackWarn]): Unit = {
+                                out: scala.collection.mutable.ListBuffer[BlackWarn]): Seq[Long] = {
       val (user, ad) = key
       var st =
         if (counter.exists()) counter.get()
@@ -316,17 +307,13 @@ object StreamingAnalytics {
       }
       // the reference's midnight-reset timer: the counter is dead
       // once the watermark passes its day's end
-      live = Option(st).filter(s => s.dayUs >= 0 && s.dayUs + DayUs > wmUs)
+      val live = Option(st).filter(s => s.dayUs >= 0 && s.dayUs + DayUs > wmUs)
       live match {
         case Some(s) => counter.update(s)
         case None => counter.clear()
       }
-    }
-
-    override protected def deadlines(): Seq[Long] =
       live.map(_.dayUs + DayUs).toSeq
-    override protected def domainEmpty: Boolean = live.isEmpty
-    override protected def clearDomain(): Unit = counter.clear()
+    }
   }
 
   def blacklistStream(clicks: Dataset[ClickEv], threshold: Long = 2)
@@ -464,18 +451,16 @@ object StreamingAnalytics {
   def hotItemsTopNForeachBatch(events: DataFrame, n: Int = 5,
                                store: TopNStore = new InMemoryTopNStore)
                               (sink: DataFrame => Unit) =
-    itemWindowCountsStream(events)
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
+    BlockHygiene.eachBatch(
+      itemWindowCountsStream(events).writeStream.outputMode("update")) {
+      (batch, _) =>
         val touched = store.merge(batch)
         if (touched.nonEmpty) {
-          val all = store.windows(spark, touched)
-          sink(UserBehaviorAnalytics.rankTopN(all, n))
+          sink(UserBehaviorAnalytics.rankTopN(
+            store.windows(batch.sparkSession, touched), n))
           store.prune()
         }
-      }
+    }
 
   /** Per-window count state behind the foreachBatch Top-N: the
     * production instance is an external KV (the reference writes
@@ -597,7 +582,7 @@ object StreamingAnalytics {
 
   /** Materialized latest-state table: [[eventsCompactStream]] kept as
     * a queryable parquet snapshot, refreshed per micro-batch through
-    * `foreachBatch` with a FULL overwrite — which makes the sink
+    * [[BlockHygiene.eachBatch]] with a FULL overwrite — which makes the sink
     * idempotent under micro-batch retry for free (a retried batch
     * rewrites the identical complete-mode result; there is no
     * append/merge to double-apply). That is the exactly-once
@@ -609,12 +594,10 @@ object StreamingAnalytics {
     * bounded-key-space instance.
     */
   def eventsCompactForeachBatch(events: DataFrame, snapshotDir: String) =
-    eventsCompactStream(events)
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(snapshotDir)
-      }
+    BlockHygiene.eachBatch(
+      eventsCompactStream(events).writeStream.outputMode("complete")) {
+      (batch, _) => batch.write.mode("overwrite").parquet(snapshotDir)
+    }
 
   /** J1 analog (REF: TxMatch.scala § TxPayMatch — reconstructed):
     * two-stream reconciliation as a watermarked stream-stream inner
@@ -622,24 +605,7 @@ object StreamingAnalytics {
     * StreamingSymmetricHashJoinExec holds both sides' keyed state and
     * GCs it at the watermark, exactly the CoProcess + timer pattern.
     */
-  def txMatchStream(events: DataFrame): DataFrame = {
-    val pays = events.filter(col("event_type") === "purchase")
-      .select(concat(col("user_id"), lit("-"),
-        get_json_object(col("props"), "$.k")).as("tx_id"),
-        col("ts").as("pay_ts"), col("event_id").as("pay_event"))
-      .withWatermark("pay_ts", "1 hour")
-    val receipts = events.filter(col("event_type") === "click")
-      .select(concat(col("user_id"), lit("-"),
-        get_json_object(col("props"), "$.k")).as("rc_tx_id"),
-        col("ts").as("receipt_ts"), col("event_id").as("receipt_event"))
-      .withWatermark("receipt_ts", "1 hour")
-    pays.join(receipts,
-      col("tx_id") === col("rc_tx_id") &&
-        col("receipt_ts") >= col("pay_ts") - expr("interval 24 hours") &&
-        col("receipt_ts") <= col("pay_ts") + expr("interval 24 hours"))
-      .select(col("tx_id"), col("pay_event"), col("receipt_event"),
-        col("pay_ts"), col("receipt_ts"))
-  }
+  def txMatchStream(events: DataFrame): DataFrame = txJoin(events, "inner")
 
   /** The timeout side of the reconciliation (REF: TxMatch.scala §
     * unmatchedPays side output — reconstructed): a LEFT OUTER
@@ -650,7 +616,12 @@ object StreamingAnalytics {
     * Matched rows stream out immediately; null-receipt rows arrive
     * exactly one watermark delay later.
     */
-  def txMatchOuterStream(events: DataFrame): DataFrame = {
+  def txMatchOuterStream(events: DataFrame): DataFrame =
+    txJoin(events, "left_outer")
+
+  /** Both reconciliation streams: the watermarked pay and receipt
+    * sides, interval-joined on tx id within ±24 h as `joinType`. */
+  private def txJoin(events: DataFrame, joinType: String): DataFrame = {
     val pays = events.filter(col("event_type") === "purchase")
       .select(concat(col("user_id"), lit("-"),
         get_json_object(col("props"), "$.k")).as("tx_id"),
@@ -665,7 +636,7 @@ object StreamingAnalytics {
         col("tx_id") === col("rc_tx_id") &&
           col("receipt_ts") >= col("pay_ts") - expr("interval 24 hours") &&
           col("receipt_ts") <= col("pay_ts") + expr("interval 24 hours"),
-        "left_outer")
+        joinType)
       .select(col("tx_id"), col("pay_event"), col("receipt_event"),
         col("pay_ts"), col("receipt_ts"))
   }

@@ -167,22 +167,20 @@ object Pipelines {
     * one as corpus — [[ingestBatch]] applied continuously.
     *
     * Retry semantics — EXACT, not just harmless: verdicts rewrite
-    * their own `batch_id` partition (dynamic overwrite), and the index
-    * probe reads only rows with `batch_id < id` (snapshot rows carry
-    * −1). Without that guard, a crash between the index append and the
-    * offset commit would make the REPLAYED batch see its own rows as
-    * base — a batch-internal near-dup pair (a < b) would then mark a
-    * dup_of b as well as b dup_of a, silently dropping both. With it,
-    * a replay judges against exactly the pre-crash view, so the
-    * rewritten partition is bit-identical (pinned by PipelinesSpec's
-    * double-run replay test).
+    * their own `batch_id` partition ([[ParquetSink.overwriteBatch]]),
+    * and the index probe reads only rows with `batch_id < id`
+    * (snapshot rows carry −1). Without that guard, a crash between
+    * the index append and the offset commit would make the REPLAYED
+    * batch see its own rows as base — a batch-internal near-dup pair
+    * (a < b) would then mark a dup_of b as well as b dup_of a,
+    * silently dropping both. With it, a replay judges against exactly
+    * the pre-crash view, so the rewritten partition is bit-identical
+    * (pinned by PipelinesSpec's double-run replay test).
     */
   def dedupIncrementalStream(docs: DataFrame, outDir: String,
                              verdictDir: String) =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dedupIncrementalBatch(batch, id, outDir, verdictDir)
-      }
+    BlockHygiene.eachBatch(docs.writeStream)(
+      dedupIncrementalBatch(_, _, outDir, verdictDir))
 
   /** One micro-batch of the crawl loop — judge then ingest (exposed
     * for the replay-idempotency spec; the stream calls exactly this).
@@ -191,9 +189,6 @@ object Pipelines {
                                            outDir: String,
                                            verdictDir: String): Unit = {
     val spark = batch.sparkSession
-    // the localCheckpoint'd band table lives exactly one batch: release
-    // its blocks on exit or a long-running stream leaks one per batch
-    BlockHygiene.releasingNewPersists(spark) {
     val bands = BlockHygiene.checkpointTracked(
       Dedup.minhashBucketsFrom(
           batch.select(col("doc_id"), col("text"), lit(true).as("is_new")))
@@ -201,16 +196,12 @@ object Pipelines {
     val base = spark.read.parquet(s"$outDir/minhash_buckets")
       .where(col("batch_id") < id)
     val ySide = base.select(bands.columns.toIndexedSeq.map(col): _*).union(bands)
-    Dedup.incrementalVerdictsFrom(batch.select(col("doc_id")), bands,
-        ySide, keys = Seq("pb", "band_idx", "band_hash"))
-      .withColumn("batch_id", lit(id))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(verdictDir)
+    ParquetSink.overwriteBatch(
+      Dedup.incrementalVerdictsFrom(batch.select(col("doc_id")), bands,
+        ySide, keys = Seq("pb", "band_idx", "band_hash")), id, verdictDir)
     ParquetSink.writePartitioned(
       bands.withColumn("is_new", lit(false)).withColumn("batch_id", lit(id)),
       s"$outDir/minhash_buckets", Seq("pb"), mode = "append")
-    }
   }
 
   // ---------------------------------------------------- span dedup loop
@@ -260,21 +251,20 @@ object Pipelines {
     * rule is first-occurrence, an arrival-ordered replay produces
     * EXACTLY the one-shot [[Dedup.spanDedup]] output — pinned by
     * StreamingParitySpec. Retry semantics — EXACT: cleaned docs
-    * rewrite their own `batch_id` partition (dynamic overwrite), and
-    * the index probe reads only `batch_id < id` rows. The guard is
-    * load-bearing here: without it, a crash between the index append
-    * and the offset commit would make the replayed batch find ALL of
-    * its own spans in the index and emit every document empty. With
-    * it, a replay judges against the exact pre-crash view (pinned by
-    * PipelinesSpec's double-run replay test); a double-appended index
-    * row is harmless — the probe side distincts.
+    * rewrite their own `batch_id` partition
+    * ([[ParquetSink.overwriteBatch]]), and the index probe reads only
+    * `batch_id < id` rows. The guard is load-bearing here: without it,
+    * a crash between the index append and the offset commit would
+    * make the replayed batch find ALL of its own spans in the index
+    * and emit every document empty. With it, a replay judges against
+    * the exact pre-crash view (pinned by PipelinesSpec's double-run
+    * replay test); a double-appended index row is harmless — the probe
+    * side distincts.
     */
   def spanDedupStream(docs: DataFrame, outDir: String, cleanDir: String,
                       span: Int = 20) =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        spanDedupBatch(batch, id, outDir, cleanDir, span)
-      }
+    BlockHygiene.eachBatch(docs.writeStream)(
+      spanDedupBatch(_, _, outDir, cleanDir, span))
 
   /** One micro-batch of the span-dedup loop — judge then ingest
     * (exposed for the replay-idempotency spec; the stream calls
@@ -283,22 +273,16 @@ object Pipelines {
                                     outDir: String, cleanDir: String,
                                     span: Int = 20): Unit = {
     val spark = batch.sparkSession
-    // one-batch lifetime for the checkpointed span table (see
-    // dedupIncrementalBatch): release its blocks on exit
-    BlockHygiene.releasingNewPersists(spark) {
     val spans = BlockHygiene.checkpointTracked(
       Dedup.docSpans(batch.select(col("doc_id"), col("text")), span))
-    Dedup.spanVerdicts(spans, readSpanIndex(spark, outDir, beforeBatch = id))
-      .withColumn("batch_id", lit(id))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(cleanDir)
+    ParquetSink.overwriteBatch(
+      Dedup.spanVerdicts(spans, readSpanIndex(spark, outDir, beforeBatch = id)),
+      id, cleanDir)
     ParquetSink.writePartitioned(
       spans.select(col("span_text")).distinct()
         .withColumn("ps", pmod(hash(col("span_text")), lit(BucketPartitions)))
         .withColumn("batch_id", lit(id)),
       s"$outDir/span_index", Seq("ps"), mode = "append")
-    }
   }
 
   /** Materialized near-dup edges for the given evidence tiers.
@@ -682,27 +666,18 @@ object Pipelines {
     * each micro-batch is searched against the stored IVF index via
     * [[annSearchFrom]] — queries are stateless rows, so per-batch
     * search is exact serving, not an approximation of it. Results land
-    * in `resultDir` with dynamic partition overwrite on `batch_id`
-    * (replay-idempotent, the [[dedupIncrementalStream]] contract).
+    * in `resultDir` through [[ParquetSink.overwriteBatch]]
+    * (replay-idempotent).
     * Unlike the dedup loop there is no ingest step: queries don't
     * change the index.
     */
   def annSearchStream(queries: DataFrame, outDir: String,
                       resultDir: String, k: Int = 5, nProbe: Int = -1,
                       excludeSelfId: Boolean = false) =
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // bracket: the probe path checkpoints the batch's ranked cells
-        // (Similarity.ivfRankedFrom) — swept here per micro-batch
-        BlockHygiene.releasingNewPersists(batch.sparkSession) {
-          annSearchFrom(batch.sparkSession, outDir, batch, k, nProbe,
-              excludeSelfId)
-            .withColumn("batch_id", lit(id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(resultDir)
-        }
-      }
+    BlockHygiene.eachBatch(queries.writeStream) { (batch, id) =>
+      ParquetSink.overwriteBatch(annSearchFrom(batch.sparkSession, outDir,
+        batch, k, nProbe, excludeSelfId), id, resultDir)
+    }
 
   // --------------------------------------- embedding dedup crawl loop
 
@@ -837,18 +812,16 @@ object Pipelines {
     * verdicts land in `verdictDir` partitioned by `batch_id`, and the
     * batch's crk=1 assignment rows are ingested so the NEXT micro-batch
     * sees this one as corpus — the embedding twin of
-    * [[dedupIncrementalStream]], same exact-replay contract: verdicts
-    * rewrite their own partition (dynamic overwrite) and the probe
+    * [[dedupIncrementalStream]], same exact replay: verdicts rewrite
+    * their own partition ([[ParquetSink.overwriteBatch]]) and the probe
     * reads only `batch_id < id` rows, so a crash between the index
     * append and the offset commit replays against exactly the
     * pre-crash view (bit-identical rewrite, pinned by PipelinesSpec).
     */
   def embDedupStream(vectors: DataFrame, outDir: String,
                      verdictDir: String, threshold: Double = 0.4) =
-    vectors.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        embDedupBatch(batch, id, outDir, verdictDir, threshold)
-      }
+    BlockHygiene.eachBatch(vectors.writeStream)(
+      embDedupBatch(_, _, outDir, verdictDir, threshold))
 
   /** One micro-batch of the embedding crawl loop — judge then ingest
     * (exposed for the replay-idempotency spec; the stream calls
@@ -856,32 +829,20 @@ object Pipelines {
   private[graft] def embDedupBatch(batch: DataFrame, id: Long,
                                    outDir: String, verdictDir: String,
                                    threshold: Double = 0.4): Unit = {
-    val spark = batch.sparkSession
-    // the ranked-cells checkpoint lives exactly one batch: release its
-    // blocks on exit or a long-running stream leaks one per batch
-    BlockHygiene.releasingNewPersists(spark) {
-      val q = Similarity.withNorm(batch, "embedding", "vec_id")
-      val (verdicts, batchAssign) = embDedupJudge(q, id, outDir, threshold)
-      verdicts.withColumn("batch_id", lit(id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(verdictDir)
-      // ingest by REWRITING this batch's own (batch_id, pc) partitions
-      // (dynamic overwrite), never append: an append is not
-      // replay-idempotent — a crash between the ingest and the offset
-      // commit would leave duplicate index rows that inflate
-      // base.count() (the cap derivation) and consume ranks in the
-      // per-cell occupancy window, evicting genuine base rows once the
-      // cap binds. The replayed batch judges against the same
-      // `batch_id < id` view, so its assign rows are bit-identical and
-      // the rewrite converges.
-      batchAssign.withColumn("batch_id", lit(id))
-        .withColumn("pc", pmod(col("cell"), lit(AnnPartitions)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "pc")
-        .parquet(s"$outDir/emb_assign")
-    }
+    val q = Similarity.withNorm(batch, "embedding", "vec_id")
+    val (verdicts, batchAssign) = embDedupJudge(q, id, outDir, threshold)
+    ParquetSink.overwriteBatch(verdicts, id, verdictDir)
+    // ingest by REWRITING this batch's own (batch_id, pc) partitions,
+    // never append: an append is not replay-idempotent — a crash
+    // between the ingest and the offset commit would leave duplicate
+    // index rows that inflate base.count() (the cap derivation) and
+    // consume ranks in the per-cell occupancy window, evicting genuine
+    // base rows once the cap binds. The replayed batch judges against
+    // the same `batch_id < id` view, so its assign rows are
+    // bit-identical and the rewrite converges.
+    ParquetSink.overwriteBatch(
+      batchAssign.withColumn("pc", pmod(col("cell"), lit(AnnPartitions))),
+      id, s"$outDir/emb_assign", "pc")
   }
 
   /** Persist the prototypicality-gate index: the per-label prototype
@@ -929,22 +890,18 @@ object Pipelines {
   /** The curation gate AS A STREAM: incoming vectors are scored
     * per micro-batch against the stored prototypes via
     * [[outlierScoreFrom]] — stateless rows, so per-batch scoring is
-    * exact serving. Verdicts land partitioned by `batch_id` with
-    * dynamic partition overwrite (replay-idempotent, the
-    * [[dedupIncrementalStream]] contract). Like [[annSearchStream]]
-    * there is no ingest step: scoring doesn't move the prototypes —
-    * re-fitting them is a periodic batch [[materializeProtos]] run.
+    * exact serving. Verdicts land through
+    * [[ParquetSink.overwriteBatch]] (replay-idempotent). Like
+    * [[annSearchStream]] there is no ingest step: scoring doesn't move
+    * the prototypes — re-fitting them is a periodic batch
+    * [[materializeProtos]] run.
     */
   def outlierGateStream(vectors: DataFrame, outDir: String,
                         resultDir: String) =
-    vectors.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        outlierScoreFrom(batch.sparkSession, outDir, batch)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(resultDir)
-      }
+    BlockHygiene.eachBatch(vectors.writeStream) { (batch, id) =>
+      ParquetSink.overwriteBatch(
+        outlierScoreFrom(batch.sparkSession, outDir, batch), id, resultDir)
+    }
 
   /** Persist the frozen eval embedding panel — the semantic-
     * decontamination index. The eval side of
@@ -996,23 +953,19 @@ object Pipelines {
   /** The contamination screen AS A STREAM: incoming train vectors are
     * scored per micro-batch against the stored eval panel via
     * [[semanticDecontaminateFrom]] — stateless rows, so per-batch
-    * scoring is exact serving. Verdicts land partitioned by
-    * `batch_id` with dynamic partition overwrite (replay-idempotent,
-    * the [[dedupIncrementalStream]] contract). No ingest step:
+    * scoring is exact serving. Verdicts land through
+    * [[ParquetSink.overwriteBatch]] (replay-idempotent). No ingest step:
     * screening doesn't move the eval panel — refreshing it is a
     * periodic batch [[materializeEvalVecs]] run when the benchmark
     * suite changes.
     */
   def semanticDecontaminateStream(vectors: DataFrame, outDir: String,
                                   resultDir: String) =
-    vectors.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        semanticDecontaminateFrom(batch.sparkSession, outDir, batch)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(resultDir)
-      }
+    BlockHygiene.eachBatch(vectors.writeStream) { (batch, id) =>
+      ParquetSink.overwriteBatch(
+        semanticDecontaminateFrom(batch.sparkSession, outDir, batch), id,
+        resultDir)
+    }
 
   /** [[Sampling.corpusPrep]] served from the snapshot: keeper set from
     * the clusters parquet instead of re-running signatures + LSH +

@@ -338,17 +338,17 @@ object Sampling {
     * converges to the batch [[mixturePlan]] once the corpus has
     * streamed through (StreamingParitySpec pins it). Full overwrite
     * per batch = replay-idempotent by construction (the
-    * eventsCompactForeachBatch contract).
+    * complete-mode form of the [[BlockHygiene.eachBatch]] sink).
     */
-  def mixturePlanStream(docs: DataFrame, resultDir: String) =
-    docs.selectExpr("source", s"size($tokensSpark) as n_tokens")
+  def mixturePlanStream(docs: DataFrame, resultDir: String) = {
+    val ledger = docs.selectExpr("source", s"size($tokensSpark) as n_tokens")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("src_tokens"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (counts: DataFrame, _: Long) =>
-        mixturePlanFinish(counts)
-          .write.mode("overwrite").parquet(resultDir)
-      }
+    BlockHygiene.eachBatch(ledger.writeStream.outputMode("complete")) {
+      (counts, _) =>
+        mixturePlanFinish(counts).write.mode("overwrite").parquet(resultDir)
+    }
+  }
 
   /** DSIR-style importance-weighted data selection (Xie et al.,
     * NeurIPS 2023: Data Selection for Language Models via Importance

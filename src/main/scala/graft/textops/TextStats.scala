@@ -1193,24 +1193,20 @@ object TextStats {
     * bounded by sources × vocabulary, never by stream length — and
     * each micro-batch re-finishes the report snapshot with the exact
     * batch math ([[corpusDriftFinish]]). Overwrite per batch =
-    * replay-idempotent (the eventsCompactForeachBatch contract).
+    * replay-idempotent (the complete-mode form of the
+    * [[BlockHygiene.eachBatch]] sink, whose bracket also releases the
+    * count frame's per-batch checkpoint).
     */
   def corpusDriftStream(docs: DataFrame, resultDir: String,
-                        topV: Int = 1000, k: Int = 100) =
-    docs.selectExpr("source", s"$tokensSpark as tokens")
+                        topV: Int = 1000, k: Int = 100) = {
+    val counts = docs.selectExpr("source", s"$tokensSpark as tokens")
       .select(col("source"), explode(col("tokens")).as("token"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("tf"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (stf: DataFrame, _: Long) =>
-        // corpusDriftFinish localCheckpoints the count frame; release
-        // the batch's blocks once the report is written so a long-
-        // running stream doesn't leak one persisted RDD per batch
-        BlockHygiene.releasingNewPersists(
-            stf.sparkSession) {
-          corpusDriftFinish(stf, topV, k)
-            .write.mode("overwrite").parquet(resultDir)
-        }
-      }
+    BlockHygiene.eachBatch(counts.writeStream.outputMode("complete")) {
+      (stf, _) =>
+        corpusDriftFinish(stf, topV, k).write.mode("overwrite").parquet(resultDir)
+    }
+  }
 
   def corpusDriftOracle(topV: Int = 1000, k: Int = 100): String =
     s"""WITH toks AS (

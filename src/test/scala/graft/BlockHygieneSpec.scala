@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly the RDDs ITS body registered — not a concurrent query's
   * checkpoints, not an outer bracket's, and (the round-11 fix) not via
   * a buffer inherited by a thread spawned inside the bracket — and that
-  * the main sources take no checkpoint outside its tracked call.
+  * the main sources take no checkpoint outside its tracked call and
+  * write no micro-batch sink outside [[BlockHygiene.eachBatch]] and
+  * `ParquetSink.overwriteBatch`.
   */
 class BlockHygieneSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -116,27 +118,48 @@ class BlockHygieneSpec extends AnyFunSuite {
       "outer bracket failed to release its own (incl. post-inner) blocks")
   }
 
+  /** `file:line: code` of every main-source line, outside the files
+    * named in `exempt`, whose code (comments ignored) `hit` matches. */
+  private def mainSourceHits(exempt: Set[String])(hit: String => Boolean): Seq[String] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
+    val files = Using.resource(Files.walk(root))(_.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList)
+    assert(files.exists(_.getFileName.toString == "Dedup.scala"))
+    for {
+      f <- files if !exempt(f.getFileName.toString)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.split("//", 2)(0).trim
+      if !code.startsWith("*") && hit(code)
+    } yield s"$f:${i + 1}: ${line.trim}"
+  }
+
   test("every main-source localCheckpoint goes through the tracked call") {
     // the one-call contract, checked on the source: a bare
     // localCheckpoint reached from a bracketed foreachBatch body would
     // leak one persisted RDD per micro-batch, which no sweep can see.
     // An RDD-level checkpoint passes only if the same line registers
-    // it (trackPersisted); comments are ignored.
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
-    val exempt = Set("BlockHygiene.scala", "GraftCheckpoint.scala")
-    val files = Using.resource(Files.walk(root))(_.iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toList)
-    assert(files.exists(_.getFileName.toString == "Dedup.scala"))
-    val bare = for {
-      f <- files if !exempt(f.getFileName.toString)
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      code = line.split("//", 2)(0)
-      if !code.trim.startsWith("*") && code.contains(".localCheckpoint(") &&
-        !code.contains("trackPersisted(")
-    } yield s"$f:${i + 1}: ${line.trim}"
+    // it (trackPersisted).
+    val bare = mainSourceHits(Set("BlockHygiene.scala", "GraftCheckpoint.scala"))(
+      code => code.contains(".localCheckpoint(") && !code.contains("trackPersisted("))
     assert(bare.isEmpty,
       s"localCheckpoint outside BlockHygiene.checkpointTracked:\n${bare.mkString("\n")}")
+  }
+
+  test("every main-source micro-batch sink goes through its one owner") {
+    // the sink rule, checked on the source: a hand-written foreachBatch
+    // or bracket can drift (a stream whose per-batch checkpoint nothing
+    // releases), and a hand-written dynamic overwrite can drift from
+    // the batch_id layout a replay must rewrite
+    val stray = Seq(
+      ".foreachBatch" -> "BlockHygiene.scala",
+      "releasingNewPersists(" -> "BlockHygiene.scala",
+      "partitionOverwriteMode" -> "ParquetSink.scala"
+    ).flatMap { case (token, owner) =>
+      mainSourceHits(Set(owner))(_.contains(token)) }
+    assert(stray.isEmpty,
+      "micro-batch sink outside BlockHygiene.eachBatch / " +
+        s"ParquetSink.overwriteBatch:\n${stray.mkString("\n")}")
   }
 
   test("a thread spawned inside a bracket does not inherit the tracked buffer") {

@@ -140,11 +140,18 @@ class LateDataSpec extends AnyFunSuite {
     val q = LateDataAnalytics.lateCaptureWriter(
       ms.toDF().withColumn("ts", expr("timestamp_micros(ts_us)")), root).start()
     try {
+      // block hygiene: each micro-batch checkpoints its split frame, and
+      // the stream's bracket must release it (see StreamingParitySpec's
+      // dedupIncrementalStream test)
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
       // 4 uneven chunks → 4 micro-batches, so the carried cross-batch
       // max is exercised (a single batch would test only the prefix)
       for (chunk <- rows.grouped(rows.size / 4 + 1)) {
         ms.addData(chunk); q.processAllAvailable()
       }
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+      assert(leaked.isEmpty,
+        s"lateCaptureWriter leaked ${leaked.size} persisted RDDs across batches")
     } finally q.stop()
     val want = LateDataAnalytics.lateEvents(spark, sf)
       .select($"event_id", $"watermark")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.BlockHygiene
 import graft.textops.{Dedup, Pipelines, Sampling}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
@@ -16,6 +17,11 @@ class PipelinesSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** One micro-batch body run as its stream runs it: inside
+    * [[BlockHygiene.eachBatch]]'s bracket. */
+  private def microBatch(body: => Unit): Unit =
+    BlockHygiene.releasingNewPersists(spark)(body)
 
   test("materialized snapshot == recomputed (pairs, clusters, corpus_prep)") {
     val dir = java.nio.file.Files.createTempDirectory("graftmat").toString
@@ -80,9 +86,9 @@ class PipelinesSpec extends AnyFunSuite {
 
     val sdir = java.nio.file.Files.createTempDirectory("graftspanrep").toString
     val (b0, b1) = docs.splitAt(docs.size / 2)
-    Pipelines.spanDedupBatch(df(b0), 0, sdir, s"$sdir/clean")
-    Pipelines.spanDedupBatch(df(b0), 0, sdir, s"$sdir/clean") // replay
-    Pipelines.spanDedupBatch(df(b1), 1, sdir, s"$sdir/clean")
+    microBatch(Pipelines.spanDedupBatch(df(b0), 0, sdir, s"$sdir/clean"))
+    microBatch(Pipelines.spanDedupBatch(df(b0), 0, sdir, s"$sdir/clean")) // replay
+    microBatch(Pipelines.spanDedupBatch(df(b1), 1, sdir, s"$sdir/clean"))
     val gotSpan = spark.read.parquet(s"$sdir/clean")
       .select($"doc_id", $"clean_text", $"n_spans", $"n_dropped")
       .as[(Long, String, Long, Long)].collect().toSet
@@ -98,9 +104,9 @@ class PipelinesSpec extends AnyFunSuite {
       .select($"doc_id", $"text").as[(Long, String)].collect()
       .sortBy(_._1).toSeq
     val (n0, n1) = newDocs.splitAt(newDocs.size / 2)
-    Pipelines.dedupIncrementalBatch(df(n0), 0, mdir, s"$mdir/verdicts")
-    Pipelines.dedupIncrementalBatch(df(n0), 0, mdir, s"$mdir/verdicts") // replay
-    Pipelines.dedupIncrementalBatch(df(n1), 1, mdir, s"$mdir/verdicts")
+    microBatch(Pipelines.dedupIncrementalBatch(df(n0), 0, mdir, s"$mdir/verdicts"))
+    microBatch(Pipelines.dedupIncrementalBatch(df(n0), 0, mdir, s"$mdir/verdicts")) // replay
+    microBatch(Pipelines.dedupIncrementalBatch(df(n1), 1, mdir, s"$mdir/verdicts"))
     val cols = Seq("doc_id", "keep", "n_dups", "dup_of", "best_sim")
     val gotV = spark.read.parquet(s"$mdir/verdicts").selectExpr(cols: _*)
       .as[(Long, Boolean, Long, Option[Long], Option[Double])].collect().toSet
@@ -374,9 +380,9 @@ class PipelinesSpec extends AnyFunSuite {
       .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
     def df(rs: Seq[(Long, Seq[Float])]) = rs.toDF("vec_id", "embedding")
     val (b0, b1) = gated.splitAt(gated.size / 2)
-    Pipelines.embDedupBatch(df(b0), 0, dir, s"$dir/verdicts")
-    Pipelines.embDedupBatch(df(b0), 0, dir, s"$dir/verdicts") // replay
-    Pipelines.embDedupBatch(df(b1), 1, dir, s"$dir/verdicts")
+    microBatch(Pipelines.embDedupBatch(df(b0), 0, dir, s"$dir/verdicts"))
+    microBatch(Pipelines.embDedupBatch(df(b0), 0, dir, s"$dir/verdicts")) // replay
+    microBatch(Pipelines.embDedupBatch(df(b1), 1, dir, s"$dir/verdicts"))
     // the replayed ingest must have REWRITTEN batch 0's partitions,
     // not appended: duplicate index rows would inflate base.count()
     // (the cap derivation) and consume ranks in the per-cell occupancy

@@ -1,8 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.analytics._
 import graft.streaming.StreamingAnalytics
 import graft.streaming.StreamingAnalytics._
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -219,6 +225,52 @@ class StreamingParitySpec extends AnyFunSuite {
         .as[(Long, Long, Long, Long, String)].collect().toSet
       assert(got == want)
     } finally q.stop()
+  }
+
+  test("order-timeout timer firing: the machine deletes no timer Spark deletes itself") {
+    implicit val ctx = spark.sqlContext
+    implicit val ss = spark
+    // TimerStateImpl warns once per delete of a timer that does not
+    // exist; capture its lines on a logger-local appender
+    val timerLogger = "org.apache.spark.sql.execution.streaming.operators" +
+      ".stateful.transformwithstate.timers.TimerStateImpl"
+    Class.forName(timerLogger) // a renamed class would make this test vacuous
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-timer-log", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(timerLogger).asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    val ms = MemoryStream[EvFull]
+    val q = StreamingAnalytics.orderTimeoutStream(
+        ms.toDS().map(e => Ev(e.event_id, e.ts_us, e.user_id, e.event_type)))
+      .writeStream.format("memory").queryName("ot_timer_stream")
+      .outputMode("append").start()
+    try {
+      val base = 1700000000000000L
+      val hourUs = 3600L * 1000000
+      // user 1's order gets no later input: only its timer can time it
+      // out, once user 2's and user 3's signups move the watermark past
+      // create + 24 h
+      for (e <- Seq(EvFull(1L, base, 1L, "signup", "{}"),
+                    EvFull(2L, base + 26 * hourUs, 2L, "signup", "{}"),
+                    EvFull(3L, base + 52 * hourUs, 3L, "signup", "{}"))) {
+        ms.addData(e); q.processAllAvailable()
+      }
+      val fired = spark.table("ot_timer_stream").where($"user_id" === 1L)
+        .select($"order_id", $"status").as[(Long, String)].collect().toSeq
+      assert(fired == Seq((1L, "timeout")), s"user 1's timer never fired: $fired")
+      val missing = logged.asScala.filter(_.contains("Failed to delete timer"))
+      assert(missing.isEmpty,
+        s"${missing.size} deletes of a missing timer:\n${missing.mkString("\n")}")
+    } finally {
+      q.stop()
+      logger.removeAppender(appender)
+      appender.stop()
+    }
   }
 
   test("blacklist state machine: stream warnings == batch (user, ad, day) set") {
